@@ -59,10 +59,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           builder))
     }
     e.injectOptimizerRule(_ => ProtoRoundtripElimination)
-    // maintenance verbs (GRAFT OPTIMIZE/VACUUM/DELETE) — parser rules
-    // only apply when extensions are configured at session BUILD time
-    // (spark.sql.extensions / withExtensions); the live install(spark)
-    // path cannot add them
+    // maintenance verbs (GRAFT OPTIMIZE/VACUUM/DELETE) and the GRAFT
+    // INDEX verbs
     e.injectParser((_, delegate) => new GraftSqlParser(delegate))
   }
 }
@@ -316,41 +314,6 @@ object GraftExtensions {
       op(org.apache.spark.sql.SparkSession.active, dir)
         .queryExecution.analyzed
     }
-
-  /** Install the SQL functions on an already-running session (the
-    * `spark.sql.extensions` config path only applies at session
-    * construction). The roundtrip-elimination rule is NOT injected here:
-    * `experimental.extraOptimizations` runs as a fixed-point batch over
-    * every plan, and the extra traversals measurably tax unrelated
-    * queries with large expression trees — opt in via
-    * [[installRoundtripElimination]] (or the config-time extensions
-    * class, where the rule joins the normal optimizer batches) when the
-    * workload actually round-trips protos.
-    */
-  def install(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_decode_bidrequest",
-      (args: Seq[Expression]) =>
-        ProtoDecode(args.head, BidRequestSchema.bidrequest), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_encode_bidrequest",
-      (args: Seq[Expression]) =>
-        ProtoEncode(args.head, BidRequestSchema.bidrequest), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_le_uint64",
-      (args: Seq[Expression]) => LittleEndianLong(args.head), "scala_udf")
-    scalarFunctions.foreach { case (name, builder) =>
-      reg.createOrReplaceTempFunction(name, builder, "scala_udf")
-    }
-    tableFunctions.foreach { case (name, builder) =>
-      spark.sessionState.tableFunctionRegistry.createOrReplaceTempFunction(
-        name, builder, "scala_udf")
-    }
-  }
-
-  def installRoundtripElimination(
-      spark: org.apache.spark.sql.SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.contains(ProtoRoundtripElimination))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ ProtoRoundtripElimination
 }
 
 /** Eliminates `proto_decode(proto_encode(x))` ONLY when `x` is itself a

@@ -35,17 +35,17 @@ object GraftSession {
         "false")
       .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
         sys.env.getOrElse("GRAFT_ADVISORY_PARTITION", "64m"))
-      // ...and make byte-derived sizing work in BOTH directions: AQE
-      // only coalesces DOWN from the initial partition count, which
-      // defaults to spark.sql.shuffle.partitions (= cores above) — as
-      // r18 shipped it, a 100 TB shuffle would run `cores` reduce
-      // partitions of terabytes each. Start every coalescible exchange
-      // at a high initial count and let the 64m advisory fold it to the
-      // data's real size: thousands of partitions at 100 TB, a handful
-      // at bench scale (the extra map-side blocks are cheap — measured
-      // flat on the full suite, OPTIMIZATION_r19.md). Env-overridable
-      // for cluster sizing (rule of thumb: ≥ expected shuffle bytes /
-      // advisory size).
+      // ...and start coalescible exchanges above `cores`: AQE only
+      // coalesces DOWN from the initial partition count, which defaults
+      // to spark.sql.shuffle.partitions (= cores above), so byte sizing
+      // alone would leave a large shuffle at `cores` huge partitions.
+      // The 64m advisory folds 1024 to a handful at bench scale, but
+      // 1024 is also the CEILING: past ~64 GB of shuffle, partitions
+      // grow beyond the advisory size. Env-overridable for cluster
+      // sizing (rule of thumb: ≥ expected shuffle bytes / advisory
+      // size). No before/after receipt exists for 1024; ROADMAP.md
+      // ("Recent") records a 4-core A/B where 32 beat it on the phash
+      // rows.
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
         sys.env.getOrElse("GRAFT_INITIAL_PARTITIONS", "1024"))
       // let AQE apply the same byte-derived coalescing INSIDE cached
@@ -74,11 +74,11 @@ object GraftSession {
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.ui.enabled", "false")
 
-  /** Build + install the SQL-facing extensions. */
+  /** Build the session; [[GraftExtensions]] arrives through the
+    * builder's `spark.sql.extensions`, the one registration path. */
   def create(cores: Int, appName: String): SparkSession = {
     val s = builder(cores).appName(appName).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    if (sys.env.get("GRAFT_NO_EXT").isEmpty) GraftExtensions.install(s)
     s
   }
 }

@@ -189,7 +189,6 @@ object SparkEntry {
     // the curation gates run through spark.sql over the REGISTERED
     // functions — proves the SQL-first path end-to-end in the oracle gate
     "q_sql_quality_gate"    -> { (s, d) =>
-      GraftExtensions.install(s)
       graft.sources.Tables.documents(s, d)
         .createOrReplaceTempView("graft_documents")
       s.sql(

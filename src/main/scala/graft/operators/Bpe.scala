@@ -78,7 +78,7 @@ object Bpe {
   private[graft] def learnedMerges(spark: SparkSession, dir: String,
                                    driverCap: Long = DriverVocabCap)
       : Seq[(String, String)] =
-    MemoStats.cached(mergeMemo, (spark, dir, driverCap))({
+    mergeMemo(spark, (dir, driverCap))({
       import spark.implicits._
       val counts = Tables.documents(spark, dir)
         .select(explode(tokens(col("text"))).as("w"))
@@ -100,11 +100,8 @@ object Bpe {
       else distributedMerges(counts)
     })
 
-  private val mergeMemo = scala.collection.concurrent
-    .TrieMap.empty[(SparkSession, String, Long), Seq[(String, String)]]
-
-  /** Forget trained merge tables (all sessions). */
-  def clearMemo(): Unit = mergeMemo.clear()
+  private val mergeMemo =
+    new MemoStats.Table[(String, Long), Seq[(String, String)]]
 
   /** Cap on [[encode]]'s per-partition word→length cache. Zipf keeps
     * real corpora far below it, but the cache must not be an

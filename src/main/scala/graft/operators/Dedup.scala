@@ -229,24 +229,14 @@ object Dedup {
     * [[clusters]] and [[Curation.pipeline]] consume the same pair frame,
     * and at any scale recomputing LSH per consumer is the dominant
     * waste. Entries are lineage-free materialized frames of pair rows
-    * (tiny by construction). Drop with [[clearMemo]] if the files under
-    * a dir are rewritten mid-session.
+    * (tiny by construction). Drop with [[MemoStats.clearAll]] if the
+    * files under a dir are rewritten mid-session.
     */
   def minhashLsh(spark: SparkSession, dir: String): DataFrame =
-    MemoStats.cached(pairMemo, (spark, dir))(minhashPairs(
+    pairMemo(spark, dir)(minhashPairs(
       Tables.documents(spark, dir).select(col("doc_id"), col("text"))))
 
-  private val pairMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  /** Forget memoized pair/shingle/contamination frames and Bloom words
-    * (all sessions). */
-  def clearMemo(): Unit = {
-    pairMemo.clear()
-    evalShMemo.clear()
-    contamMemo.clear()
-    bloomMemo.clear()
-  }
+  private val pairMemo = new MemoStats.Table[String, DataFrame]
 
   /** [[minhashLsh]] over an arbitrary (doc_id, text) frame — the shared
     * pair computation consumers can call directly. Returns a
@@ -1009,7 +999,7 @@ object Dedup {
     * [[decontaminateBloom]]'s build + confirm stages. One eval-side
     * typed shingle pass per (session, dir) however many consumers run. */
   private[operators] def evalShingles(spark: SparkSession, dir: String): DataFrame =
-    MemoStats.cached(evalShMemo, (spark, dir))({
+    evalShMemo(spark, dir)({
       val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
       Materialize(
         shinglesOf(docs.filter(col("doc_id") % EvalStride === 0))
@@ -1028,7 +1018,7 @@ object Dedup {
     * would pay the full-corpus pass twice.
     */
   private[graft] def contamCounts(spark: SparkSession, dir: String): DataFrame =
-    MemoStats.cached(contamMemo, (spark, dir))({
+    contamMemo(spark, dir)({
       val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
       Materialize(decontaminateFrames(
         docs.filter(col("doc_id") % EvalStride =!= 0),
@@ -1047,10 +1037,8 @@ object Dedup {
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_shared"))
 
-  private val evalShMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val contamMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val evalShMemo = new MemoStats.Table[String, DataFrame]
+  private val contamMemo = new MemoStats.Table[String, DataFrame]
 
   /** Bloom-filter geometry for [[decontaminateBloom]]: 2^20 bits
     * (128 KiB — ships to every task as one reference object of 16384
@@ -1111,7 +1099,7 @@ object Dedup {
   /** Memoized Bloom words over the eval shingle set — built once per
     * (session, dir) from the shared [[evalShingles]] frame. */
   private[operators] def bloomFor(spark: SparkSession, dir: String): Array[Long] =
-    MemoStats.cached(bloomMemo, (spark, dir))({
+    bloomMemo(spark, dir)({
       // size m to the eval set (bloomBitsFor), exactly as documented and
       // as DecontamIndex.build does — the fixed floor geometry saturates
       // past ~10^5 shingles and the pre-filter stops filtering. At the
@@ -1121,8 +1109,7 @@ object Dedup {
       bloomBuild(sh, "s", bloomBitsFor(sh.count()))
     })
 
-  private val bloomMemo = scala.collection.concurrent
-    .TrieMap.empty[(SparkSession, String), Array[Long]]
+  private val bloomMemo = new MemoStats.Table[String, Array[Long]]
 
   /** [[decontaminate]] with a Bloom pre-filter — the shape that
     * survives an eval set too large to broadcast: the filter (128 KiB,
@@ -1149,7 +1136,7 @@ object Dedup {
     // + confirm join) — publish them to the shared memo so
     // decontaminate / corpusBuild consume THIS run instead of
     // re-deriving the inverted index
-    contamMemo.put((spark, dir), counts)
+    contamMemo.put(spark, dir, counts)
     counts.withColumn("contaminated", col("n_shared") >= MinContamOverlap)
       .orderBy("doc_id")
   }

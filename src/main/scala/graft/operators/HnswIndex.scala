@@ -475,15 +475,12 @@ object HnswIndex {
     * header: at verification scale the beam must achieve recall 1.0,
     * so any construction or search bug hash-mismatches). */
   def topK(spark: SparkSession, dir: String): DataFrame =
-    MemoStats.cached(topKMemo, (spark, dir))(topKUncached(spark, dir))
+    topKMemo(spark, dir)(topKUncached(spark, dir))
 
   /** Memoized per (session, dir): the sequential graph build dominates
     * and `sim_recall_matrix` consumes the same result. Lineage-free
-    * (materializeAndClean). Drop with [[clearTopKMemo]]. */
-  private val topKMemo = scala.collection.concurrent
-    .TrieMap.empty[(SparkSession, String), DataFrame]
-
-  def clearTopKMemo(): Unit = topKMemo.clear()
+    * (materializeAndClean). */
+  private val topKMemo = new MemoStats.Table[String, DataFrame]
 
   private def topKUncached(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._

@@ -573,7 +573,7 @@ object HnswRouted {
   /** `sim_hnsw_routed`: build the sharded graphs, answer the standard
     * query set. Memoized per (session, dir) like the other ANN rows. */
   def topK(spark: SparkSession, dir: String): DataFrame =
-    MemoStats.cached(memo, (spark, dir)) {
+    memo(spark, dir) {
       val root = java.nio.file.Files
         .createTempDirectory("graft-hnsw-routed").toString
       try {
@@ -594,7 +594,7 @@ object HnswRouted {
     * serving-generation scan are driver-checked facts — the
     * [[IvfIndex.lifecycle]] pattern for the routed graph family. */
   def lifecycle(spark: SparkSession, dir: String): DataFrame =
-    MemoStats.cached(lifecycleMemo, (spark, dir)) {
+    lifecycleMemo(spark, dir) {
       val root = java.nio.file.Files
         .createTempDirectory("graft-hnsw-routed-lc").toString
       val vecs = Similarity.corpus(spark, dir)
@@ -608,10 +608,6 @@ object HnswRouted {
       }
     }
 
-  private val memo = scala.collection.concurrent
-    .TrieMap.empty[(SparkSession, String), DataFrame]
-  private val lifecycleMemo = scala.collection.concurrent
-    .TrieMap.empty[(SparkSession, String), DataFrame]
-
-  def clearMemo(): Unit = { memo.clear(); lifecycleMemo.clear() }
+  private val memo = new MemoStats.Table[String, DataFrame]
+  private val lifecycleMemo = new MemoStats.Table[String, DataFrame]
 }

@@ -32,17 +32,13 @@ object IvfPq {
   /** `sim_ivfpq_topk`: build both indexes over the corpus, answer the
     * standard deterministic query set through the composition. */
   def topK(spark: SparkSession, dir: String): DataFrame =
-    MemoStats.cached(topKMemo, (spark, dir))(topKUncached(spark, dir))
+    topKMemo(spark, dir)(topKUncached(spark, dir))
 
   /** Memoized per (session, dir): `sim_recall_matrix` consumes the
     * same composed result, and the temp index build is the dominant
     * cost. The memoized frame is lineage-free (materializeAndClean),
-    * so it survives the scratch-dir removal. Drop with
-    * [[clearTopKMemo]]. */
-  private val topKMemo = scala.collection.concurrent
-    .TrieMap.empty[(SparkSession, String), DataFrame]
-
-  def clearTopKMemo(): Unit = topKMemo.clear()
+    * so it survives the scratch-dir removal. */
+  private val topKMemo = new MemoStats.Table[String, DataFrame]
 
   private def topKUncached(spark: SparkSession, dir: String): DataFrame = {
     val root = java.nio.file.Files

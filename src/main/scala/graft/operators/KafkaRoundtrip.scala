@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -24,8 +23,8 @@ import graft.streaming.BidPipeline
   * the contract, exactly like the reference's external fleet). Nothing
   * round-trips through the driver: the driver only carries the broker
   * address into the job. The read side is the real distributed source,
-  * returned LAZY — the broker stays up until the Spark application
-  * ends (an `onApplicationEnd` hook closes it), so the caller executes
+  * returned LAZY — the broker stays up as long as its memo entry (the
+  * registry closes it on clear or context end), so the caller executes
   * the real fetch→decode→agg plan instead of a driver-materialized
   * copy of its result. One staged topic is ~25 MB of heap on daemon
   * threads; callers are test/bench harnesses, so the session-scoped
@@ -40,22 +39,12 @@ object KafkaRoundtrip {
 
   // one staged broker per (session, dir) — repeat invocations (the
   // bench runs min-of-N passes) reuse the already-produced topic
-  // instead of staging a fresh ~25 MB broker each time; [[clearMemo]]
-  // closes them eagerly (bench memo reset), the application-end hook
-  // is the backstop
-  private val memo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (KafkaStubBroker, DataFrame)]
-
-  /** Close and forget every staged broker. */
-  def clearMemo(): Unit = synchronized {
-    memo.values.foreach { case (broker, _) => broker.close() }
-    memo.clear()
-  }
+  // instead of staging a fresh ~25 MB broker each time
+  private val memo = new MemoStats.Table[String, (KafkaStubBroker, DataFrame)](
+    release = _._1.close())
 
   def hourlyAgg(spark: SparkSession, dir: String): DataFrame =
-    synchronized {
-      MemoStats.cached(memo, (spark, dir))(stage(spark, dir))._2
-    }
+    memo(spark, dir)(stage(spark, dir))._2
 
   private def stage(spark: SparkSession, dir: String)
       : (KafkaStubBroker, DataFrame) = {
@@ -89,10 +78,6 @@ object KafkaRoundtrip {
         }
       }
     } catch { case e: Throwable => broker.close(); throw e }
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onApplicationEnd(end: SparkListenerApplicationEnd): Unit =
-        broker.close()
-    })
 
     val frames = spark.read.format("graft-kafka")
       .option("kafka.bootstrap.servers", broker.bootstrapServers)

@@ -396,7 +396,6 @@ object MinhashIndex {
     * results (they run through the same code paths, lease and markers
     * included). */
   def sqlLifecycle(spark: SparkSession, dir: String): DataFrame = {
-    graft.GraftExtensions.install(spark)
     val root = java.nio.file.Files
       .createTempDirectory("graft-mh-sql-lifecycle").toString
     try {
@@ -429,7 +428,6 @@ object MinhashIndex {
     * [[ingestChain]]: batch 2 is checked against batch 0 plus
     * batch 1's SURVIVORS. */
   def sqlAdmit(spark: SparkSession, dir: String): DataFrame = {
-    graft.GraftExtensions.install(spark)
     val root = java.nio.file.Files
       .createTempDirectory("graft-mh-sql-admit").toString
     try {

@@ -209,11 +209,11 @@ object PerceptualHash {
     * cost and is needed by [[phash]] AND (twice — both corpus halves)
     * [[phashCrossCorpus]]; without the memo each consumer re-decodes
     * every raster. The memoized frame is tiny (3 numeric columns, one
-    * row per decodable doc) and lineage-free; [[clearMemo]] drops it
-    * with the pair memos (Bench clears between passes, so no timing
-    * ever leaks across passes). */
+    * row per decodable doc) and lineage-free; [[MemoStats.clearAll]]
+    * drops it with the pair memos (Bench clears between passes, so no
+    * timing ever leaks across passes). */
   private[operators] def hashes(spark: SparkSession, dir: String): DataFrame =
-    MemoStats.cached(hashMemo, (spark, dir))(
+    hashMemo(spark, dir)(
       Materialize(hashesUncached(spark, dir)))
 
   private def hashesUncached(spark: SparkSession, dir: String): DataFrame = {
@@ -231,14 +231,14 @@ object PerceptualHash {
     * [[graft.operators.Dedup.clusters]] consumers share the decode +
     * pair computation (the frame is lineage-free and tiny). */
   def phash(spark: SparkSession, dir: String): DataFrame =
-    MemoStats.cached(pairMemo, (spark, dir))(
+    pairMemo(spark, dir)(
       Materialize(phashUncached(spark, dir)))
 
   /** `dedup_phash_dct`: the DCT variant's pairs — [[dctHash]] per
     * decodable raster through the SAME capped band machinery
     * ([[pairsFromHashes]]). */
   def phashDct(spark: SparkSession, dir: String): DataFrame =
-    MemoStats.cached(dctMemo, (spark, dir))(
+    dctMemo(spark, dir)(
       Materialize(pairsFromHashes(dctHashes(spark, dir))))
 
   private def dctHashes(spark: SparkSession, dir: String): DataFrame = {
@@ -251,16 +251,9 @@ object PerceptualHash {
       .toDF("doc_id", "phi", "plo")
   }
 
-  private val pairMemo = scala.collection.concurrent
-    .TrieMap.empty[(SparkSession, String), DataFrame]
-  private val dctMemo = scala.collection.concurrent
-    .TrieMap.empty[(SparkSession, String), DataFrame]
-  private val hashMemo = scala.collection.concurrent
-    .TrieMap.empty[(SparkSession, String), DataFrame]
-
-  def clearMemo(): Unit = {
-    pairMemo.clear(); dctMemo.clear(); hashMemo.clear()
-  }
+  private val pairMemo = new MemoStats.Table[String, DataFrame]
+  private val dctMemo = new MemoStats.Table[String, DataFrame]
+  private val hashMemo = new MemoStats.Table[String, DataFrame]
 
   private def phashUncached(spark: SparkSession, dir: String): DataFrame =
     pairsFromHashes(hashes(spark, dir))

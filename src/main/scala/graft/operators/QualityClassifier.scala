@@ -3,8 +3,6 @@ package graft.operators
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 
-import scala.collection.mutable
-
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -146,16 +144,9 @@ object QualityClassifier {
     * Memoized per (session, corpus dir) so the weights and scoring
     * queries (and any SQL consumer) train once per session. */
   private[graft] def weights(spark: SparkSession, dir: String)
-      : Array[Long] =
-    weightMemo.synchronized {
-      MemoStats.cached(weightMemo, (spark, dir))(train(spark, dir))
-    }
+      : Array[Long] = weightMemo(spark, dir)(train(spark, dir))
 
-  private val weightMemo =
-    mutable.Map.empty[(SparkSession, String), Array[Long]]
-
-  /** Forget trained weights (all sessions). */
-  def clearMemo(): Unit = weightMemo.synchronized(weightMemo.clear())
+  private val weightMemo = new MemoStats.Table[String, Array[Long]]
 
   private def train(spark: SparkSession, dir: String): Array[Long] = {
     import spark.implicits._

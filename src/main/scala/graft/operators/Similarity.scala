@@ -131,14 +131,11 @@ object Similarity {
       // memoized per (session, dir) at the default cap: the recall
       // matrix and sim_brute_topk consume the same exact top-k, and
       // the corpus stream is the dominant cost (lineage-free frame)
-      MemoStats.cached(bruteMemo, (spark, dir))(
+      bruteMemo(spark, dir)(
         Materialize(bruteForceTopKUncached(spark, dir, maxQueries)))
     else bruteForceTopKUncached(spark, dir, maxQueries)
 
-  private val bruteMemo = scala.collection.concurrent
-    .TrieMap.empty[(SparkSession, String), DataFrame]
-
-  def clearBruteMemo(): Unit = bruteMemo.clear()
+  private val bruteMemo = new MemoStats.Table[String, DataFrame]
 
   private def bruteForceTopKUncached(spark: SparkSession, dir: String,
                                      maxQueries: Int): DataFrame = {
@@ -331,10 +328,8 @@ object Similarity {
     * of ≤ PqM×PqK rows. Driver state = the PqM×PqK×PqSubDim block
     * (4 KB). Memoized per (session, dir). */
   private[operators] def pqCodebooks(spark: SparkSession, dir: String)
-      : Array[Array[Array[Double]]] = pqMemo.synchronized {
-    MemoStats.cached(pqMemo, (spark, dir))(
-      pqCodebooksFrom(normalized(spark, dir)))
-  }
+      : Array[Array[Array[Double]]] =
+    pqMemo(spark, dir)(pqCodebooksFrom(normalized(spark, dir)))
 
   /** The training loop itself, over an arbitrary NORMALIZED frame —
     * lets [[PqIndex.build]] train on the landed split only, with the
@@ -384,11 +379,7 @@ object Similarity {
     }
   }
 
-  private val pqMemo = scala.collection.mutable
-    .Map.empty[(SparkSession, String), Array[Array[Array[Double]]]]
-
-  /** Forget trained PQ codebooks (all sessions). */
-  def clearPqMemo(): Unit = pqMemo.synchronized(pqMemo.clear())
+  private val pqMemo = new MemoStats.Table[String, Array[Array[Array[Double]]]]
 
   /** PQ-compressed ANN top-k — the production shape for embedding
     * corpora that outgrow float storage: per-subspace codebooks
@@ -552,29 +543,27 @@ object Similarity {
     * `semanticDedup` (and any SQL consumer) share one training run per
     * session instead of re-collecting the iteration means each — and
     * share the cached corpus instead of re-decoding the parquet. The
-    * cache lives as long as the memo entry ([[clearCentsMemo]]
-    * unpersists); it is the corpus' embedding block, the working set
-    * any ANN/clustering service pins anyway. */
+    * cache lives as long as the memo entry (dropping it unpersists);
+    * it is the corpus' embedding block, the working set any
+    * ANN/clustering service pins anyway. */
   private def trainedModel(spark: SparkSession, dir: String)
       : (Array[Array[Double]], Dataset[(Long, Array[Double])]) =
-    centsMemo.synchronized {
-      MemoStats.cached(centsMemo, (spark, dir))({
-        import spark.implicits._
-        val e = corpus(spark, dir).select(col("vec_id"), col("v"))
-          .as[(Long, Array[Double])]
-          // training reads the corpus iters+1 times (init + one
-          // assignment per round), then the final assignment and every
-          // downstream consumer read it again — persist for the memo's
-          // lifetime
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val n = Tables.rowCount(spark, dir, "embeddings")
-        val k = kFor(n)
-        val cents =
-          if (n * Dims <= DriverKmeansMaxCells) trainDriverSide(e, k)
-          else trainDistributed(e, k)
-        (cents, e)
-      })
-    }
+    centsMemo(spark, dir)({
+      import spark.implicits._
+      val e = corpus(spark, dir).select(col("vec_id"), col("v"))
+        .as[(Long, Array[Double])]
+        // training reads the corpus iters+1 times (init + one
+        // assignment per round), then the final assignment and every
+        // downstream consumer read it again — persist for the memo's
+        // lifetime
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val n = Tables.rowCount(spark, dir, "embeddings")
+      val k = kFor(n)
+      val cents =
+        if (n * Dims <= DriverKmeansMaxCells) trainDriverSide(e, k)
+        else trainDistributed(e, k)
+      (cents, e)
+    })
 
   /** Embedding-block size (rows × dims) under which Lloyd trains
     * driver-side on ONE collected copy — the adaptive driver/
@@ -646,15 +635,10 @@ object Similarity {
     cents
   }
 
-  private val centsMemo = scala.collection.mutable.Map.empty[
-    (SparkSession, String),
-    (Array[Array[Double]], Dataset[(Long, Array[Double])])]
-
-  /** Forget trained centroids and release their cached corpora. */
-  def clearCentsMemo(): Unit = centsMemo.synchronized {
-    centsMemo.values.foreach(_._2.unpersist(blocking = false))
-    centsMemo.clear()
-  }
+  /** Trained centroids with their cached corpus, released on drop. */
+  private val centsMemo =
+    new MemoStats.Table[String, (Array[Array[Double]], Dataset[(Long, Array[Double])])](
+      release = _._2.unpersist(blocking = false))
 
   /** Pair cap per cluster for [[semanticDedup]]: a cluster that stays
     * degenerate despite K ∝ n (every vector identical, say) falls back

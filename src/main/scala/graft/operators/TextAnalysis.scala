@@ -43,7 +43,7 @@ object TextAnalysis {
     * byte-identical to [[graft.functions.tokens]] (lower, split ' ',
     * drop empties). */
   private[graft] def termCounts(spark: SparkSession, dir: String): DataFrame =
-    MemoStats.cached(tcMemo, (spark, dir))(Materialize(termRowsOf(
+    tcMemo(spark, dir)(Materialize(termRowsOf(
       Tables.documents(spark, dir).select(col("doc_id"), col("text")))))
 
   /** The narrow term-count pass over ANY (doc_id, text) frame — the
@@ -69,11 +69,7 @@ object TextAnalysis {
     }.toDF("doc_id", "term", "cnt", "n")
   }
 
-  private val tcMemo = scala.collection.concurrent
-    .TrieMap.empty[(SparkSession, String), DataFrame]
-
-  /** Forget the memoized term-count frames (bench pass isolation). */
-  def clearMemo(): Unit = tcMemo.clear()
+  private val tcMemo = new MemoStats.Table[String, DataFrame]
 
   private def countIn(ts: Column, words: Seq[String]): Column =
     size(filter(ts, t => t.isInCollection(words)))

@@ -313,7 +313,6 @@ object WinnowIndex {
     * state AND the incoming batch — which the oracle must therefore
     * re-scope per step, not globally. */
   def sqlAdmit(spark: SparkSession, dir: String): DataFrame = {
-    graft.GraftExtensions.install(spark)
     val root = java.nio.file.Files
       .createTempDirectory("graft-wn-sql-admit").toString
     try {

@@ -2,6 +2,8 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.operators.MemoStats
+
 /** Loaders for the driver-generated parquet tables (TESTDATA.md).
   *
   * Mirrors the reference's table surface: the reference materializes two
@@ -25,13 +27,14 @@ object Tables {
     * object itself is immutable). Keyed by session so it dies with
     * one; sound because the round's testdata is immutable by contract
     * — a MUTABLE table must go through GraftTable's snapshot log, not
-    * this loader. */
+    * this loader; a regenerated dir needs [[MemoStats.clearAll]]. */
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    loadMemo.getOrElseUpdate((spark, dir, name),
-      spark.read.parquet(s"$dir/$name.parquet"))
+    loadMemo(spark, (dir, name))(spark.read.parquet(s"$dir/$name.parquet"))
 
-  private val loadMemo = scala.collection.concurrent
-    .TrieMap.empty[(SparkSession, String, String), DataFrame]
+  // loader memos are metadata (listings, footers, counts), not work
+  // another query paid for: their hits are not warm
+  private def metadata[K, V] = new MemoStats.Table[K, V](metadata = true)
+  private val loadMemo = metadata[(String, String), DataFrame]
 
   def region(s: SparkSession, d: String): DataFrame     = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = load(s, d, "nation")
@@ -79,14 +82,14 @@ object Tables {
     * fewer tasks than cores, i.e. when the input is small enough that
     * the shuffle is trivially cheap. */
   def documentsWide(s: SparkSession, d: String): DataFrame =
-    wideMemo.getOrElseUpdate((s, d), widen(documents(s, d)))
+    wideMemo(s, d)(widen(documents(s, d)))
 
   /** The events scan widened the same way, for the proto wire chain:
     * encode→decode costs far more per row than the 2 MB single-file
     * scan feeding it, which would otherwise run the whole codec on one
     * core. Same no-op-on-real-corpora branch as [[documentsWide]]. */
   def eventsWide(s: SparkSession, d: String): DataFrame =
-    eventsWideMemo.getOrElseUpdate((s, d), widen(events(s, d)))
+    eventsWideMemo(s, d)(widen(events(s, d)))
 
   private def widen(df: DataFrame): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
@@ -95,10 +98,9 @@ object Tables {
     if (df.rdd.getNumPartitions >= target) df else df.repartition(target)
   }
 
-  private val wideMemo = scala.collection.concurrent
-    .TrieMap.empty[(SparkSession, String), DataFrame]
-  private val eventsWideMemo = scala.collection.concurrent
-    .TrieMap.empty[(SparkSession, String), DataFrame]
+  private val wideMemo = metadata[String, DataFrame]
+  private val eventsWideMemo = metadata[String, DataFrame]
+
   /** Expected embedding dimensionality. The vector operators (PQ
     * geometry, hyperplane matrices, centroid accumulators) and their
     * STATIC oracle SQL both encode this number, so a generator that
@@ -112,7 +114,7 @@ object Tables {
     // one memoized 1-row probe per (session, dir): the array length is
     // data-level (not in the parquet schema), so LOOK at one row and
     // refuse a drifted generator with an actionable message
-    dimsMemo.getOrElseUpdate((s, d), {
+    dimsMemo(s, d)({
       import org.apache.spark.sql.functions.{col, size => asize}
       // null-safe: a null first embedding must produce the actionable
       // message below (dims = -1), not an opaque NPE on Row.getInt —
@@ -133,8 +135,7 @@ object Tables {
     df
   }
 
-  private val dimsMemo = scala.collection.concurrent
-    .TrieMap.empty[(SparkSession, String), Boolean]
+  private val dimsMemo = metadata[String, Boolean]
 
   /** Memoized exact row count of a table — METADATA, not a computed
     * result: parquet footers carry the row count (a real table format
@@ -143,21 +144,7 @@ object Tables {
     * here instead of re-running a count job per invocation. Keyed per
     * (session, dir, table); immutable inputs by the test-data contract. */
   def rowCount(s: SparkSession, d: String, name: String): Long =
-    countMemo.getOrElseUpdate((s, d, name), load(s, d, name).count())
+    countMemo(s, (d, name))(load(s, d, name).count())
 
-  private val countMemo = scala.collection.concurrent
-    .TrieMap.empty[(SparkSession, String, String), Long]
-
-  /** Invalidate every loader memo (relations, widened frames, counts,
-    * dims probes). The memos assume immutable table directories; call
-    * this after REGENERATING data under a dir mid-session (the dev
-    * loop for generator changes) — a memoized relation holds the old
-    * file listing and would throw FileNotFound or read stale rows. */
-  def clearMemo(): Unit = {
-    loadMemo.clear()
-    wideMemo.clear()
-    eventsWideMemo.clear()
-    countMemo.clear()
-    dimsMemo.clear()
-  }
+  private val countMemo = metadata[(String, String), Long]
 }

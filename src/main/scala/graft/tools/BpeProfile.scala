@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.functions._
 
-import graft.GraftSession
+import graft.{Bench, GraftSession}
 import graft.operators.Bpe
 import graft.sources.Tables
 
@@ -30,7 +30,7 @@ object BpeProfile {
       f"(best-case cache hit rate ${100.0 * (nTok - nDist) / nTok}%.1f%%)")
 
     (1 to 3).foreach { pass =>
-      Bpe.clearMemo()
+      Bench.resetPass(spark)
       val t0 = System.nanoTime()
       val ms = Bpe.learnedMerges(spark, dir) // vocab job + driver rounds
       val tTrain = (System.nanoTime() - t0) / 1e9

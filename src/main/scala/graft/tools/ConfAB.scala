@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-import graft.{GraftSession, SparkEntry}
+import graft.{Bench, GraftSession, SparkEntry}
 
 /** A/B a set of session confs over named queries (dev tool): builds one
   * session per variant (confs are plan-time, so a fresh session per arm
@@ -13,24 +13,6 @@ import graft.{GraftSession, SparkEntry}
   * Variants are hard-coded below — edit per experiment.
   */
 object ConfAB {
-
-  private def clearMemos(spark: SparkSession): Unit = {
-    graft.operators.Dedup.clearMemo()
-    graft.operators.PerceptualHash.clearMemo()
-    graft.operators.Similarity.clearCentsMemo()
-    graft.operators.Similarity.clearPqMemo()
-    graft.operators.Similarity.clearBruteMemo()
-    graft.operators.IvfPq.clearTopKMemo()
-    graft.operators.HnswIndex.clearTopKMemo()
-    graft.operators.HnswRouted.clearMemo()
-    graft.operators.QualityClassifier.clearMemo()
-    graft.operators.Bpe.clearMemo()
-    graft.operators.TextAnalysis.clearMemo()
-    graft.operators.KafkaRoundtrip.clearMemo()
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = false))
-    spark.sharedState.cacheManager.clearCache()
-  }
 
   def main(args: Array[String]): Unit = {
     val names = args.headOption
@@ -58,14 +40,13 @@ object ConfAB {
       confs.foreach { case (k, v) => b.config(k, v) }
       val spark = b.getOrCreate()
       spark.sparkContext.setLogLevel("WARN")
-      graft.GraftExtensions.install(spark)
       spark.range(1000000).selectExpr("sum(id)").collect()
       scala.util.Try(spark.read.parquet(s"$dir/lineitem.parquet")
         .selectExpr("count(*)").collect())
       names.foreach { name =>
         val fn = SparkEntry.queries(name)
         val times = (1 to rounds).map { _ =>
-          clearMemos(spark)
+          Bench.resetPass(spark)
           val t0 = System.nanoTime()
           fn(spark, dir).count()
           (System.nanoTime() - t0) / 1e9

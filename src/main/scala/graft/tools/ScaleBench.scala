@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.GraftSession
+import graft.{Bench, GraftSession}
 
 /** Scale-slope proof for the heavy operator families: generates
   * seeded corpora at 1×/10×/100× the sf0.1 row counts (same schemas
@@ -109,23 +109,6 @@ object ScaleBench {
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
   }
 
-  private def clearMemos(spark: SparkSession): Unit = {
-    graft.operators.Dedup.clearMemo()
-    graft.operators.PerceptualHash.clearMemo()
-    graft.operators.Similarity.clearCentsMemo()
-    graft.operators.Similarity.clearPqMemo()
-    graft.operators.Similarity.clearBruteMemo()
-    graft.operators.IvfPq.clearTopKMemo()
-    graft.operators.HnswIndex.clearTopKMemo()
-    graft.operators.HnswRouted.clearMemo()
-    graft.operators.QualityClassifier.clearMemo()
-    graft.operators.Bpe.clearMemo()
-    graft.operators.TextAnalysis.clearMemo()
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = false))
-    spark.sharedState.cacheManager.clearCache()
-  }
-
   def main(args: Array[String]): Unit = {
     val scales = args.headOption.getOrElse("1,10,100")
       .split(',').map(_.trim.toLong).filter(_ > 0)
@@ -182,7 +165,7 @@ object ScaleBench {
       genEvents(spark, dir, BaseEvents * scale)
       ops.foreach { case (name, fn) =>
         val secs = (1 to 2).map { _ =>
-          clearMemos(spark)
+          Bench.resetPass(spark)
           val t0 = System.nanoTime()
           val n = fn(spark, dir).count()
           val s = (System.nanoTime() - t0) / 1e9
@@ -215,7 +198,7 @@ object ScaleBench {
                       build: String => Unit,
                       merge: String => Unit): Unit = {
           val secs = (1 to 2).map { _ =>
-            clearMemos(spark)
+            Bench.resetPass(spark)
             val root = Files.createTempDirectory("scale-hnsw-m").toString
             build(root)
             val t0 = System.nanoTime()

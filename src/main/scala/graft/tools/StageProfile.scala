@@ -4,7 +4,7 @@ import scala.collection.mutable
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 
-import graft.{GraftSession, SparkEntry}
+import graft.{Bench, GraftSession, SparkEntry}
 
 /** Stage-level profile of one [[SparkEntry.queries]] entry (dev tool):
   * runs the named query with Bench-identical memo clearing, then prints
@@ -54,21 +54,7 @@ object StageProfile {
     val fn = SparkEntry.queries(name)
     (1 to rounds).foreach { round =>
       // Bench-identical pass semantics: cold memos each round
-      graft.operators.Dedup.clearMemo()
-      graft.operators.PerceptualHash.clearMemo()
-      graft.operators.Similarity.clearCentsMemo()
-      graft.operators.Similarity.clearPqMemo()
-      graft.operators.Similarity.clearBruteMemo()
-      graft.operators.IvfPq.clearTopKMemo()
-      graft.operators.HnswIndex.clearTopKMemo()
-      graft.operators.HnswRouted.clearMemo()
-      graft.operators.QualityClassifier.clearMemo()
-      graft.operators.Bpe.clearMemo()
-      graft.operators.TextAnalysis.clearMemo()
-      graft.operators.KafkaRoundtrip.clearMemo()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      spark.sharedState.cacheManager.clearCache()
+      Bench.resetPass(spark)
       stages.clear(); jobSpans.clear()
       val t0 = System.nanoTime()
       val n = fn(spark, dir).count()

@@ -17,7 +17,8 @@ class DecontamIndexSpec extends AnyFunSuite {
   test("persisted query == in-memory decontaminateBloom") {
     val viaIndex = DecontamIndex.persistedDecontam(spark, sf0001)
       .collect().map(_.toSeq)
-    Dedup.clearMemo() // decontaminateBloom publishes to the shared memo
+    // decontaminateBloom publishes to the session memo: start it cold
+    graft.operators.MemoStats.clearAll(spark)
     val inMemory = Dedup.decontaminateBloom(spark, sf0001)
       .collect().map(_.toSeq)
     assert(viaIndex.nonEmpty)

@@ -10,14 +10,10 @@ import graft.sources.proto.{ProtoDecode, ProtoEncode}
   */
 class GraftExtensionsSpec extends AnyFunSuite {
 
-  // the shared test session already exists, so the config-time
-  // extensions path can't apply — use the live-session installer
-  private lazy val spark: SparkSession = {
-    val s = SparkTestSession.spark
-    GraftExtensions.install(s)
-    GraftExtensions.installRoundtripElimination(s)
-    s
-  }
+  // the shared test session is built with spark.sql.extensions =
+  // graft.GraftExtensions: functions, parser and the roundtrip rule all
+  // come from that config-time injection
+  private lazy val spark: SparkSession = SparkTestSession.spark
 
   test("SQL users can decode bidrequests via registered function") {
     val frames = graft.operators.ProtoPipeline

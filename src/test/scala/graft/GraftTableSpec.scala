@@ -177,7 +177,6 @@ class GraftTableSpec extends AnyFunSuite {
     Seq((1L, "doc-1")).toDF("id", "text")
       .write.parquet(s"$root/docs/batch_id=1")
     GraftTable.commit(spark, root, 1L)
-    GraftExtensions.install(spark)
     assert(spark.sql(
       s"SELECT count(*) AS n FROM graft_table_read('$root', 'docs')")
       .head().getLong(0) == 2)

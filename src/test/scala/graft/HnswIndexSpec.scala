@@ -133,7 +133,6 @@ class HnswIndexSpec extends AnyFunSuite {
   test("SQL surface: GRAFT INDEX BUILD/MERGE HNSW drives the same " +
     "lifecycle as the Scala API") {
     import org.apache.spark.sql.functions._
-    GraftExtensions.install(spark)
     graft.sources.Tables.embeddings(spark, sf0001)
       .select(col("vec_id"),
         col("embedding").cast("array<double>").as("v"))

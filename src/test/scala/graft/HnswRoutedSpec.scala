@@ -120,7 +120,7 @@ class HnswRoutedSpec extends AnyFunSuite {
         .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
         .toSeq
       assert(got == expected, s"routed mismatch at $dir")
-      graft.operators.HnswRouted.clearMemo()
+      graft.operators.MemoStats.clearAll(spark)
     }
   }
 
@@ -300,7 +300,6 @@ class HnswRoutedSpec extends AnyFunSuite {
 
   test("SQL surface: GRAFT INDEX BUILD/MERGE/COMPACT/VACUUM HNSW_ROUTED " +
     "drives the same lifecycle as the Scala API") {
-    GraftExtensions.install(spark)
     graft.sources.Tables.embeddings(spark, sf0001)
       .select(col("vec_id"), col("label").cast("long").as("label"),
         col("embedding").cast("array<double>").as("v"))
@@ -358,6 +357,6 @@ class HnswRoutedSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
       .toSeq
     assert(got == expected)
-    graft.operators.HnswRouted.clearMemo()
+    graft.operators.MemoStats.clearAll(spark)
   }
 }

@@ -181,7 +181,7 @@ class IndexDurabilitySpec extends AnyFunSuite {
       DecontamIndex.merge(evalDocs.filter(col("doc_id") % stride2 =!= 0), idx)
       val got = rows(DecontamIndex.query(spark, idx, corpus))
       assert(got.nonEmpty)
-      Dedup.clearMemo()
+      graft.operators.MemoStats.clearAll(spark)
       assert(got == rows(Dedup.decontaminateBloom(spark, sf0001)),
         "file://-scheme index must answer like the in-memory operator")
     } finally Scratch.rm(new java.io.File(localRoot))

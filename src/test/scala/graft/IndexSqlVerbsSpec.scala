@@ -23,7 +23,6 @@ class IndexSqlVerbsSpec extends AnyFunSuite {
       .createOrReplaceTempView(name)
 
   test("minhash: SQL build/merge/compact/query == Scala lifecycle") {
-    GraftExtensions.install(spark)
     docsView("idx_docs")
     val root = tmp()
     spark.sql(s"GRAFT INDEX BUILD MINHASH '$root/s' FROM " +
@@ -52,7 +51,6 @@ class IndexSqlVerbsSpec extends AnyFunSuite {
   }
 
   test("winnow and terms kinds run through the same verbs") {
-    GraftExtensions.install(spark)
     docsView("idx_docs2")
     val root = tmp()
     spark.sql(s"GRAFT INDEX BUILD WINNOW '$root/w' FROM " +
@@ -142,7 +140,6 @@ class IndexSqlVerbsSpec extends AnyFunSuite {
 
   test("GRAFT INDEX ADMIT: the SQL gate returns the admission log and " +
     "matches the Scala admit API on an identically maintained twin") {
-    GraftExtensions.install(spark)
     docsView("idx_docs_admit")
     val root = tmp()
     spark.sql(s"GRAFT INDEX BUILD MINHASH '$root/s' FROM " +
@@ -205,7 +202,6 @@ class IndexSqlVerbsSpec extends AnyFunSuite {
       spark.sql("GRAFT INDEX COMPACT DECONTAM '/tmp/x'")
     }
     // unknown kind in the table function
-    GraftExtensions.install(spark)
     val e3 = intercept[Exception] {
       spark.sql(s"SELECT * FROM graft_index_query('btree', '/tmp/x', '$sf0001')")
         .collect()

@@ -228,7 +228,6 @@ class IvfIndexSpec extends AnyFunSuite {
       val (again, post) = IvfIndex.rebuildIfDrifted(spark, idx, 0.3)
       assert(!again && post == 0.0, s"post-rebuild drift: $post")
       // the SQL spelling reports the skip/rebuild decision
-      GraftExtensions.install(spark)
       val note = spark.sql(s"GRAFT INDEX REBUILD IVF '$idx' THRESHOLD 0.3")
         .head.getString(2)
       assert(note.startsWith("skipped"), note)
