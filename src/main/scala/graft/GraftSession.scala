@@ -20,8 +20,7 @@ object GraftSession {
     SparkSession.builder()
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("GRAFT_AQE", "true"))
+      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       // Size post-shuffle partitions by BYTES (advisory target), not by
       // core count: with the default parallelismFirst=true AQE stops

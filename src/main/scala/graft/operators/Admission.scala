@@ -42,6 +42,24 @@ object Admission {
     * clusters near 1.29 with a long tail — 1.5 splits it at every SF.) */
   val RarityMax = 1.5
 
+  /** Gate one crawl batch against one pair-producing index and admit
+    * the survivors: docs that `query` pairs (as `left_id`) with an
+    * already-landed doc are rejected, the rest are merged in. Returns
+    * the admitted rows, MATERIALIZED before the merge, so the decision
+    * is frozen against the pre-merge index state and can never observe
+    * the generation it is about to write. The one body behind
+    * [[MinhashIndex.admit]] and [[WinnowIndex.admit]]. */
+  private[operators] def gate(batch: DataFrame, indexPath: String,
+      query: (SparkSession, String, DataFrame) => DataFrame,
+      merge: (DataFrame, String) => Unit): DataFrame = {
+    val dup = query(batch.sparkSession, indexPath, batch)
+      .select(col("left_id")).distinct()
+    val admitted = Materialize(
+      batch.join(dup, batch("doc_id") === dup("left_id"), "left_anti"))
+    merge(admitted, indexPath)
+    admitted
+  }
+
   /** q_admission_pipeline: the composed gate under the oracle gate.
     * Eval set = doc_id % EvalStride = 0 (held out of the corpus
     * entirely); landed corpus = the non-eval doc_id % 10 ≠ 3; crawl

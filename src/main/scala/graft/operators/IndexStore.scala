@@ -1,12 +1,17 @@
 package graft.operators
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StructType
 
-/** Shared Hadoop-FS plumbing for the persisted index artifacts
-  * ([[MinhashIndex]], [[DecontamIndex]]): explicit commit markers plus
-  * write-new-then-retire versioning — the same crash discipline the
-  * table format's versioned checkpoints use (`GraftTable.checkpoint`).
+/** Shared Hadoop-FS plumbing for the persisted indexes: commit markers,
+  * write-new-then-retire versioning, the writer lease, and the
+  * generation store ([[GenerationStore]]) that [[MinhashIndex]],
+  * [[WinnowIndex]] and [[TermStatsIndex]] are built on.
+  * [[DecontamIndex]] (Bloom versions) and the vector indexes
+  * ([[IvfIndex]], [[PqIndex]], [[HnswIndex]], [[HnswRouted]]) use the
+  * marker, version and lease helpers directly.
   *
   * Everything goes through Hadoop [[FileSystem]], never `java.io.File`
   * or `java.nio.file`: a 100 TB index lives on HDFS or an object store,
@@ -17,7 +22,40 @@ import org.apache.spark.sql.SparkSession
   * point on every HCFS — no rename required, which also makes the
   * scheme object-store-safe (S3 rename is copy+delete, not atomic).
   *
-  * Crash contract both indexes build on:
+  * Generation-store layout under an index root, `<P>` being the
+  * family's version-marker prefix (`bands.v`, `store.v`):
+  * {{{
+  *   <P><V>/<artifact>/gen=<G>/  a versioned artifact's rows of
+  *                  generation G in store version V; compaction folds
+  *                  them into version V+1
+  *   <artifact>/gen=<G>/         an append-only artifact's rows of
+  *                  generation G (never superseded, never versioned)
+  *   _commits/g<G>               generation G is complete in every
+  *                  artifact; a merge's marker carries its batch
+  *                  fingerprint
+  *   _commits/<P><V>             store version V is complete
+  * }}}
+  * Step order, each a no-op for readers until its marker lands:
+  *  - build: reset the root (keeping the lease), write generation 0
+  *    into version 1, mark `g0`, mark `<P>1`;
+  *  - merge: under the lock, resolve the snapshot and require a
+  *    committed index; a batch whose fingerprint rides in ANY `g`
+  *    marker is a no-op (an at-least-once orchestrator can re-deliver
+  *    an old batch after newer ones landed); otherwise write generation
+  *    `max + 1` into the current version, then mark it. A crash before
+  *    the marker leaves invisible orphans that the retry, recomputing
+  *    the same id, overwrites wholesale;
+  *  - compact: clear version V+1 (a crashed compact may have staged an
+  *    older fold there), fold each versioned artifact's committed rows
+  *    into `<P><V+1>/<artifact>/gen=<max>`, mark `<P><V+1>`, retire
+  *    older versions keeping V as the grace copy, and sweep the orphan
+  *    generations of the append-only artifacts;
+  *  - read: the artifact's explicit schema (never inferred: an orphan
+  *    dir may hold a torn file), `basePath`, and the `gen <= max`
+  *    partition filter — exact by the density invariant
+  *    ([[committedGens]]).
+  *
+  * Crash contract every index builds on:
   *  - data files for a version/generation are written FIRST, into a
   *    directory no reader resolves yet;
   *  - the marker is created LAST — before it, a crash leaves only
@@ -120,13 +158,20 @@ private[graft] object IndexStore {
   }
 
   /** Numeric ids of markers named `<prefix><id>` under the root. */
-  def markedIds(hfs: FileSystem, root: Path, prefix: String): Seq[Long] = {
+  def markedIds(hfs: FileSystem, root: Path, prefix: String): Seq[Long] =
+    idsOf(markerNames(hfs, root), prefix)
+
+  /** Every marker name under the root, from one listing. */
+  def markerNames(hfs: FileSystem, root: Path): Seq[String] = {
     val dir = new Path(root, CommitsDir)
     if (!hfs.exists(dir)) Seq.empty
     else hfs.listStatus(dir).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith(prefix))
-      .flatMap(n => scala.util.Try(n.stripPrefix(prefix).toLong).toOption)
   }
+
+  /** Numeric ids of the `<prefix><id>` names among `markers`. */
+  def idsOf(markers: Seq[String], prefix: String): Seq[Long] =
+    markers.filter(_.startsWith(prefix))
+      .flatMap(n => scala.util.Try(n.stripPrefix(prefix).toLong).toOption)
 
   /** Sorted committed generation ids (markers `g<G>`).
     *
@@ -507,5 +552,155 @@ private[graft] object IndexStore {
       results.collectFirst { case Left(t) => t }.foreach(throw _)
       results.collect { case Right(v) => v }
     } finally pool.shutdown()
+  }
+}
+
+/** The generation-store protocol of [[IndexStore]] (layout and step
+  * order in its Scaladoc), written once. A family object extends it
+  * with its version-marker prefix and supplies three things: its
+  * [[Artifact]]s, how one batch is prepared for them ([[prepare]],
+  * cached while the artifacts are written), and its own query over a
+  * [[Snapshot]]. `what` names the store in the missing-version error. */
+abstract class GenerationStore(versionPrefix: String, what: String) {
+  import IndexStore._
+
+  /** One parquet table of the store, partitioned by `gen`. `schema`
+    * lists the data columns, then `gen`, then any further partition
+    * columns `layout` adds. `derive` turns a prepared batch into one
+    * generation's rows. `fold` turns the committed rows into the single
+    * generation compaction writes; without one the artifact is
+    * append-only: it lives at `<root>/<dir>` outside the version tree,
+    * and compaction only sweeps its orphan generations. `layout` places
+    * rows in files, the same for a generation and a fold. */
+  final class Artifact(val dir: String, val schema: StructType,
+                       val derive: DataFrame => DataFrame,
+                       val fold: Option[DataFrame => DataFrame],
+                       val layout: DataFrame => DataFrameWriter[Row] = _.write)
+
+  protected def artifacts: Seq[Artifact]
+  protected def prepare(docs: DataFrame): DataFrame
+
+  /** The committed state one operation reads: the committed generation
+    * ids and the newest committed store version, from one listing of
+    * `_commits/`. */
+  final class Snapshot private[GenerationStore] (spark: SparkSession,
+                                                 root: String,
+                                                 val gens: Seq[Long],
+                                                 val v: Long) {
+    /** The artifact's committed rows (the `gen` column dropped). */
+    def read(a: Artifact): DataFrame = {
+      val d = dirOf(root, v, a)
+      spark.read.schema(a.schema).option("basePath", d).parquet(d)
+        .filter(col("gen") <= gens.max)
+        .drop("gen")
+    }
+
+    /** The artifact's physical `gen=` dirs — see
+      * [[IndexStore.physicalGens]]. */
+    def physicalGens(a: Artifact): Int =
+      IndexStore.physicalGens(spark, dirOf(root, v, a))
+  }
+
+  protected def snapshot(spark: SparkSession, root: String): Snapshot = {
+    val (hfs, p) = fs(spark, root)
+    val markers = markerNames(hfs, p)
+    val gens = idsOf(markers, "g")
+    require(gens.nonEmpty,
+      s"no committed index under $root — run build first")
+    val vs = idsOf(markers, versionPrefix)
+    require(vs.nonEmpty,
+      s"no committed $what under $root — interrupted build? re-run build")
+    new Snapshot(spark, root, gens, vs.max)
+  }
+
+  private def versionDir(root: String, v: Long) = s"$root/$versionPrefix$v"
+
+  private def dirOf(root: String, v: Long, a: Artifact): String =
+    if (a.fold.isEmpty) s"$root/${a.dir}"
+    else if (a.dir.isEmpty) versionDir(root, v)
+    else s"${versionDir(root, v)}/${a.dir}"
+
+  private def write(a: Artifact, rows: DataFrame, root: String, v: Long,
+                    gen: Long): Unit =
+    a.layout(rows).mode("overwrite").parquet(s"${dirOf(root, v, a)}/gen=$gen")
+
+  /** Write the index over `corpus` (doc_id, text), replacing any prior
+    * index at `root`. */
+  def build(corpus: DataFrame, root: String): Unit =
+    withLock(corpus.sparkSession, root) {
+      val (hfs, p) = fs(corpus.sparkSession, root)
+      resetRoot(hfs, p)
+      writeGeneration(corpus, root, gen = 0L, v = 1L)
+      mark(hfs, p, "g0")
+      mark(hfs, p, s"${versionPrefix}1")
+    }
+
+  /** Add `admitted` (doc_id, text) to the index as one new generation;
+    * a batch already committed is a no-op. */
+  def merge(admitted: DataFrame, root: String): Unit =
+    withLock(admitted.sparkSession, root) {
+      val snap = snapshot(admitted.sparkSession, root)
+      val fp = batchFingerprint(admitted, "doc_id", "text")
+      val (hfs, p) = fs(admitted.sparkSession, root)
+      if (!snap.gens.exists(g => markContent(hfs, p, s"g$g").contains(fp))) {
+        val g = snap.gens.max + 1
+        writeGeneration(admitted, root, g, snap.v)
+        mark(hfs, p, s"g$g", fp)
+      }
+    }
+
+  /** Write generation `gen` of every artifact under version `v`,
+    * unmarked. The artifacts are independent jobs over the cached
+    * prepared batch, so they run concurrently. */
+  private[graft] def writeGeneration(docs: DataFrame, root: String,
+                                     gen: Long, v: Long): Unit = {
+    val batch = prepare(docs)
+    Materialize.withCached(batch) {
+      inParallel(artifacts.map(a =>
+        () => write(a, a.derive(batch), root, v, gen)): _*)
+      // withCached materializes its body's result: return an empty
+      // frame instead of re-reading what was written
+      batch.sparkSession.range(0).toDF("done")
+    }
+    ()
+  }
+
+  /** Fold the committed generations into a new store version; answers
+    * are unchanged. */
+  def compact(spark: SparkSession, root: String): Unit =
+    withLock(spark, root) {
+      val (oldV, newV) = writeCompacted(spark, root)
+      publishCompacted(spark, root, newV)
+      retireCompacted(spark, root, oldV)
+    }
+
+  /** Compact step 1: write the folded artifacts as version V+1,
+    * unmarked. Returns (V, V+1). */
+  private[graft] def writeCompacted(spark: SparkSession,
+                                    root: String): (Long, Long) = {
+    val snap = snapshot(spark, root)
+    val newV = snap.v + 1
+    deleteTree(fs(spark, root)._1, new Path(versionDir(root, newV)))
+    inParallel(artifacts.flatMap(a => a.fold.map(f =>
+      () => write(a, f(snap.read(a)), root, newV, snap.gens.max))): _*)
+    (snap.v, newV)
+  }
+
+  /** Compact step 2: mark version `newV` — the atomic switch point. */
+  private[graft] def publishCompacted(spark: SparkSession, root: String,
+                                      newV: Long): Unit = {
+    val (hfs, p) = fs(spark, root)
+    mark(hfs, p, s"$versionPrefix$newV")
+  }
+
+  /** Compact step 3: retire versions older than `oldV` and sweep the
+    * append-only artifacts' orphan generations. Everything deleted is
+    * already unreachable, so a crash here is safe. */
+  private[graft] def retireCompacted(spark: SparkSession, root: String,
+                                     oldV: Long): Unit = {
+    retireVersions(spark, root, versionPrefix, oldV)
+    val (hfs, p) = fs(spark, root)
+    artifacts.filter(_.fold.isEmpty).foreach(a => sweepOrphanGens(hfs,
+      new Path(dirOf(root, oldV, a)), markedIds(hfs, p, "g").toSet))
   }
 }

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -17,9 +16,9 @@ import org.apache.spark.sql.types._
   * a persisted df table, each daily batch would pay a full-corpus
   * tokenize just to know how rare its tokens are.
   *
-  * Layout under `indexPath` (Hadoop FS + commit markers +
-  * write-new-then-retire versioning via [[IndexStore]] — the same crash
-  * discipline as the other three indexes):
+  * A [[GenerationStore]] (layout, build/merge/compact and crash
+  * contract in [[IndexStore]]) with version prefix `store.v` and two
+  * artifacts:
   * {{{
   *   store.v<V>/stats/gen=<G>/ (term, df) — the generation batch's
   *                     per-term document frequency. Term-partitionable,
@@ -27,17 +26,16 @@ import org.apache.spark.sql.types._
   *   store.v<V>/meta/gen=<G>/  (n_docs) — the batch's tokenized-doc
   *                     count (docs with ≥ 1 token, the same population
   *                     [[TextAnalysis.rarityScore]] counts).
-  *   _commits/g<G>             generation marker (carries the batch
-  *                     fingerprint for retry idempotence).
-  *   _commits/store.v<V>       store version marker; [[compact]] bumps V.
   * }}}
   *
   * Statistics are pure integer counts, so the maintenance verbs are
   * exact: df of the union corpus = Σ per-generation df (no cap, no
-  * approximation), and [[compact]]'s fold is a plain sum. [[query]]
+  * approximation), and compaction's fold is a plain sum. [[query]]
   * therefore answers BIT-IDENTICALLY to running the batch operator over
   * the unioned corpus and filtering to the increment — the property the
-  * `text_rarity_incremental` oracle row checks end-to-end.
+  * `text_rarity_incremental` oracle row checks end-to-end. A retried
+  * batch must be a no-op: double-counted df rows are the silent
+  * corruption exact statistics can least afford.
   *
   * Query plan shape: the increment is tokenized once (narrow pass); its
   * distinct terms broadcast into the stats scan as a prune; the pruned
@@ -45,147 +43,42 @@ import org.apache.spark.sql.types._
   * stored tables are scanned narrowly and never shuffled — work per
   * increment doc is bounded by its vocabulary, never the corpus.
   */
-object TermStatsIndex {
+object TermStatsIndex extends GenerationStore("store.v", "term-stats store") {
 
-  private val StatsSchema = StructType(Seq(
-    StructField("term", StringType), StructField("df", LongType),
-    StructField("gen", LongType)))
-  private val MetaSchema = StructType(Seq(
-    StructField("n_docs", LongType), StructField("gen", LongType)))
+  // a prepared batch holds one row per distinct (doc, term): counting
+  // rows per term IS the batch document frequency
+  private val Stats = new Artifact("stats", StructType(Seq(
+      StructField("term", StringType), StructField("df", LongType),
+      StructField("gen", LongType))),
+    derive = _.groupBy("term").agg(count(lit(1)).as("df")),
+    fold = Some(_.groupBy("term").agg(sum(col("df")).as("df"))))
+  private val Meta = new Artifact("meta", StructType(Seq(
+      StructField("n_docs", LongType), StructField("gen", LongType))),
+    derive = _.select(countDistinct(col("doc_id")).as("n_docs")),
+    fold = Some(_.agg(sum(col("n_docs")).as("n_docs"))))
 
-  private def storeDir(root: String, v: Long) = s"$root/store.v$v"
-
-  private def committedGens(spark: SparkSession, root: String): Seq[Long] =
-    IndexStore.committedGens(spark, root)
-
-  private def storeVersion(spark: SparkSession, root: String): Long =
-    IndexStore.requireVersion(spark, root, "store.v", "term-stats store")
-
-  /** Tokenize `corpus` (doc_id, text) and write the index, replacing any
-    * prior index at `indexPath`. The only corpus-wide shuffle in the
-    * index's lifetime is this build's df aggregate. */
-  def build(corpus: DataFrame, indexPath: String): Unit =
-    IndexStore.withLock(corpus.sparkSession, indexPath) {
-      val spark = corpus.sparkSession
-      val (hfs, p) = IndexStore.fs(spark, indexPath)
-      IndexStore.resetRoot(hfs, p)
-      writeGeneration(corpus, indexPath, gen = 0L, v = 1L)
-      IndexStore.mark(hfs, p, "g0")
-      IndexStore.mark(hfs, p, "store.v1")
-    }
-
-  /** Admit a new batch: one generation holding its per-term df and its
-    * doc count, published by a single marker. Crash before the marker →
-    * invisible orphans, retry overwrites; retry AFTER the marker →
-    * detected by the fingerprint riding in ANY generation marker (a
-    * delayed retry of an OLD batch after newer ones landed would
-    * otherwise double-count its df rows — the silent-corruption case
-    * exact integer statistics can least afford), no-op. */
-  def merge(admitted: DataFrame, indexPath: String): Unit =
-    IndexStore.withLock(admitted.sparkSession, indexPath) {
-      val spark = admitted.sparkSession
-      val gens = committedGens(spark, indexPath)
-      require(gens.nonEmpty,
-        s"no committed index under $indexPath — run build first")
-      val fp = IndexStore.batchFingerprint(admitted, "doc_id", "text")
-      val (hfs, p) = IndexStore.fs(spark, indexPath)
-      if (!IndexStore.generationCommitted(spark, indexPath, fp)) {
-        val g = gens.max + 1
-        writeGeneration(admitted, indexPath, g,
-          storeVersion(spark, indexPath))
-        IndexStore.mark(hfs, p, s"g$g", fp)
-      }
-    }
-
-  /** Write generation `gen` under store version `v` — invisible until
-    * its marker lands. One tokenize pass feeds both artifacts (cached),
-    * and the two independent writes are submitted concurrently. */
-  private[graft] def writeGeneration(docs: DataFrame, indexPath: String,
-                                     gen: Long, v: Long): Unit = {
-    // one row per distinct (doc, term) — counting rows per term IS the
-    // batch document frequency
-    val perDoc = TextAnalysis.termRowsOf(docs)
-      .select(col("doc_id"), col("term"))
-    Materialize.withCached(perDoc) {
-      val spark = perDoc.sparkSession
-      IndexStore.inParallel(
-        () => perDoc.groupBy("term").agg(count(lit(1)).as("df"))
-          .write.mode("overwrite")
-          .parquet(s"${storeDir(indexPath, v)}/stats/gen=$gen"),
-        () => perDoc.select(countDistinct(col("doc_id")).as("n_docs"))
-          .write.mode("overwrite")
-          .parquet(s"${storeDir(indexPath, v)}/meta/gen=$gen"))
-      spark.range(0).toDF("done")
-    }
-    ()
-  }
-
-  /** Maintenance: fold the stats through a per-term sum and the doc
-    * counts through a total into store version V+1, publish, then
-    * retire (grace-version discipline, orphan sweeps — identical to
-    * [[WinnowIndex.compact]]). Exact by construction — df sums are
-    * associative — so queries answer identically before and after. */
-  def compact(spark: SparkSession, indexPath: String): Unit =
-    IndexStore.withLock(spark, indexPath) {
-      val gens = committedGens(spark, indexPath)
-      require(gens.nonEmpty,
-        s"no committed index under $indexPath — run build first")
-      val v = storeVersion(spark, indexPath)
-      val (hfs, p) = IndexStore.fs(spark, indexPath)
-      // clear the staging target wholesale: a crashed compact's stale
-      // fold must never survive into a later retry's publish
-      IndexStore.deleteTree(hfs, new Path(storeDir(indexPath, v + 1)))
-      val folded = gens.max
-      IndexStore.inParallel(
-        () => readStats(spark, indexPath, v, gens)
-          .groupBy("term").agg(sum(col("df")).as("df"))
-          .write.mode("overwrite")
-          .parquet(s"${storeDir(indexPath, v + 1)}/stats/gen=$folded"),
-        () => readMeta(spark, indexPath, v, gens)
-          .agg(sum(col("n_docs")).as("n_docs"))
-          .write.mode("overwrite")
-          .parquet(s"${storeDir(indexPath, v + 1)}/meta/gen=$folded"))
-      IndexStore.mark(hfs, p, s"store.v${v + 1}")
-      // retire with one grace version; sweeps every unmarked store tree
-      // (self-heals crashed retires)
-      IndexStore.retireVersions(spark, indexPath, "store.v", v)
-    }
-
-  private def readStats(spark: SparkSession, indexPath: String, v: Long,
-                        gens: Seq[Long]): DataFrame = {
-    val dir = s"${storeDir(indexPath, v)}/stats"
-    spark.read.schema(StatsSchema).option("basePath", dir).parquet(dir)
-      .filter(col("gen") <= gens.max)
-      .select(col("term"), col("df"))
-  }
-
-  private def readMeta(spark: SparkSession, indexPath: String, v: Long,
-                       gens: Seq[Long]): DataFrame = {
-    val dir = s"${storeDir(indexPath, v)}/meta"
-    spark.read.schema(MetaSchema).option("basePath", dir).parquet(dir)
-      .filter(col("gen") <= gens.max)
-      .select(col("n_docs"))
-  }
+  protected def artifacts: Seq[Artifact] = Seq(Stats, Meta)
+  protected def prepare(docs: DataFrame): DataFrame =
+    TextAnalysis.termRowsOf(docs).select(col("doc_id"), col("term"))
 
   /** The committed (term, df) table summed across generations — spec
     * helper. */
   private[graft] def statsTable(spark: SparkSession,
                                 indexPath: String): DataFrame =
-    readStats(spark, indexPath, storeVersion(spark, indexPath),
-      committedGens(spark, indexPath))
+    snapshot(spark, indexPath).read(Stats)
       .groupBy("term").agg(sum(col("df")).as("df"))
 
   /** [[scoreFrame]] against the current committed state — spec helper. */
   private[graft] def scoreFrameNow(spark: SparkSession, indexPath: String,
                                    increment: DataFrame): DataFrame =
-    scoreFrame(spark, indexPath, storeVersion(spark, indexPath),
-      committedGens(spark, indexPath), TextAnalysis.termRowsOf(increment))
+    scoreFrame(snapshot(spark, indexPath), TextAnalysis.termRowsOf(increment))
 
   /** The committed corpus doc count — spec helper. */
   private[graft] def docCount(spark: SparkSession, indexPath: String): Long =
-    readMeta(spark, indexPath, storeVersion(spark, indexPath),
-      committedGens(spark, indexPath))
-      .agg(sum(col("n_docs"))).head().getLong(0)
+    docCount(snapshot(spark, indexPath))
+
+  private def docCount(snap: Snapshot): Long =
+    snap.read(Meta).agg(sum(col("n_docs"))).head().getLong(0)
 
   /** Token-rarity of `increment` (doc_id, text) against the UNION of
     * the indexed corpus and the increment itself — bit-identical to
@@ -198,29 +91,25 @@ object TermStatsIndex {
     * (linear surprisal, half-up integer mean) is inherited unchanged. */
   def query(spark: SparkSession, indexPath: String,
             increment: DataFrame): DataFrame = {
-    val gens = committedGens(spark, indexPath)
-    require(gens.nonEmpty,
-      s"no committed index under $indexPath — run build first")
-    val v = storeVersion(spark, indexPath)
+    val snap = snapshot(spark, indexPath)
     val perDoc = TextAnalysis.termRowsOf(increment)
     Materialize.withCached(perDoc) {
-      scoreFrame(spark, indexPath, v, gens, perDoc)
+      scoreFrame(snap, perDoc)
     }
   }
 
   /** The un-materialized scoring plan over an already-tokenized
     * increment — the frame [[query]] materializes and the spec inspects
     * for the broadcast-only guarantee. */
-  private[graft] def scoreFrame(spark: SparkSession, indexPath: String,
-                                v: Long, gens: Seq[Long],
+  private[graft] def scoreFrame(snap: Snapshot,
                                 perDoc: DataFrame): DataFrame = {
     val nInc = perDoc.select(countDistinct(col("doc_id"))).head().getLong(0)
-    val nUnion = docCount(spark, indexPath) + nInc
+    val nUnion = docCount(snap) + nInc
     // one row per distinct (doc, term) → counting rows is the
     // increment's own df; the stored scan is pruned to the increment's
     // terms by a broadcast of those terms
     val incDf = perDoc.groupBy("term").agg(count(lit(1)).as("dfi"))
-    val storedDf = readStats(spark, indexPath, v, gens)
+    val storedDf = snap.read(Stats)
       .join(broadcast(incDf.select(col("term"))), "term")
       .groupBy("term")
       .agg(sum(col("df")).as("dfs"))

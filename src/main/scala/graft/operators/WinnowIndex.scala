@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -15,9 +14,9 @@ import org.apache.spark.sql.types._
   * winnowing (Schleimer et al.) is the standard shape for catching
   * copied passages a MinHash whole-doc signature dilutes away.
   *
-  * Layout under `indexPath` (Hadoop FS + commit markers +
-  * write-new-then-retire versioning via [[IndexStore]] — the same
-  * crash discipline as the other two indexes):
+  * A [[GenerationStore]] (layout, build/merge/compact and crash
+  * contract in [[IndexStore]]) with version prefix `store.v` and two
+  * artifacts:
   * {{{
   *   store.v<V>/postings/gen=<G>/  (fp, right_id) — posting lists
   *                     capped at the [[Dedup.HotGroupCap]] smallest
@@ -31,11 +30,7 @@ import org.apache.spark.sql.types._
   *                     needs the true union frequency
   *                     ([[Dedup.ShingleFreqCap]] applies to corpus +
   *                     increment combined, exactly as in the
-  *                     in-memory join).
-  *   _commits/g<G>                 generation marker (carries the batch
-  *                     fingerprint for retry idempotence).
-  *   _commits/store.v<V>           store version marker; [[compact]]
-  *                     bumps V.
+  *                     in-memory join). Compaction sums them per fp.
   * }}}
   *
   * Query plan shape (spec-asserted): the increment side is broadcast
@@ -44,22 +39,7 @@ import org.apache.spark.sql.types._
   * fingerprints. Results are row-identical to
   * [[Dedup.winnowJoin]](increment, corpus) over the same data.
   */
-object WinnowIndex {
-
-  private val PostingSchema = StructType(Seq(
-    StructField("fp", StringType), StructField("right_id", LongType),
-    StructField("gen", LongType)))
-  private val CountSchema = StructType(Seq(
-    StructField("fp", StringType), StructField("ff", LongType),
-    StructField("gen", LongType)))
-
-  private def storeDir(root: String, v: Long) = s"$root/store.v$v"
-
-  private def committedGens(spark: SparkSession, root: String): Seq[Long] =
-    IndexStore.committedGens(spark, root)
-
-  private def storeVersion(spark: SparkSession, root: String): Long =
-    IndexStore.requireVersion(spark, root, "store.v", "winnow store")
+object WinnowIndex extends GenerationStore("store.v", "winnow store") {
 
   /** The cap window: keep the HotGroupCap smallest right ids per fp. */
   private def capFp(postings: DataFrame): DataFrame = {
@@ -70,115 +50,22 @@ object WinnowIndex {
       .drop("__rn")
   }
 
-  /** Fingerprint `corpus` (doc_id, text) and write the index, replacing
-    * any prior index at `indexPath`. The only corpus-wide shuffles in
-    * the index's lifetime are this build's cap window and count
-    * aggregate. */
-  def build(corpus: DataFrame, indexPath: String): Unit =
-    IndexStore.withLock(corpus.sparkSession, indexPath) {
-      val spark = corpus.sparkSession
-      val (hfs, p) = IndexStore.fs(spark, indexPath)
-      IndexStore.resetRoot(hfs, p)
-      writeGeneration(corpus, indexPath, gen = 0L, v = 1L)
-      IndexStore.mark(hfs, p, "g0")
-      IndexStore.mark(hfs, p, "store.v1")
-    }
+  private val Postings = new Artifact("postings", StructType(Seq(
+      StructField("fp", StringType), StructField("right_id", LongType),
+      StructField("gen", LongType))),
+    derive = capFp, fold = Some(capFp),
+    layout = _.repartition(col("fp"))
+      .sortWithinPartitions(col("fp"), col("right_id"))
+      .select(col("fp"), col("right_id")).write)
+  private val Counts = new Artifact("counts", StructType(Seq(
+      StructField("fp", StringType), StructField("ff", LongType),
+      StructField("gen", LongType))),
+    derive = _.groupBy("fp").agg(count(lit(1)).as("ff")),
+    fold = Some(_.groupBy("fp").agg(sum(col("ff")).as("ff"))))
 
-  /** Admit a new batch: one generation holding its batch-capped
-    * postings and its full batch counts, published by a single marker.
-    * Crash before the marker → invisible orphans, retry overwrites;
-    * retry AFTER the marker → detected by the fingerprint riding in ANY
-    * generation marker (not just the newest: an at-least-once
-    * orchestrator can re-deliver an old batch after newer ones landed),
-    * no-op. Same discipline as [[MinhashIndex.merge]]. */
-  def merge(admitted: DataFrame, indexPath: String): Unit =
-    IndexStore.withLock(admitted.sparkSession, indexPath) {
-      val spark = admitted.sparkSession
-      val gens = committedGens(spark, indexPath)
-      require(gens.nonEmpty,
-        s"no committed index under $indexPath — run build first")
-      val fp = IndexStore.batchFingerprint(admitted, "doc_id", "text")
-      val (hfs, p) = IndexStore.fs(spark, indexPath)
-      if (!IndexStore.generationCommitted(spark, indexPath, fp)) {
-        val g = gens.max + 1
-        writeGeneration(admitted, indexPath, g,
-          storeVersion(spark, indexPath))
-        IndexStore.mark(hfs, p, s"g$g", fp)
-      }
-    }
-
-  /** Write generation `gen` under store version `v` — invisible until
-    * its marker lands. The two artifacts are independent jobs over the
-    * cached fingerprint frame, so they are submitted concurrently
-    * (FAIR-pool fan-out — same wall-clock trick as a multi-sink
-    * foreachBatch): the generation costs max(counts, postings), not
-    * their sum. */
-  private[graft] def writeGeneration(docs: DataFrame, indexPath: String,
-                                     gen: Long, v: Long): Unit = {
-    val fps = Dedup.winnowFps(docs).toDF("right_id", "fp")
-    Materialize.withCached(fps) {
-      IndexStore.inParallel(
-        () => fps.groupBy("fp").agg(count(lit(1)).as("ff"))
-          .write.mode("overwrite")
-          .parquet(s"${storeDir(indexPath, v)}/counts/gen=$gen"),
-        () => capFp(fps)
-          .repartition(col("fp"))
-          .sortWithinPartitions(col("fp"), col("right_id"))
-          .select(col("fp"), col("right_id"))
-          .write.mode("overwrite")
-          .parquet(s"${storeDir(indexPath, v)}/postings/gen=$gen"))
-      fps.sparkSession.range(0).toDF("done")
-    }
-    ()
-  }
-
-  /** Maintenance: fold the posting lists through the cap window and the
-    * counts through a per-fp sum into store version V+1, publish, then
-    * retire (grace-version discipline, orphan sweeps — identical to
-    * [[MinhashIndex.compact]]). Queries answer identically before and
-    * after. */
-  def compact(spark: SparkSession, indexPath: String): Unit =
-    IndexStore.withLock(spark, indexPath) {
-      val gens = committedGens(spark, indexPath)
-      require(gens.nonEmpty,
-        s"no committed index under $indexPath — run build first")
-      val v = storeVersion(spark, indexPath)
-      val (hfs, p) = IndexStore.fs(spark, indexPath)
-      // clear the staging target wholesale: a crashed compact's stale
-      // fold under this version number must never survive into publish
-      IndexStore.deleteTree(hfs, new Path(storeDir(indexPath, v + 1)))
-      val folded = gens.max
-      IndexStore.inParallel(
-        () => readCounts(spark, indexPath, v, gens)
-          .groupBy("fp").agg(sum(col("ff")).as("ff"))
-          .write.mode("overwrite")
-          .parquet(s"${storeDir(indexPath, v + 1)}/counts/gen=$folded"),
-        () => capFp(readPostings(spark, indexPath, v, gens))
-          .repartition(col("fp"))
-          .sortWithinPartitions(col("fp"), col("right_id"))
-          .write.mode("overwrite")
-          .parquet(s"${storeDir(indexPath, v + 1)}/postings/gen=$folded"))
-      IndexStore.mark(hfs, p, s"store.v${v + 1}")
-      // retire with one grace version; sweeps every unmarked store tree
-      // (self-heals crashed retires)
-      IndexStore.retireVersions(spark, indexPath, "store.v", v)
-    }
-
-  private def readPostings(spark: SparkSession, indexPath: String, v: Long,
-                           gens: Seq[Long]): DataFrame = {
-    val dir = s"${storeDir(indexPath, v)}/postings"
-    spark.read.schema(PostingSchema).option("basePath", dir).parquet(dir)
-      .filter(col("gen") <= gens.max)
-      .select(col("fp"), col("right_id"))
-  }
-
-  private def readCounts(spark: SparkSession, indexPath: String, v: Long,
-                         gens: Seq[Long]): DataFrame = {
-    val dir = s"${storeDir(indexPath, v)}/counts"
-    spark.read.schema(CountSchema).option("basePath", dir).parquet(dir)
-      .filter(col("gen") <= gens.max)
-      .select(col("fp"), col("ff"))
-  }
+  protected def artifacts: Seq[Artifact] = Seq(Counts, Postings)
+  protected def prepare(docs: DataFrame): DataFrame =
+    Dedup.winnowFps(docs).toDF("right_id", "fp")
 
   /** Total stored fingerprint occurrences — Σ ff over the committed
     * counts (the FULL pre-cap per-fingerprint doc frequencies), i.e.
@@ -186,8 +73,7 @@ object WinnowIndex {
     * post-merge readback [[Admission]] gates its winnow merge with. */
   private[graft] def totalFpCount(spark: SparkSession,
                                   indexPath: String): Long = {
-    val r = readCounts(spark, indexPath, storeVersion(spark, indexPath),
-        committedGens(spark, indexPath))
+    val r = snapshot(spark, indexPath).read(Counts)
       .agg(sum(col("ff"))).head()
     if (r.isNullAt(0)) 0L else r.getLong(0)
   }
@@ -195,8 +81,7 @@ object WinnowIndex {
   /** The committed posting table — spec helper. */
   private[graft] def postingTable(spark: SparkSession,
                                   indexPath: String): DataFrame =
-    readPostings(spark, indexPath, storeVersion(spark, indexPath),
-      committedGens(spark, indexPath))
+    snapshot(spark, indexPath).read(Postings)
 
   /** Shared-fingerprint pairs between `increment` (doc_id, text) and
     * the indexed corpus: row-identical to
@@ -208,24 +93,21 @@ object WinnowIndex {
     * the increment's fingerprints and never shuffled. */
   def query(spark: SparkSession, indexPath: String,
             increment: DataFrame): DataFrame = {
-    val gens = committedGens(spark, indexPath)
-    require(gens.nonEmpty,
-      s"no committed index under $indexPath — run build first")
-    val v = storeVersion(spark, indexPath)
+    val snap = snapshot(spark, indexPath)
     val perL = Dedup.winnowFps(increment).toDF("left_id", "fp")
     Materialize.withCached(perL) {
       val ffL = perL.groupBy("fp").agg(count(lit(1)).as("ffl"))
       // one pass over the stored counts: pruning to the increment's
       // fingerprints and attaching its own frequency share a single
       // broadcast join; ffl is constant per fp so any agg carries it
-      val hot = readCounts(spark, indexPath, v, gens)
+      val hot = snap.read(Counts)
         .join(broadcast(ffL), "fp")
         .groupBy("fp")
         .agg(sum(col("ff")).as("ffr"), max(col("ffl")).as("ffl"))
         .filter(col("ffr") + col("ffl") > Dedup.ShingleFreqCap)
         .select(col("fp"))
       val lc = perL.join(broadcast(hot), Seq("fp"), "left_anti")
-      val cand = readPostings(spark, indexPath, v, gens)
+      val cand = snap.read(Postings)
         .join(broadcast(lc), Seq("fp"), "left_semi")
       // candidate-local re-cap: merged generations may hold up to cap
       // residents each; the union's true residents are the cap
@@ -234,7 +116,7 @@ object WinnowIndex {
       // common serving state — is already exactly capped at write, so
       // the re-cap window (the query's only shuffle) is skipped.
       val exact =
-        if (physicalGens(spark, indexPath, v) <= 1) cand else capFp(cand)
+        if (snap.physicalGens(Postings) <= 1) cand else capFp(cand)
       exact
         .join(broadcast(lc), "fp")
         .groupBy("left_id", "right_id")
@@ -244,20 +126,12 @@ object WinnowIndex {
     }
   }
 
-  /** Physical gen= partitions in version `v`'s postings tree — see
-    * [[IndexStore.physicalGens]] for why this is NOT
-    * `committedGens.size`. */
-  private def physicalGens(spark: SparkSession, indexPath: String,
-                           v: Long): Int =
-    IndexStore.physicalGens(spark, s"${storeDir(indexPath, v)}/postings")
-
   /** The candidate frame before aggregation — the plan the spec
     * inspects for the no-corpus-shuffle guarantee. */
   private[graft] def candidateFrame(spark: SparkSession, indexPath: String,
                                     increment: DataFrame): DataFrame = {
     val perL = Dedup.winnowFps(increment).toDF("left_id", "fp")
-    readPostings(spark, indexPath, storeVersion(spark, indexPath),
-        committedGens(spark, indexPath))
+    snapshot(spark, indexPath).read(Postings)
       .join(broadcast(perL), "fp")
       .select(col("left_id"), col("right_id"))
   }
@@ -288,20 +162,10 @@ object WinnowIndex {
   /** Gate one crawl batch against the index and admit the survivors:
     * docs sharing ≥ [[Dedup.MinSharedFp]] winnow fingerprints with an
     * already-landed doc (a copied passage, the overlap a whole-doc
-    * MinHash signature dilutes away) are rejected, everything else is
-    * [[merge]]d in. [[MinhashIndex.admit]]'s discipline, copied-passage
-    * flavor: the admitted set is MATERIALIZED before the merge, so the
-    * admission decision is frozen against the pre-merge index state
-    * and can never observe the generation it is about to write. */
-  def admit(batch: DataFrame, indexPath: String): DataFrame = {
-    val spark = batch.sparkSession
-    val dup = query(spark, indexPath, batch)
-      .select(col("left_id")).distinct()
-    val admitted = Materialize(
-      batch.join(dup, batch("doc_id") === dup("left_id"), "left_anti"))
-    merge(admitted, indexPath)
-    admitted
-  }
+    * MinHash signature dilutes away) are rejected, the rest merged in
+    * (see [[Admission.gate]]). */
+  def admit(batch: DataFrame, indexPath: String): DataFrame =
+    Admission.gate(batch, indexPath, query, merge)
 
   /** q_sql_admit_winnow: the copied-passage crawl gate driven entirely
     * through SQL — `GRAFT INDEX BUILD WINNOW` on the bootstrap batch,
