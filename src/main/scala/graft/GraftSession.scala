@@ -32,8 +32,7 @@ object GraftSession {
       // 3.7→2.8 s, nothing slower (OPTIMIZATION_r18.md).
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
         "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("GRAFT_ADVISORY_PARTITION", "64m"))
+      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
       // ...and start coalescible exchanges above `cores`: AQE only
       // coalesces DOWN from the initial partition count, which defaults
       // to spark.sql.shuffle.partitions (= cores above), so byte sizing

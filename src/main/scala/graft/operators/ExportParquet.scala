@@ -13,10 +13,12 @@ import org.apache.spark.sql.functions._
   *
   * Scale: batch writes ([[writeBatch]]) use dynamic partition overwrite
   * keyed by `batch_id` for replay idempotence; plain [[write]] keeps
-  * append semantics. The write parallelism is the upstream
-  * partitioning — repartition by the partition columns first when
-  * writing many hours at once so each task writes few files (avoids
-  * the many-small-files failure mode at 1000 executors).
+  * append semantics. By default both hash-partition the rows on the
+  * four hour columns into as many tasks as the session has cores
+  * (`defaultParallelism`), so each task writes one group of hours and
+  * each hour directory gets exactly one file per write. The width is
+  * explicit because AQE coalesces a width-less exchange by bytes, and
+  * a batch of a few MB would then fold every hour into one task.
   */
 object ExportParquet {
 
@@ -33,13 +35,17 @@ object ExportParquet {
       .withColumn("hour", hour(ts))
   }
 
+  /** One task per group of hours at the core count; an hour never
+    * spans two tasks. */
+  private def byHour(df: DataFrame, coalescePartitions: Boolean): DataFrame =
+    if (coalescePartitions)
+      df.repartition(df.sparkSession.sparkContext.defaultParallelism,
+        PartitionCols.map(col): _*)
+    else df
+
   def write(df: DataFrame, path: String,
             coalescePartitions: Boolean = true): Unit = {
-    val out =
-      if (coalescePartitions)
-        df.repartition(PartitionCols.map(col): _*)
-      else df
-    out.write
+    byHour(df, coalescePartitions).write
       .partitionBy(PartitionCols: _*)
       .option("compression", "zstd")
       .option("parquet.block.size", 100000000)
@@ -64,11 +70,7 @@ object ExportParquet {
     */
   def writeBatch(df: DataFrame, path: String, batchId: Long,
                  coalescePartitions: Boolean = true): Unit = {
-    val out =
-      if (coalescePartitions)
-        df.repartition(PartitionCols.map(col): _*)
-      else df
-    out.withColumn(BatchCol, lit(batchId))
+    byHour(df, coalescePartitions).withColumn(BatchCol, lit(batchId))
       .write
       .partitionBy((PartitionCols :+ BatchCol): _*)
       .option("compression", "zstd")

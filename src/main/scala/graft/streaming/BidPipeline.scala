@@ -1,6 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.util.concurrent.{CompletionException, ExecutorService, Executors}
+
+import org.apache.spark.sql.{DataFrame, SparkSession, classic}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -119,37 +122,69 @@ object BidPipeline {
     * aggregate of the normalized projection — the exact body the
     * reference runs per rotated DuckDB file, minus the RPC hop.
     *
+    * The two sinks are two concurrent Spark jobs over the persisted
+    * batch: the aggregate write runs on a pool thread that carries this
+    * thread's Spark local properties (job group, query id, active
+    * session), so `query.stop()` cancels both jobs. Both writes end
+    * before anything is rethrown (the first failure wins) and before
+    * the batch is unpersisted; the commit is published only after both
+    * succeed.
+    *
     * Exactly-once across crashes: both sinks write through
     * [[ExportParquet.writeBatch]] (dynamic overwrite of the batch's own
     * `batch_id=N` directories), so a replay after a crash anywhere —
-    * mid-first-write, between the two writes, or before the checkpoint
-    * commit — rewrites the same output instead of duplicating it.
+    * with one or both sinks partly written, or before the checkpoint
+    * commit — rewrites both sinks' output instead of duplicating it.
     */
   def exportBatch(batch: DataFrame, cfg: Config, batchId: Long): Unit = {
+    val spark = batch.sparkSession
+    val root = s"${cfg.exportRoot}/${cfg.logname}"
     // a published commit proves every sink of this batch completed —
     // replaying the writes would orphan the manifest's file list
-    if (cfg.commitLog && cfg.tableFormat.isCommitted(batch.sparkSession,
-        s"${cfg.exportRoot}/${cfg.logname}", batchId)) return
+    if (cfg.commitLog && cfg.tableFormat.isCommitted(spark, root, batchId))
+      return
     batch.persist()
     try {
-      ExportParquet.writeBatch(
-        ExportParquet.withPartitionCols(batch,
-          col("timestamp.seconds") * 1000 +
-            (col("timestamp.nanos") / 1000000).cast("long")),
-        s"${cfg.exportRoot}/${cfg.logname}/raw", batchId)
-      ExportParquet.writeBatch(
-        BidExports.hourlyRequestsAgg(Normalize(batch))
-          .withColumn("year", year(col("date")))
-          .withColumn("month", month(col("date")))
-          .withColumn("day", dayofmonth(col("date"))),
-        s"${cfg.exportRoot}/${cfg.logname}/hourly_requests_agg", batchId)
+      val agg = SQLExecution.withThreadLocalCaptured(
+          spark.asInstanceOf[classic.SparkSession], sinkPool) {
+        ExportParquet.writeBatch(
+          BidExports.hourlyRequestsAgg(Normalize(batch))
+            .withColumn("year", year(col("date")))
+            .withColumn("month", month(col("date")))
+            .withColumn("day", dayofmonth(col("date"))),
+          s"$root/hourly_requests_agg", batchId)
+      }
+      val failures = Seq(
+        ended(ExportParquet.writeBatch(
+          ExportParquet.withPartitionCols(batch,
+            col("timestamp.seconds") * 1000 +
+              (col("timestamp.nanos") / 1000000).cast("long")),
+          s"$root/raw", batchId)),
+        ended(try agg.join() catch {
+          case e: CompletionException => throw e.getCause
+        })).flatten
+      failures.headOption.foreach { first =>
+        failures.tail.foreach(first.addSuppressed)
+        throw first
+      }
       // with the commit log on, BOTH sinks become visible in one atomic
       // rename; without it, readers rely on the batch_id overwrite alone
-      if (cfg.commitLog)
-        cfg.tableFormat.commit(batch.sparkSession,
-          s"${cfg.exportRoot}/${cfg.logname}", batchId)
+      if (cfg.commitLog) cfg.tableFormat.commit(spark, root, batchId)
     } finally batch.unpersist()
   }
+
+  /** Runs `body` to its end and returns what it threw, if anything. */
+  private def ended(body: => Unit): Option[Throwable] =
+    try { body; None } catch { case t: Throwable => Some(t) }
+
+  /** Threads for the aggregate sink's write: one per query exporting at
+    * that moment, reaped after a minute idle; daemon, so the pool never
+    * holds the JVM open. */
+  private lazy val sinkPool: ExecutorService =
+    Executors.newCachedThreadPool { (r: Runnable) =>
+      val t = new Thread(r, "graft-export-sink")
+      t.setDaemon(true); t
+    }
 
   /** Kafka delivers at-least-once; the reference's only dedup backstop
     * is the exact `count(distinct)` in the aggregate (SURVEY B7/§7.3).

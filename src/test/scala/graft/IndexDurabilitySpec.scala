@@ -37,7 +37,8 @@ class IndexDurabilitySpec extends AnyFunSuite {
       MinhashIndex.build(a, s"$root/idx")
       val before = rows(MinhashIndex.query(spark, s"$root/idx", inc))
       // simulated crash: generation files fully written, marker never
-      // published (writeGeneration without commitGeneration)
+      // published (writeGeneration without the `_commits/g<G>` mark
+      // that GenerationStore.merge writes after it)
       MinhashIndex.writeGeneration(b, s"$root/idx", gen = 1L, v = 1L)
       val afterCrash = rows(MinhashIndex.query(spark, s"$root/idx", inc))
       assert(afterCrash == before,
