@@ -9,31 +9,40 @@ import scala.collection.mutable.ArrayBuffer
 
 import org.apache.arrow.memory.RootAllocator
 import org.apache.arrow.vector._
-import org.apache.arrow.vector.complex.{ListVector, StructVector}
 import org.apache.arrow.vector.ipc.{ArrowFileReader, ArrowFileWriter}
-import org.apache.arrow.vector.ipc.message.ArrowRecordBatch
 import org.apache.arrow.vector.types.{FloatingPointPrecision, TimeUnit => ATimeUnit}
 import org.apache.arrow.vector.types.pojo.{ArrowType, Field, FieldType, Schema => ASchema}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 import graft.sources.Tables
+import graft.sources.arrow.ArrowScan
 
 /** Arrow IPC interchange — the reference's native data plane. The
   * reference moves every record as Arrow: Kafka messages decode into
   * Arrow record batches (bufarrow builders, batches of 122880 rows —
-  * /root/reference/main.go:88,249) which DuckDB ingests via
-  * ArrowScan. Spark's internal columnar format is Tungsten, so parity
-  * here means the INTERCHANGE surface: export any DataFrame as Arrow
-  * IPC files a non-JVM consumer (DuckDB, pyarrow, an inference stack)
-  * maps zero-copy, and read such files back with a declared schema —
-  * the same role [[Jsonl]] plays for text consumers, at columnar
-  * speed.
+  * the reference's main.go:88,249) which DuckDB ingests via ArrowScan.
+  * Spark's internal columnar format is Tungsten, so parity here means
+  * the INTERCHANGE surface: export any DataFrame as Arrow IPC files a
+  * non-JVM consumer (DuckDB, pyarrow, an inference stack) maps
+  * zero-copy, and read such files back with a declared schema — the
+  * same role [[Jsonl]] plays for text consumers, at columnar speed.
+  *
+  * ONE codec: the `graft-arrow` DataSource V2 format
+  * ([[graft.sources.arrow]]) moves the values in both directions —
+  * catalyst rows into vectors through `ArrowCatalystWrite`, vectors
+  * back into catalyst values (or whole `ColumnarBatch`es) through
+  * `ArrowCatalyst`. [[exportArrow]] and [[readArrow]] are the operator
+  * spellings of that format's write and read; [[streamingArrowShards]]
+  * is its streaming sink. This object holds what every path of the
+  * format shares: the schema mapping, the writer constructor and IPC
+  * codecs, the footer stats ([[StatsTracker]], the `_stats.tsv` /
+  * `_blooms.tsv` manifests), file packing, the Hadoop read channel,
+  * publish arbitration and the staging swap — plus the oracle rows.
   *
   * Scale shape, both directions narrow per-partition codec passes:
   *  - export writes one `.arrows` file per partition under the same
@@ -63,18 +72,17 @@ import graft.sources.Tables
   * timestamp-micro (TZ and NTZ), date-day — plus arbitrary nesting of
   * struct and list over those members (struct-of-struct, list of
   * struct, struct holding a list, list of list), implemented through
-  * both the schema mapping AND the value codecs (write, row read, and
-  * the DSv2 catalyst read). The reference's data plane is itself a
-  * nested Arrow schema (bufarrow derives a 22-message struct tree from
-  * the proto type, /root/reference/main.go:203,
-  * proto/bidrequest.proto:7-347), so a flat-only interchange could not
-  * carry the raw `bidreq` frame; with nesting closed over the primitive
-  * set it can. Anything outside the set (map, decimal, interval, other
-  * timestamp units) fails loudly at plan time with the field name,
-  * never silently as a corrupt file — and a failed or crashed export
-  * can never harm a pre-existing destination: files stage in a hidden
-  * sibling directory that replaces the target only after the marker is
-  * durable.
+  * the schema mapping here and the format's two catalyst codecs. The
+  * reference's data plane is itself a nested Arrow schema (bufarrow
+  * derives a 22-message struct tree from the proto type, the
+  * reference's main.go:203 and proto/bidrequest.proto:7-347), so a
+  * flat-only interchange could not carry the raw `bidreq` frame; with
+  * nesting closed over the primitive set it can. Anything outside the
+  * set (map, decimal, interval, other timestamp units) fails loudly at
+  * plan time with the field name, never silently as a corrupt file —
+  * and a failed or crashed export can never harm a pre-existing
+  * destination: files stage in a hidden sibling directory that
+  * replaces the target only after the marker is durable.
   */
 object ArrowInterchange {
 
@@ -470,114 +478,27 @@ object ArrowInterchange {
     }
   }
 
-  /** Export `df` as `part-N.arrows` IPC files under `path` (replaced
-    * wholesale). Distributed: each partition streams its rows through
-    * one [[ArrowFileWriter]] in [[batchRows]]-row record batches —
-    * no driver collection, off-heap bounded by one batch per task.
-    * Task retries write attempt-unique temp files and publish by
-    * rename, first attempt wins (same discipline as the index
-    * artifacts' staged writes). A `_SUCCESS` marker is written LAST —
-    * [[readArrow]] requires it, so a reader can never mistake a
-    * crashed half-export for the complete data set. */
+  /** Export `df` as `part-N.arrows` IPC files under `path`, replaced
+    * wholesale: `df.write.format("graft-arrow")` after part sizing
+    * ([[ExportSizing.sizeUp]] — one file per partition, repartitioned UP
+    * so no file exceeds [[DefaultMaxPartBytes]] of estimated row data).
+    * Each task streams its rows through one [[ArrowFileWriter]] in
+    * `batchRows`-row record batches — no driver collection, off-heap
+    * bounded by one batch per task — and publishes its file with
+    * first-attempt-wins arbitration ([[publishNoReplace]]). The files
+    * stage in a hidden sibling directory that replaces `path` only
+    * after the `_SUCCESS` marker is durable: [[readArrow]] requires the
+    * marker, and a failed export leaves a pre-existing destination
+    * untouched. Per-file equality blooms are the format's
+    * `bloomColumns`/`bloomFpp`/`bloomNdv` write options. */
   def exportArrow(df: DataFrame, path: String,
                   batchRows: Int = DefaultBatchRows,
-                  maxPartBytes: Long = DefaultMaxPartBytes,
-                  compression: String = "none",
-                  bloom: String = ""): Unit = {
-    val spark = df.sparkSession
-    val schema = df.schema
-    toArrowSchema(schema) // validate the type surface up front, on the driver
-    codecType(compression) // …and the codec name, before any job runs
-    if (bloom.nonEmpty) // …and the bloom spec's column names and types
-      ArrowBloom.validate(
-        bloom.split(":", 3)(2).split(',').map(_.trim).toSeq, schema)
-    val sized = ExportSizing.sizeUp(df, maxPartBytes)
-
-    val sconf = new SerConf(spark.sessionState.newHadoopConf())
-    val out = new Path(path)
-    val dfs = out.getFileSystem(sconf.conf)
-    // Stage the whole export in a hidden SIBLING directory and swap in
-    // only after every task succeeded and the marker is written: a job
-    // that fails mid-flight (OOM, bad data, lost executors) must leave
-    // a pre-existing destination untouched — delete-then-write would
-    // destroy it before the job could fail.
-    val parent = Option(out.getParent).getOrElse(
-      throw new IllegalArgumentException(
-        s"exportArrow: cannot export to a filesystem root ($path)"))
-    val stagingPath =
-      new Path(parent, s".${out.getName}.staging-${java.util.UUID.randomUUID()}")
-    val staging = stagingPath.toString
-    dfs.mkdirs(stagingPath)
-    try {
-      val written = sized.rdd.mapPartitionsWithIndex { (idx, rows) =>
-        if (rows.isEmpty) Iterator.empty
-        else {
-          NioAccess.ensureOpen(classOf[RootAllocator]) // executor JVMs too
-          val fs = new Path(staging).getFileSystem(sconf.conf)
-          val attempt = Option(TaskContext.get())
-            .map(_.taskAttemptId()).getOrElse(0L)
-          val tmp = new Path(staging, s".part-$idx-$attempt.arrows.tmp")
-          val fin = new Path(staging, f"part-$idx%05d.arrows")
-          val alloc = new RootAllocator(Long.MaxValue)
-          try {
-            val root = VectorSchemaRoot.create(toArrowSchema(schema), alloc)
-            val ch = java.nio.channels.Channels.newChannel(fs.create(tmp, true))
-            // the footer serializes at end(); the map is captured by
-            // reference, so the row count lands in it before then
-            val meta = new java.util.HashMap[String, String]()
-            val w = newFileWriter(root, ch, meta, compression)
-            val stats = new StatsTracker(schema, bloom)
-            try {
-              w.start()
-              var n = 0
-              var total = 0L
-              while (rows.hasNext) {
-                writeRow(root, schema, rows.next(), n)
-                n += 1; total += 1
-                if (n == batchRows) {
-                  root.setRowCount(n); w.writeBatch()
-                  stats.update(root, n); clear(root); n = 0
-                }
-              }
-              if (n > 0) {
-                root.setRowCount(n); w.writeBatch(); stats.update(root, n)
-              }
-              meta.put(RowsMetaKey, total.toString)
-              stats.stamp(meta)
-              w.end()
-            } finally { w.close(); ch.close(); root.close() }
-            // only the attempt whose bytes actually stand may describe
-            // the file — a publish-race loser's stats would belong to
-            // its own discarded temp (the file then falls back to its
-            // footer, which is always authoritative)
-            val won = publishNoReplace(fs, tmp, fin)
-            import scala.jdk.CollectionConverters._
-            if (won) Iterator.single((fin.getName, meta.asScala.toMap))
-            else Iterator.empty
-          } finally alloc.close()
-        }
-      }.collect().toSeq
-      val entries =
-        if (listArrows(dfs, stagingPath).nonEmpty) written
-        else {
-          // every partition was empty: write one schema-only file so the
-          // read-back is an empty frame with the declared schema, not a
-          // loud no-files failure (JSONL's empty export reads back empty
-          // the same way)
-          writeSchemaOnly(dfs, new Path(stagingPath, "part-00000.arrows"), schema)
-          Seq(("part-00000.arrows", Map(RowsMetaKey -> "0")))
-        }
-      writeStatsManifest(dfs, stagingPath, entries)
-      dfs.create(new Path(stagingPath, "_SUCCESS"), true).close()
-    } catch { case t: Throwable =>
-      // failures up to here never touched the destination: staging is
-      // disposable
-      try dfs.delete(stagingPath, true) catch { case _: Throwable => () }
-      throw t
-    }
-    // swap OUTSIDE the cleanup scope: once the old destination is
-    // deleted, staging is the only copy and must survive any failure
-    publishStaged(dfs, stagingPath, out)
+                  compression: String = "none"): Unit = {
+    toArrowSchema(df.schema) // the type surface, before any job, naming the field
+    ExportSizing.sizeUp(df, DefaultMaxPartBytes).write.format("graft-arrow")
+      .option("batchRows", batchRows.toLong)
+      .option("compression", compression)
+      .mode("overwrite").save(path)
   }
 
   /** Per-directory stats manifest: the same footer metadata every file
@@ -678,8 +599,8 @@ object ArrowInterchange {
   }
 
   /** One `.arrows` file carrying the schema and zero batches — how an
-    * all-empty frame stays readable with its declared schema (shared by
-    * [[exportArrow]] and the DSv2 writer's empty-input commit). */
+    * all-empty frame stays readable with its declared schema (the
+    * format's commits of an empty input, CREATE TABLE's first shard). */
   private[graft] def writeSchemaOnly(fs: FileSystem, file: Path,
                                      schema: StructType): Unit = {
     NioAccess.ensureOpen(classOf[RootAllocator])
@@ -693,26 +614,40 @@ object ArrowInterchange {
     } finally alloc.close()
   }
 
-  /** The file's footer custom metadata (row count, zone-map stats) —
-    * one footer read, no record batch loaded. */
-  private[graft] def footerMeta(fs: FileSystem, file: String,
-                                len: Long): Map[String, String] =
+  /** The footer metadata (row count, zone-map stats, null counts) of a
+    * file no `_stats.tsv` manifest covers — the one fallback read behind
+    * every answer served from stats instead of rows: COUNT(*), MIN/MAX,
+    * zone-map pruning. The footer must declare `declared`, the
+    * directory's schema, as the row readers require: stats are keyed by
+    * column ordinal, so a stray file from another export would
+    * otherwise add its rows to a COUNT(*) and its own columns' ranges
+    * to a MIN/MAX. With `countRows`, a file whose writer stamped no
+    * [[RowsMetaKey]] (pyarrow etc.) is counted by walking its record
+    * batches (loads bodies — the correctness fallback). */
+  private[graft] def footerMeta(fs: FileSystem, file: String, len: Long,
+                                declared: StructType,
+                                countRows: Boolean = false)
+      : Map[String, String] =
     withFooterReader(fs, file, len) { r =>
       import scala.jdk.CollectionConverters._
-      r.getMetaData.asScala.toMap
-    }
-
-  /** The file's row count, footer-only when the writer stamped
-    * [[RowsMetaKey]]; otherwise by walking the record batches (loads
-    * bodies — correctness fallback for externally-written files). */
-  private[graft] def fileRows(fs: FileSystem, file: String, len: Long): Long =
-    withFooterReader(fs, file, len) { r =>
-      Option(r.getMetaData.get(RowsMetaKey)).map(_.toLong).getOrElse {
+      val got = fromArrowSchema(r.getVectorSchemaRoot.getSchema)
+      if (got != declared) throw mixedExports(file, got, declared)
+      val meta = r.getMetaData.asScala.toMap
+      if (!countRows || meta.contains(RowsMetaKey)) meta
+      else {
         var total = 0L
         while (r.loadNextBatch()) total += r.getVectorSchemaRoot.getRowCount
-        total
+        meta + (RowsMetaKey -> total.toString)
       }
     }
+
+  /** The failure for a file whose footer schema is not the directory's
+    * (the first file's): read by position, it would misread. */
+  private[graft] def mixedExports(file: String, got: StructType,
+                                  declared: StructType): IllegalStateException =
+    new IllegalStateException(
+      s"$file declares schema $got but the directory's first file " +
+        s"declares $declared — mixed exports in one dir")
 
   /** Publish `tmp` as `fin` with fail-if-present semantics per
     * filesystem (GraftTable's arbitration, same rationale): POSIX
@@ -751,89 +686,6 @@ object ArrowInterchange {
     val it = root.getFieldVectors.iterator()
     while (it.hasNext) it.next().reset()
   }
-
-  /** floorDiv, not `/`: getTime carries the (non-negative) fractional
-    * second, so truncating division shifts pre-1970 fractional
-    * timestamps forward a whole second. Mirrors the read side. */
-  private def micros(ts: java.sql.Timestamp): Long =
-    Math.multiplyExact(Math.floorDiv(ts.getTime, 1000L), 1000000L) +
-      ts.getNanos / 1000L
-
-  private def microsNtz(dt: java.time.LocalDateTime): Long =
-    Math.multiplyExact(dt.toEpochSecond(java.time.ZoneOffset.UTC), 1000000L) +
-      dt.getNano / 1000L
-
-  private def writeRow(root: VectorSchemaRoot, schema: StructType,
-                       row: Row, i: Int): Unit = {
-    var c = 0
-    while (c < schema.length) {
-      val vec = root.getVector(c)
-      if (!row.isNullAt(c)) writeValue(vec, schema(c).dataType, row.get(c), i)
-      // explicit setNull: advances ListVector offsets (lastSet) so later
-      // slots land right; a harmless no-op for fixed/variable-width
-      // vectors whose unset bits already read as null
-      else vec.setNull(i)
-      c += 1
-    }
-  }
-
-  private def writeValue(vec: ValueVector, dt: DataType, v: Any, i: Int): Unit =
-    (vec, dt) match {
-      case (b: BitVector, BooleanType) =>
-        b.setSafe(i, if (v.asInstanceOf[Boolean]) 1 else 0)
-      case (x: IntVector, IntegerType) => x.setSafe(i, v.asInstanceOf[Int])
-      case (x: BigIntVector, LongType) => x.setSafe(i, v.asInstanceOf[Long])
-      case (x: Float4Vector, FloatType) => x.setSafe(i, v.asInstanceOf[Float])
-      case (x: Float8Vector, DoubleType) => x.setSafe(i, v.asInstanceOf[Double])
-      case (x: VarCharVector, StringType) =>
-        x.setSafe(i, v.asInstanceOf[String].getBytes(UTF_8))
-      case (x: VarBinaryVector, BinaryType) =>
-        x.setSafe(i, v.asInstanceOf[Array[Byte]])
-      // external rows carry java.sql types by default and java.time
-      // types under spark.sql.datetime.java8API.enabled — accept both
-      case (x: TimeStampMicroTZVector, TimestampType) =>
-        x.setSafe(i, v match {
-          case ts: java.sql.Timestamp => micros(ts)
-          case inst: java.time.Instant =>
-            Math.multiplyExact(inst.getEpochSecond, 1000000L) +
-              inst.getNano / 1000L
-        })
-      case (x: TimeStampMicroVector, TimestampNTZType) =>
-        x.setSafe(i, microsNtz(v.asInstanceOf[java.time.LocalDateTime]))
-      case (x: DateDayVector, DateType) =>
-        x.setSafe(i, v match {
-          case d: java.sql.Date => d.toLocalDate.toEpochDay.toInt
-          case ld: java.time.LocalDate => ld.toEpochDay.toInt
-        })
-      case (lv: ListVector, ArrayType(et, _)) =>
-        val xs = v.asInstanceOf[scala.collection.Seq[Any]]
-        val start = lv.startNewValue(i)
-        val child = lv.getDataVector
-        var j = 0
-        while (j < xs.length) {
-          val e = xs(j)
-          if (e == null) child.asInstanceOf[FieldVector].setNull(start + j)
-          else writeValue(child, et, e, start + j)
-          j += 1
-        }
-        lv.endValue(i, xs.length)
-      case (sv: StructVector, st: StructType) =>
-        // children are independent vectors sharing the row index: mark
-        // the struct slot valid, then recurse per field (null children
-        // set explicitly so variable-width offsets advance, mirroring
-        // writeRow's top-level discipline)
-        sv.setIndexDefined(i)
-        val r = v.asInstanceOf[Row]
-        var k = 0
-        while (k < st.length) {
-          val child = sv.getChildByOrdinal(k)
-          if (r.isNullAt(k)) child.asInstanceOf[FieldVector].setNull(i)
-          else writeValue(child, st(k).dataType, r.get(k), i)
-          k += 1
-        }
-      case (other, t) => throw new IllegalStateException(
-        s"ArrowInterchange: vector ${other.getClass.getSimpleName} / type $t")
-    }
 
   // ----------------------------------------------------------------- read
 
@@ -887,33 +739,35 @@ object ArrowInterchange {
       throw new UnsupportedOperationException("read-only channel")
   }
 
-  /** Read an [[exportArrow]] directory back as a DataFrame. Schema
-    * comes from the first file's IPC footer — declared in the
-    * artifact, never inferred by scanning data. Files bin-pack into
-    * read tasks of ≤ [[DefaultMaxPartBytes]] (`maxTaskBytes`) each —
-    * the same contract as Spark's own file scans — so a directory of
-    * many small parts costs ⌈total/cap⌉ tasks, not one task per file;
-    * a file can't split (IPC framing), so export part sizing remains
-    * the per-task upper bound. Each task holds one record batch
-    * off-heap at a time. Completeness gate: requires the `_SUCCESS`
-    * marker [[exportArrow]] writes last, so a crashed half-export can
-    * never read as complete data. For a directory of `.arrows` files
-    * produced by an EXTERNAL writer (pyarrow etc., which writes no
-    * marker), pass `requireMarker = false` — the caller then owns the
-    * completeness question the marker would have answered. */
+  /** Read an [[exportArrow]] directory — or a `batch_id=N` shard tree
+    * of [[streamingArrowShards]], as ONE packed scan (a year of
+    * micro-batches is 10⁵ shards; a union plan would grow with shard
+    * count) — back as a DataFrame: `spark.read.format("graft-arrow")`
+    * with the marker and task-size options. Schema comes from the first
+    * file's IPC footer — declared in the artifact, never inferred by
+    * scanning data — and every file read must declare the same one.
+    * Whole files bin-pack into read tasks of ≤ `maxTaskBytes` each
+    * ([[packFiles]]); a file can't split (IPC framing), so export part
+    * sizing remains the per-task upper bound.
+    *
+    * Completeness gate, checked HERE rather than at the first action:
+    * the `_SUCCESS` marker [[exportArrow]] writes last (for a shard
+    * tree, every shard's own marker), so a crashed half-export can never
+    * read as complete data, and a directory with no `.arrows` file fails
+    * instead of reading as an empty frame. For `.arrows` files from an
+    * EXTERNAL writer (pyarrow etc., which write no marker), pass
+    * `requireMarker = false` — the caller then owns the completeness
+    * question the marker would have answered. */
   def readArrow(spark: SparkSession, path: String,
                 requireMarker: Boolean = true,
                 maxTaskBytes: Long = DefaultMaxPartBytes): DataFrame = {
-    val conf = spark.sessionState.newHadoopConf()
-    val root = new Path(path)
-    val fs = root.getFileSystem(conf)
-    require(!requireMarker || fs.exists(new Path(root, "_SUCCESS")),
-      s"$path has no _SUCCESS marker: the export did not complete " +
-        "(reading a partial directory would silently drop rows); for " +
-        "externally-written directories pass requireMarker = false")
-    val files = listArrows(fs, root)
-    require(files.nonEmpty, s"no .arrows files under $path")
-    readFiles(spark, conf, files, maxTaskBytes)
+    val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
+    require(ArrowScan.listScanFiles(fs, path, requireMarker).nonEmpty,
+      s"no .arrows files under $path")
+    spark.read.format("graft-arrow")
+      .option("requireMarker", requireMarker)
+      .option("maxTaskBytes", maxTaskBytes)
+      .load(path)
   }
 
   private[graft] def listArrows(fs: FileSystem, root: Path): Seq[(String, Long)] =
@@ -942,125 +796,6 @@ object ArrowInterchange {
     withFooterReader(fs, file, len)(r =>
       fromArrowSchema(r.getVectorSchemaRoot.getSchema))
 
-  /** One scan over an explicit file list: the shared read core of
-    * [[readArrow]] (one directory) and [[readShards]] (all committed
-    * shard directories as ONE plan — not an N-way union that grows
-    * with shard count). */
-  private def readFiles(spark: SparkSession, conf: Configuration,
-                        files: Seq[(String, Long)],
-                        maxTaskBytes: Long): DataFrame = {
-    require(files.nonEmpty, "no .arrows files to read")
-
-    val fs = new Path(files.head._1).getFileSystem(conf)
-    val schema = footerSchema(fs, files.head._1, files.head._2)
-
-    val groups =
-      packFiles(files, maxTaskBytes, spark.sparkContext.defaultParallelism)
-
-    val sconf = new SerConf(conf)
-    val rows = spark.sparkContext
-      .parallelize(groups, groups.size)
-      .mapPartitions { git =>
-        git.flatten.flatMap { case (file, len) =>
-          NioAccess.ensureOpen(classOf[RootAllocator])
-          val fs = new Path(file).getFileSystem(sconf.conf)
-          val alloc = new RootAllocator(Long.MaxValue)
-          val reader = new ArrowFileReader(
-            new HadoopChannel(fs.open(new Path(file)), len), alloc, ReadCodecs)
-          // the directory schema is the FIRST file's footer; a stray
-          // file from another export would otherwise misread by column
-          // position — fail with the file name instead. Any failure
-          // here (unsupported footer type included) must release the
-          // reader and its off-heap allocator, or every task retry
-          // leaks them
-          val declared =
-            try fromArrowSchema(reader.getVectorSchemaRoot.getSchema)
-            catch { case t: Throwable =>
-              reader.close(); alloc.close(); throw t
-            }
-          if (declared != schema) {
-            reader.close(); alloc.close()
-            throw new IllegalStateException(
-              s"$file declares schema $declared but the directory's " +
-                s"first file declares $schema — mixed exports in one dir")
-          }
-          var done = false
-          def finish(): Unit = if (!done) { done = true; reader.close(); alloc.close() }
-          Option(TaskContext.get())
-            .foreach(_.addTaskCompletionListener[Unit](_ => finish()))
-          new Iterator[Row] {
-            private var vroot: VectorSchemaRoot = _
-            private var idx = 0
-            private def advance(): Boolean = {
-              if (done) return false
-              if (vroot != null && idx < vroot.getRowCount) true
-              else if (reader.loadNextBatch()) {
-                vroot = reader.getVectorSchemaRoot; idx = 0
-                if (vroot.getRowCount == 0) advance() else true
-              } else { finish(); false }
-            }
-            override def hasNext: Boolean = advance()
-            override def next(): Row = {
-              if (!advance()) throw new NoSuchElementException
-              val r = readRow(vroot, schema, idx); idx += 1; r
-            }
-          }
-        }
-      }
-    spark.createDataFrame(rows, schema)
-  }
-
-  private def readRow(root: VectorSchemaRoot, schema: StructType, i: Int): Row = {
-    val vals = new Array[Any](schema.length)
-    var c = 0
-    while (c < schema.length) {
-      vals(c) = readValue(root.getVector(c), schema(c).dataType, i)
-      c += 1
-    }
-    Row.fromSeq(vals.toIndexedSeq)
-  }
-
-  private def readValue(vec: ValueVector, dt: DataType, i: Int): Any =
-    if (vec.isNull(i)) null
-    else (vec, dt) match {
-      case (b: BitVector, BooleanType) => b.get(i) == 1
-      case (x: IntVector, IntegerType) => x.get(i)
-      case (x: BigIntVector, LongType) => x.get(i)
-      case (x: Float4Vector, FloatType) => x.get(i)
-      case (x: Float8Vector, DoubleType) => x.get(i)
-      case (x: VarCharVector, StringType) => new String(x.get(i), UTF_8)
-      case (x: VarBinaryVector, BinaryType) => x.get(i)
-      case (x: TimeStampMicroTZVector, TimestampType) =>
-        val us = x.get(i)
-        val ts = new java.sql.Timestamp(Math.floorDiv(us, 1000000L) * 1000L)
-        ts.setNanos((Math.floorMod(us, 1000000L) * 1000L).toInt)
-        ts
-      case (x: TimeStampMicroVector, TimestampNTZType) =>
-        val us = x.get(i)
-        java.time.LocalDateTime.ofEpochSecond(Math.floorDiv(us, 1000000L),
-          (Math.floorMod(us, 1000000L) * 1000L).toInt, java.time.ZoneOffset.UTC)
-      case (x: DateDayVector, DateType) =>
-        java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(x.get(i).toLong))
-      case (lv: ListVector, ArrayType(et, _)) =>
-        val start = lv.getElementStartIndex(i)
-        val end = lv.getElementEndIndex(i)
-        val child = lv.getDataVector
-        val out = new ArrayBuffer[Any](end - start)
-        var j = start
-        while (j < end) { out += readValue(child, et, j); j += 1 }
-        out.toSeq
-      case (sv: StructVector, st: StructType) =>
-        val vals = new Array[Any](st.length)
-        var k = 0
-        while (k < st.length) {
-          vals(k) = readValue(sv.getChildByOrdinal(k), st(k).dataType, i)
-          k += 1
-        }
-        Row.fromSeq(vals.toIndexedSeq)
-      case (other, t) => throw new IllegalStateException(
-        s"ArrowInterchange: vector ${other.getClass.getSimpleName} / type $t")
-    }
-
   // ------------------------------------------------------------- streaming
 
   /** Stream a file source into Arrow IPC shard directories — the
@@ -1086,39 +821,8 @@ object ArrowInterchange {
       .start(outDir)
   }
 
-  /** All committed `batch_id=N` shards of a [[streamingArrowShards]]
-    * run as ONE scan (a year of micro-batches is 10⁵ shards — an
-    * N-way union plan would grow with shard count; the file lists
-    * concatenate into a single packed read instead). Every shard must
-    * carry its `_SUCCESS` marker — one crashed shard fails the read
-    * rather than silently dropping its rows. */
-  def readShards(spark: SparkSession, outDir: String): DataFrame = {
-    val conf = spark.sessionState.newHadoopConf()
-    val root = new Path(outDir)
-    val fs = root.getFileSystem(conf)
-    val shards = fs.listStatus(root)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch_id="))
-      .map(_.getPath).sortBy(_.getName)
-    require(shards.nonEmpty, s"no batch_id=N shards under $outDir")
-    val files = shards.flatMap { shard =>
-      require(fs.exists(new Path(shard, "_SUCCESS")),
-        s"$shard has no _SUCCESS marker: the shard's batch did not " +
-          "complete (reading it would silently drop rows)")
-      listArrows(fs, shard)
-    }.toSeq
-    readFiles(spark, conf, files, DefaultMaxPartBytes)
-  }
-
   // ------------------------------------------------------------ oracle row
 
-  /** q_arrow_roundtrip: documents ⋈ embeddings → Arrow IPC files →
-    * read back → verification projection. Exercises int64, int32,
-    * utf8 (the full corpus text — any encoding defect hash-fails),
-    * float64, boolean and list&lt;float32&gt; through the wire format; the
-    * list column is verified via order-sensitive scalars (in-order
-    * left fold + ends) since the gate's comparator flattens to
-    * strings. The oracle is the same join stated relationally — the
-    * roundtrip must be lossless. */
   /** q_stream_arrow: documents staged as multiple parquet shard files →
     * streamed (≥2 micro-batches) into Arrow IPC shard directories →
     * marker-gated union read-back. The oracle is the source projection
@@ -1136,7 +840,7 @@ object ArrowInterchange {
         s"$root/ckpt", maxFilesPerTrigger = 2)
       q.awaitTermination()
       Scratch.materializeAndClean(root,
-        readShards(spark, s"$root/out").orderBy("doc_id"))
+        readArrow(spark, s"$root/out").orderBy("doc_id"))
     } catch { case e: Throwable =>
       Scratch.rm(new java.io.File(root)); throw e
     }
@@ -1268,11 +972,12 @@ object ArrowInterchange {
     }
   }
 
-  /** q_arrow_write: documents through the DSv2 WRITER
-    * (`df.write.format("graft-arrow")`, catalyst-side codec,
-    * driver-coordinated staging commit) → RDD reader → projection.
-    * Oracle is the source projection — writer and reader must agree
-    * losslessly across the two codec implementations. */
+  /** q_arrow_write: documents through the format's own writer
+    * spelling (`df.write.format("graft-arrow")`, no part sizing,
+    * driver-coordinated staging commit) → [[readArrow]] → projection.
+    * Oracle is the source projection — the catalyst writer and the
+    * columnar read of every column, the full corpus text included, must
+    * agree losslessly. */
   def writeRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     val out = Files.createTempDirectory("graft-arrow-write").toString
     try {
@@ -1287,6 +992,14 @@ object ArrowInterchange {
     }
   }
 
+  /** q_arrow_roundtrip: documents ⋈ embeddings → Arrow IPC files →
+    * read back → verification projection. Exercises int64, int32,
+    * utf8 (the full corpus text — any encoding defect hash-fails),
+    * float64, boolean and list&lt;float32&gt; through the wire format; the
+    * list column is verified via order-sensitive scalars (in-order
+    * left fold + ends) since the gate's comparator flattens to
+    * strings. The oracle is the same join stated relationally — the
+    * roundtrip must be lossless. */
   def roundtrip(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val emb = Tables.embeddings(spark, dir)

@@ -18,21 +18,21 @@ import graft.operators.ArrowInterchange.SerConf
 
 /** DataSource V2 write surface over [[ArrowInterchange]] directories:
   * `df.write.format("graft-arrow").mode("overwrite").save(dir)` — the
-  * standard writer spelling of [[ArrowInterchange.exportArrow]], byte-
-  * format-identical output (the reference's ingest sink is the same
-  * Arrow plane, main.go:253-256). Differences from the operator API:
+  * engine's only Arrow writer; [[ArrowInterchange.exportArrow]] is this
+  * write after part sizing (the reference's ingest sink is the same
+  * Arrow plane, main.go:253-256). Its shape:
   *
   *  - **InternalRow input**: rows arrive in catalyst form (UTF8String,
-  *    micros longs, day ints, ArrayData/InternalRow for nesting), so
-  *    the codec here ([[ArrowCatalystWrite]]) writes vectors without
-  *    the external java.sql/java.time materialization the RDD-based
-  *    exporter pays per row;
+  *    micros longs, day ints, ArrayData/InternalRow for nesting), and
+  *    [[ArrowCatalystWrite]] writes them into vectors with no external
+  *    java.sql/java.time materialization;
   *  - **driver-coordinated commit**: tasks publish attempt-unique temp
-  *    files inside a hidden staging sibling (same link-publish
-  *    arbitration as exportArrow); the staging directory replaces the
-  *    destination only in [[ArrowBatchWrite.commit]], after every task
-  *    committed and `_SUCCESS` is durable — an aborted job deletes the
-  *    staging and the pre-existing destination is never touched.
+  *    files inside a hidden staging sibling (first-attempt-wins link
+  *    arbitration, [[ArrowInterchange.publishNoReplace]]); the staging
+  *    directory replaces the destination only in
+  *    [[ArrowBatchWrite.commit]], after every task committed and
+  *    `_SUCCESS` is durable — an aborted job deletes the staging and
+  *    the pre-existing destination is never touched.
   *
   * OVERWRITE ONLY, by design: the `dir + _SUCCESS` artifact means
   * "one complete export" — a crash mid-append would leave a directory
@@ -57,7 +57,7 @@ private[arrow] class ArrowWriteBuilder(path: String, info: LogicalWriteInfo,
     val batchRows = option("batchrows").map(_.toInt)
       .getOrElse(ArrowInterchange.DefaultBatchRows)
     // optional IPC body compression (zstd | lz4 | none): validated at
-    // plan time, identical codec path to exportArrow's
+    // plan time, through the one shared writer constructor
     val compression = option("compression").getOrElse("none")
     ArrowInterchange.codecType(compression)
     // optional per-file equality blooms (see ArrowBloom): validated at
@@ -388,7 +388,7 @@ private[arrow] class ArrowBatchWrite(path: String, schema: StructType,
         if (ArrowInterchange.listArrows(fs, dataDir).nonEmpty) entries
         else {
           // all-empty input still reads back as an empty frame WITH the
-          // declared schema (exportArrow's contract)
+          // declared schema
           ArrowInterchange.writeSchemaOnly(fs,
             new Path(dataDir, "part-00000.arrows"), schema)
           Seq(("part-00000.arrows",
@@ -606,7 +606,7 @@ private[arrow] class ArrowDataWriter(staging: String, conf: SerConf,
       // attempt of this partition died AFTER publishing, this attempt's
       // publish loses and its meta belongs to its own discarded temp —
       // report no stats and let the standing file answer from its
-      // footer (same discipline as exportArrow's task path)
+      // footer
       val won = ArrowInterchange.publishNoReplace(fs, tmp, fin)
       import scala.jdk.CollectionConverters._
       if (won) ArrowCommit(fin.getName, rows, meta.asScala.toMap)
@@ -628,9 +628,9 @@ private[arrow] class ArrowDataWriter(staging: String, conf: SerConf,
 }
 
 /** Catalyst value → Arrow vector slot, recursive through list and
-  * struct — the InternalRow twin of `ArrowInterchange.writeValue`
-  * (timestamps are already micros longs, dates day ints, strings
-  * UTF8String: no external materialization). */
+  * struct — the engine's only Arrow vector writer, the inverse of
+  * [[ArrowCatalyst.value]] (timestamps are already micros longs, dates
+  * day ints, strings UTF8String: no external materialization). */
 private[arrow] object ArrowCatalystWrite {
   def writeRow(root: VectorSchemaRoot, schema: StructType,
                row: InternalRow, i: Int): Unit = {

@@ -23,23 +23,33 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.operators.{ArrowBloom, ArrowInterchange, NioAccess}
 
-/** DataSource V2 read surface over [[ArrowInterchange]] directories:
-  * `spark.read.format("graft-arrow").load(dir)`. What the RDD-based
-  * [[ArrowInterchange.readArrow]] cannot give, this does:
+/** DataSource V2 surface over [[ArrowInterchange]] directories, and
+  * the engine's only Arrow codec: `spark.read.format("graft-arrow")
+  * .load(dir)` here, `df.write.format("graft-arrow")` in
+  * [[ArrowWriteBuilder]]. [[ArrowInterchange.readArrow]] and
+  * [[ArrowInterchange.exportArrow]] are the operator spellings of the
+  * same read and write. The read side:
   *
   *  - **column pruning reaches the file**: the scan builder receives
   *    the pruned schema ([[SupportsPushDownRequiredColumns]]) and the
   *    reader decodes ONLY those vectors — a 2-column projection over a
-  *    12-column corpus skips ten columns' per-row decode entirely,
-  *    which is the point of a columnar interchange format;
-  *  - **InternalRow output**: values land in catalyst form directly
-  *    (UTF8String bytes, micros longs, day ints), skipping the
-  *    external-Row materialization and re-conversion the RDD path pays.
+  *    12-column corpus skips ten columns' decode entirely, which is the
+  *    point of a columnar interchange format;
+  *  - **catalyst output**: record batches are vended as
+  *    [[ColumnarBatch]]es over the Arrow buffers, or — when nested
+  *    pruning narrows a struct — decoded row by row straight into
+  *    catalyst form by [[ArrowCatalyst.value]] (UTF8String bytes,
+  *    micros longs, day ints), with no external-Row conversion;
+  *  - **answers from stats**: un-grouped COUNT(*) and MIN/MAX answer
+  *    from the stamped footer stats, and pushed filters skip files
+  *    whose zone maps or blooms prove them empty.
   *
-  * Same completeness and layout contracts as readArrow: `_SUCCESS`
-  * required unless `requireMarker=false`, whole files bin-packed into
-  * tasks by [[ArrowInterchange.packFiles]], schema declared by the
-  * first file's footer and enforced per file.
+  * Completeness and layout: `_SUCCESS` required unless
+  * `requireMarker=false` (for a `batch_id=N` shard tree, every shard's
+  * own marker), whole files bin-packed into tasks by
+  * [[ArrowInterchange.packFiles]], schema declared by the first file's
+  * footer and enforced per file by every path that reads a footer or
+  * a batch.
   */
 class ArrowSourceProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-arrow"
@@ -269,7 +279,7 @@ private[arrow] class ArrowScanBuilder(path: String, declared: StructType,
       try ArrowScan.listScanFiles(fs, path, requireMarker)
       catch { case _: Exception => return false } // scan surfaces errors
     val metas: Seq[Map[String, String]] =
-      try ArrowFileSkip.fileMetas(fs, files)
+      try ArrowFileSkip.fileMetas(fs, files, declared)
       catch { case _: Exception => return false }
     val rowCounts = metas.map(_.get(ArrowInterchange.RowsMetaKey)
       .flatMap(s => scala.util.Try(s.toLong).toOption))
@@ -361,10 +371,10 @@ private[arrow] class ArrowScanBuilder(path: String, declared: StructType,
     if (statsAggRow.isDefined)
       new ArrowStatsAggScan(path, statsAggRow.get._1, statsAggRow.get._2)
     else if (countCols > 0)
-      new ArrowCountScan(path, countCols, requireMarker, maxTaskBytes)
+      new ArrowCountScan(path, declared, countCols, requireMarker,
+        maxTaskBytes)
     else new ArrowScan(path, declared, required, requireMarker, maxTaskBytes,
-      Option(opts.get("columnar")).forall(_.toBoolean), limit,
-      skips.toSeq,
+      limit, skips.toSeq,
       Option(opts.get("maxshardspertrigger")).map(_.toLong))
   }
 }
@@ -476,10 +486,12 @@ private[arrow] object ArrowFileSkip {
     * bounded pool so plan-time metadata never serializes one remote
     * open per file (shared by the stats-served aggregate push; the
     * zone-map prune keeps its own decide-in-pool path). Throws on an
-    * unreadable footer — callers decline their optimization and let
-    * the scan surface the real error. */
+    * unreadable footer or one that does not declare `declared` —
+    * callers decline their optimization and let the scan surface the
+    * real error. */
   def fileMetas(fs: org.apache.hadoop.fs.FileSystem,
-                files: Seq[(String, Long)]): Seq[Map[String, String]] = {
+                files: Seq[(String, Long)],
+                declared: StructType): Seq[Map[String, String]] = {
     val manifests: Map[Path, Map[String, Map[String, String]]] =
       files.map(f => new Path(f._1).getParent).distinct
         .flatMap(d =>
@@ -503,7 +515,7 @@ private[arrow] object ArrowFileSkip {
           i -> pool.submit(
             new java.util.concurrent.Callable[Map[String, String]] {
               override def call(): Map[String, String] =
-                ArrowInterchange.footerMeta(fs, f, len)
+                ArrowInterchange.footerMeta(fs, f, len, declared)
             })
         }.map { case (i, fut) => i -> fut.get() }.toMap
         finally pool.shutdown()
@@ -564,7 +576,7 @@ private[arrow] object ArrowFileSkip {
             pool.submit(new java.util.concurrent.Callable[Boolean] {
               override def call(): Boolean =
                 try skippable(skips, declared,
-                  ArrowInterchange.footerMeta(fs, f, len))
+                  ArrowInterchange.footerMeta(fs, f, len, declared))
                 catch { case _: Exception => false }
             })
           }
@@ -719,16 +731,12 @@ private[arrow] object ArrowFileSkip {
   }
 }
 
-private[arrow] object ArrowScan {
+private[graft] object ArrowScan {
   import ArrowInterchange.{SerConf, listArrows, packFiles}
 
-  /** The shared plan step: marker gate, file listing, zone-map file
-    * pruning (when filters are pushed — one footer read per file, the
-    * same plan-time cost shape as parquet's footer reads), bin-packing.
-    * Returns the partitions plus (kept, total) file counts for the
-    * scan description. */
   /** Marker-gated file listing shared by the row scan, the COUNT(*)
-    * scan, and the stats-served aggregate path: a shard tree
+    * scan, the stats-served aggregate path and
+    * [[ArrowInterchange.readArrow]]'s up-front check: a shard tree
     * (batch_id=N dirs) lists every committed shard's files, a plain
     * export dir keeps the root-marker contract. */
   def listScanFiles(fs: org.apache.hadoop.fs.FileSystem, path: String,
@@ -751,6 +759,11 @@ private[arrow] object ArrowScan {
     }
   }
 
+  /** The shared plan step: marker gate, file listing, zone-map file
+    * pruning (when filters are pushed — one footer read per file, the
+    * same plan-time cost shape as parquet's footer reads), bin-packing.
+    * Returns the partitions plus (kept, total) file counts for the
+    * scan description. */
   def planPartitions(path: String, requireMarker: Boolean,
                      maxTaskBytes: Long,
                      skips: Seq[org.apache.spark.sql.sources.Filter] = Nil,
@@ -774,7 +787,6 @@ private[arrow] object ArrowScan {
 private[arrow] class ArrowScan(path: String, declared: StructType,
                                required: StructType, requireMarker: Boolean,
                                maxTaskBytes: Long,
-                               columnar: Boolean = true,
                                limit: Int = -1,
                                skips: Seq[org.apache.spark.sql.sources.Filter] = Nil,
                                maxShardsPerTrigger: Option[Long] = None)
@@ -877,7 +889,7 @@ private[arrow] class ArrowScan(path: String, declared: StructType,
     parts
   }
   override def createReaderFactory(): PartitionReaderFactory =
-    new ArrowReaderFactory(declared, required, columnar, limit)
+    new ArrowReaderFactory(declared, required, limit)
   override def toMicroBatchStream(
       checkpointLocation: String): streaming.MicroBatchStream =
     new ArrowMicroBatchStream(path, declared, required, maxTaskBytes,
@@ -917,7 +929,8 @@ private[arrow] final case class ArrowStatsAggPartition(values: Array[Any])
 /** COUNT(*) scan: one row per task carrying the partial count of its
   * packed files, read footer-only via the stamped row-count metadata
   * (batch-walk fallback for external files). Spark sums the partials. */
-private[arrow] class ArrowCountScan(path: String, countCols: Int,
+private[arrow] class ArrowCountScan(path: String, declared: StructType,
+                                    countCols: Int,
                                     requireMarker: Boolean,
                                     maxTaskBytes: Long)
     extends Scan with Batch {
@@ -929,10 +942,11 @@ private[arrow] class ArrowCountScan(path: String, countCols: Int,
   override def planInputPartitions(): Array[InputPartition] =
     ArrowScan.planPartitions(path, requireMarker, maxTaskBytes)._1
   override def createReaderFactory(): PartitionReaderFactory =
-    new ArrowCountReaderFactory(countCols)
+    new ArrowCountReaderFactory(declared, countCols)
 }
 
-private[arrow] class ArrowCountReaderFactory(countCols: Int)
+private[arrow] class ArrowCountReaderFactory(declared: StructType,
+                                             countCols: Int)
     extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     val part = p.asInstanceOf[ArrowInputPartition]
@@ -941,7 +955,7 @@ private[arrow] class ArrowCountReaderFactory(countCols: Int)
       override def next(): Boolean = !done && { done = true; true }
       override def get(): InternalRow = {
         // one manifest read per distinct parent dir covers most files;
-        // unmanifested ones read their own footers
+        // unmanifested ones read their own (schema-checked) footers
         val manifests = scala.collection.mutable.Map
           .empty[Path, Option[Map[String, Map[String, String]]]]
         val total = part.files.map { case (file, len) =>
@@ -952,7 +966,8 @@ private[arrow] class ArrowCountReaderFactory(countCols: Int)
             .flatMap(_.get(p.getName))
             .flatMap(_.get(ArrowInterchange.RowsMetaKey))
             .flatMap(s => scala.util.Try(s.toLong).toOption)
-            .getOrElse(ArrowInterchange.fileRows(fs, file, len))
+            .getOrElse(ArrowInterchange.footerMeta(fs, file, len, declared,
+              countRows = true)(ArrowInterchange.RowsMetaKey).toLong)
         }.sum
         new GenericInternalRow(Array.fill[Any](countCols)(total))
       }
@@ -967,7 +982,6 @@ private[arrow] final case class ArrowInputPartition(
 
 private[arrow] class ArrowReaderFactory(declared: StructType,
                                         required: StructType,
-                                        columnar: Boolean = true,
                                         limit: Int = -1)
     extends PartitionReaderFactory {
   // Columnar vend is safe only when every required column's type tree
@@ -977,9 +991,7 @@ private[arrow] class ArrowReaderFactory(declared: StructType,
   // a pruned struct would read the wrong children. Top-level pruning
   // (whole columns dropped) stays columnar; nested pruning falls back
   // to the row reader, which resolves struct children by name.
-  // `columnar=false` (reader option) forces the row path — a
-  // measurement/debug knob, not a correctness one.
-  private val columnarSafe = columnar && required.fields.forall { f =>
+  private val columnarSafe = required.fields.forall { f =>
     declared.fields.find(_.name == f.name).exists(_.dataType == f.dataType)
   }
   override def supportColumnarReads(p: InputPartition): Boolean = columnarSafe
@@ -1034,9 +1046,7 @@ private[arrow] class ArrowColumnarReader(p: ArrowInputPartition,
       val fileSchema = fromArrowSchema(reader.getVectorSchemaRoot.getSchema)
       if (fileSchema != declared) {
         closeFile()
-        throw new IllegalStateException(
-          s"$file declares schema $fileSchema but the directory's first " +
-            s"file declares $declared — mixed exports in one dir")
+        throw ArrowInterchange.mixedExports(file, fileSchema, declared)
       }
       true
     }
@@ -1104,9 +1114,7 @@ private[arrow] class ArrowPartitionReader(p: ArrowInputPartition,
       val fileSchema = fromArrowSchema(reader.getVectorSchemaRoot.getSchema)
       if (fileSchema != declared) {
         closeFile()
-        throw new IllegalStateException(
-          s"$file declares schema $fileSchema but the directory's first " +
-            s"file declares $declared — mixed exports in one dir")
+        throw ArrowInterchange.mixedExports(file, fileSchema, declared)
       }
       true
     }

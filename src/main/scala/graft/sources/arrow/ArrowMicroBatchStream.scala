@@ -192,7 +192,7 @@ private[arrow] class ArrowMicroBatchStream(
   // back to the by-name row reader under NESTED schema pruning, where
   // ordinal-based vector wrappers would read the wrong children
   override def createReaderFactory(): PartitionReaderFactory =
-    new ArrowReaderFactory(declared, required, columnar = true)
+    new ArrowReaderFactory(declared, required)
 }
 
 /** Shard-id offset: `next` = first shard id not yet consumed. */

@@ -18,23 +18,29 @@ class ArrowDataSourceSpec extends AnyFunSuite {
   private def tmp(): String =
     Files.createTempDirectory("graft-arrow-dsv2").toString
 
+  /** The frame every export here writes — and the reference its reads
+    * are compared against. */
+  private def frame() =
+    graft.sources.Tables.documents(spark, sf0001)
+      .join(graft.sources.Tables.embeddings(spark, sf0001),
+        col("doc_id") === col("vec_id"))
+      .select(col("doc_id"), col("text"), col("lang"), col("source"),
+        col("n_chars"), col("label"), col("embedding"))
+
   private def export(out: String): Unit =
-    ArrowInterchange.exportArrow(
-      graft.sources.Tables.documents(spark, sf0001)
-        .join(graft.sources.Tables.embeddings(spark, sf0001),
-          col("doc_id") === col("vec_id"))
-        .select(col("doc_id"), col("text"), col("lang"), col("source"),
-          col("n_chars"), col("label"), col("embedding")),
-      out)
+    ArrowInterchange.exportArrow(frame(), out)
 
   test("reads match the RDD reader row for row, schema declared") {
     val out = tmp()
     export(s"$out/t")
     val v2 = spark.read.format("graft-arrow").load(s"$out/t")
-    val rdd = ArrowInterchange.readArrow(spark, s"$out/t")
-    assert(v2.schema == rdd.schema)
+    // the reference is the exported frame itself: its schema as the
+    // wire declares it (every field nullable), and its rows
+    val src = frame()
+    assert(v2.schema == ArrowInterchange.fromArrowSchema(
+      ArrowInterchange.toArrowSchema(src.schema)))
     val a = v2.orderBy("doc_id").collect()
-    val b = rdd.orderBy("doc_id").collect()
+    val b = src.orderBy("doc_id").collect()
     assert(a.length == b.length && a.length > 0)
     a.zip(b).foreach { case (x, y) => assert(x == y) }
   }
@@ -97,7 +103,7 @@ class ArrowDataSourceSpec extends AnyFunSuite {
         aggregate(col("embedding"), lit(0.0d),
           (a, x) => a + x.cast(DoubleType)).as("s"))
       .orderBy("doc_id").collect()
-    val want = ArrowInterchange.readArrow(spark, s"$out/t")
+    val want = frame()
       .select(col("doc_id"),
         aggregate(col("embedding"), lit(0.0d),
           (a, x) => a + x.cast(DoubleType)).as("s"))

@@ -162,7 +162,7 @@ class ArrowInterchangeSpec extends AnyFunSuite {
       .filter(_.getName.startsWith("batch_id=")).sortBy(_.getName)
     assert(shards.length >= 2, "stream must really micro-batch")
     assert(shards.forall(d => new java.io.File(d, "_SUCCESS").exists()))
-    val back = ArrowInterchange.readShards(spark, s"$root/out")
+    val back = ArrowInterchange.readArrow(spark, s"$root/out")
     assert(back.select("id").as[Long].collect().sorted.toSeq
       == (0L until 40L))
     // a replayed batch rewrites exactly its own shard: re-export into
@@ -172,12 +172,12 @@ class ArrowInterchangeSpec extends AnyFunSuite {
     ArrowInterchange.exportArrow(
       spark.createDataFrame(spark.sparkContext.parallelize(rows0.toSeq, 1),
         back.schema), shards.head.getPath)
-    assert(ArrowInterchange.readShards(spark, s"$root/out")
+    assert(ArrowInterchange.readArrow(spark, s"$root/out")
       .select("id").as[Long].collect().sorted.toSeq == (0L until 40L))
     // a crashed shard (marker missing) fails the union read loudly
     assert(new java.io.File(shards.last, "_SUCCESS").delete())
     val e = intercept[IllegalArgumentException] {
-      ArrowInterchange.readShards(spark, s"$root/out").count()
+      ArrowInterchange.readArrow(spark, s"$root/out").count()
     }
     assert(e.getMessage.contains("_SUCCESS"))
   }
@@ -309,6 +309,24 @@ class ArrowInterchangeSpec extends AnyFunSuite {
       .takeWhile(_ != null)
       .map(t => Option(t.getMessage).getOrElse("")).mkString("\n")
     assert(msgs.contains("mixed exports"), s"unexpected failure: $msgs")
+    // MIN/MAX served from footer stats: a stray whose FIRST column is
+    // also a long would fold its own range in by ordinal (and answer
+    // 100) unless its footer schema is checked like the rows are
+    ArrowInterchange.exportArrow((0L until 4L).toDF("v"), s"$out/t2")
+    ArrowInterchange.exportArrow(Seq((100L, "x")).toDF("w", "s"),
+      s"$out/other2")
+    val strayLong = new java.io.File(s"$out/other2").listFiles()
+      .filter(_.getName.endsWith(".arrows")).head
+    java.nio.file.Files.copy(strayLong.toPath,
+      java.nio.file.Paths.get(s"$out/t2/part-zzzzz.arrows"))
+    val e2 = intercept[Exception] {
+      ArrowInterchange.readArrow(spark, s"$out/t2")
+        .agg(min(col("v")), max(col("v"))).collect()
+    }
+    val msgs2 = Iterator.iterate(e2: Throwable)(_.getCause)
+      .takeWhile(_ != null)
+      .map(t => Option(t.getMessage).getOrElse("")).mkString("\n")
+    assert(msgs2.contains("mixed exports"), s"unexpected failure: $msgs2")
   }
 
   test("java8API datetime externals (Instant/LocalDate) export fine") {

@@ -145,7 +145,7 @@ class ArrowStreamReadSpec extends AnyFunSuite {
     writeShard(s"$root/src", 1L, 10L, 20L)
     val df = spark.read.format("graft-arrow").load(s"$root/src")
     assert(df.as[Long].collect().sorted.toSeq == (0L until 20L))
-    // per-shard marker gating carries over from readShards
+    // per-shard marker gating carries over from readArrow
     assert(new java.io.File(s"$root/src/batch_id=1/_SUCCESS").delete())
     val e = intercept[Exception] {
       spark.read.format("graft-arrow").load(s"$root/src").count()

@@ -13,7 +13,7 @@ import graft.operators.ArrowInterchange
   * (`df.writeStream.format("graft-arrow")`): per-epoch shard commits
   * with markers, append mode builds the tree, complete mode replaces
   * it, and the tree is immediately consumable by every reader surface
-  * (batch DSv2, readShards, the streaming source). */
+  * (batch DSv2, readArrow, the streaming source). */
 class ArrowStreamWriteSpec extends AnyFunSuite {
   import SparkTestSession._
 
@@ -44,7 +44,7 @@ class ArrowStreamWriteSpec extends AnyFunSuite {
     // every reader surface consumes the tree identically
     assert(spark.read.format("graft-arrow").load(s"$root/out")
       .select("id").as[Long].collect().sorted.toSeq == (0L until 40L))
-    assert(ArrowInterchange.readShards(spark, s"$root/out")
+    assert(ArrowInterchange.readArrow(spark, s"$root/out")
       .select("id").as[Long].collect().sorted.toSeq == (0L until 40L))
   }
 

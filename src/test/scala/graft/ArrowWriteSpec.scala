@@ -37,14 +37,19 @@ class ArrowWriteSpec extends AnyFunSuite {
     val w = ArrowInterchange.readArrow(spark, s"$out/w")
     val e = ArrowInterchange.readArrow(spark, s"$out/e")
     assert(w.schema == e.schema)
-    // …and the same rows, readable by BOTH readers of either artifact
+    // …and the rows of the exported frame, through either spelling of
+    // the read over either artifact
+    val want = df.orderBy("doc_id").collect()
     val a = w.orderBy("doc_id").collect()
     val b = e.orderBy("doc_id").collect()
-    assert(a.length == b.length && a.length > 0)
-    a.zip(b).foreach { case (x, y) => assert(x == y) }
+    assert(a.length == want.length && a.length > 0)
+    assert(b.length == want.length)
+    a.zip(want).foreach { case (x, y) => assert(x == y) }
+    b.zip(want).foreach { case (x, y) => assert(x == y) }
     val v2 = spark.read.format("graft-arrow").load(s"$out/w")
       .orderBy("doc_id").collect()
-    a.zip(v2).foreach { case (x, y) => assert(x == y) }
+    assert(v2.length == want.length)
+    v2.zip(want).foreach { case (x, y) => assert(x == y) }
   }
 
   test("writes to a fresh directory work; overwrite replaces wholesale") {

@@ -91,7 +91,17 @@ class StreamingPipelineSpec extends AnyFunSuite {
     val cfg = BidPipeline.Config(
       bootstrapServers = "unused:9092", topic = "unused",
       checkpointLocation = tmp("graft-replay-ckpt"), exportRoot = export)
+    // the first two days of sf0.001: a few dozen rows over ~40 hours.
+    // The replay property is per hour directory, and the full sf0.001
+    // batch spans 531 hours — a file per hour per sink per export
+    // dominated this test's time without covering anything more
     val batch = PP.decodeFrames(PP.framedMessages(spark, sf0001))
+      .filter(col("timestamp.seconds") <
+        java.time.Instant.parse("2024-01-03T00:00:00Z").getEpochSecond)
+      .localCheckpoint()
+    assert(batch.select(to_date(timestamp_seconds(
+      col("timestamp.seconds")))).distinct().count() >= 2,
+      "the slice must still cross a day boundary")
     val rawPath = s"$export/${cfg.logname}/raw"
     val aggPath = s"$export/${cfg.logname}/hourly_requests_agg"
 
