@@ -12,6 +12,7 @@ object SparkTestSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.ui.enabled", "false")
+      .config(GraftSession.fileSystemConf)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
