@@ -577,7 +577,8 @@ case class GraftIndexCommand(verb: String, kind: String, root: String,
                              sourceSql: Option[String],
                              threshold: Option[Double] = None)
     extends LeafRunnableCommand {
-  import graft.operators.{DecontamIndex, IndexStore, IvfIndex, MinhashIndex, PqIndex, TermStatsIndex, WinnowIndex}
+  import graft.operators.{DecontamIndex, HnswRouted, IndexStore, IvfIndex,
+    MinhashIndex, PqIndex, TermStatsIndex, WinnowIndex}
 
   override val output: Seq[Attribute] =
     if (verb == "ADMIT") Seq(
@@ -619,6 +620,14 @@ case class GraftIndexCommand(verb: String, kind: String, root: String,
         .orderBy("doc_id")
         .collect().toSeq
     }
+    val stores = Map[String, graft.operators.GenerationStore](
+      "MINHASH" -> MinhashIndex, "WINNOW" -> WinnowIndex,
+      "TERMS" -> TermStatsIndex, "IVF" -> IvfIndex, "PQ" -> PqIndex,
+      "HNSW_ROUTED" -> HnswRouted)
+    def generations: Long = scala.util.Try {
+      val (hfs, p) = IndexStore.fs(spark, root)
+      IndexStore.markedIds(hfs, p, "g").size.toLong
+    }.getOrElse(0L)
     (kind, verb) match {
       case ("MINHASH", "ADMIT") =>
         return admitLog(MinhashIndex.admit(_, root))
@@ -626,40 +635,21 @@ case class GraftIndexCommand(verb: String, kind: String, root: String,
         // same gate, copied-passage flavor: rejection = sharing >=
         // MinSharedFp winnow fingerprints with a landed doc
         return admitLog(WinnowIndex.admit(_, root))
-      case ("MINHASH", "BUILD") => MinhashIndex.build(src, root)
-      case ("MINHASH", "MERGE") => MinhashIndex.merge(src, root)
-      case ("MINHASH", "COMPACT") => MinhashIndex.compact(spark, root)
-      case ("WINNOW", "BUILD") => WinnowIndex.build(src, root)
-      case ("WINNOW", "MERGE") => WinnowIndex.merge(src, root)
-      case ("WINNOW", "COMPACT") => WinnowIndex.compact(spark, root)
-      case ("TERMS", "BUILD") => TermStatsIndex.build(src, root)
-      case ("TERMS", "MERGE") => TermStatsIndex.merge(src, root)
-      case ("TERMS", "COMPACT") => TermStatsIndex.compact(spark, root)
-      case ("DECONTAM", "BUILD") => DecontamIndex.build(src, root)
-      case ("DECONTAM", "MERGE") => DecontamIndex.merge(src, root)
-      case ("IVF", "BUILD") => IvfIndex.build(src, root)
-      case ("IVF", "MERGE") => IvfIndex.merge(src, root)
+      case (k, "BUILD") if stores.contains(k) => stores(k).build(src, root)
+      case (k, "MERGE") if stores.contains(k) => stores(k).merge(src, root)
+      case (k @ ("MINHASH" | "WINNOW" | "TERMS" | "IVF" | "HNSW_ROUTED"),
+            "COMPACT") => stores(k).compact(spark, root)
+      case (k @ ("IVF" | "PQ" | "HNSW_ROUTED"), "VACUUM") =>
+        stores(k).vacuum(spark, root)
       // assign-only ingest: bare (vec_id, v) batches, the index
       // assigns cells against its frozen centroids
       case ("IVF", "INGEST") => IvfIndex.ingest(src, root)
-      case ("IVF", "COMPACT") => IvfIndex.compact(spark, root)
-      case ("IVF", "VACUUM") => IvfIndex.vacuum(spark, root)
-      case ("PQ", "BUILD") => PqIndex.build(src, root)
-      case ("PQ", "MERGE") => PqIndex.merge(src, root)
-      case ("PQ", "VACUUM") => PqIndex.vacuum(spark, root)
-      case ("HNSW_ROUTED", "BUILD") =>
-        graft.operators.HnswRouted.build(src, root)
-      case ("HNSW_ROUTED", "MERGE") =>
-        graft.operators.HnswRouted.merge(src, root)
-      case ("HNSW_ROUTED", "INGEST") =>
-        graft.operators.HnswRouted.ingest(src, root)
-      case ("HNSW_ROUTED", "COMPACT") =>
-        graft.operators.HnswRouted.compact(spark, root)
-      case ("HNSW_ROUTED", "VACUUM") =>
-        graft.operators.HnswRouted.vacuum(spark, root)
+      case ("HNSW_ROUTED", "INGEST") => HnswRouted.ingest(src, root)
+      case ("DECONTAM", "BUILD") => DecontamIndex.build(src, root)
+      case ("DECONTAM", "MERGE") => DecontamIndex.merge(src, root)
       case ("HNSW_ROUTED", "STATS") =>
         // read-only drift observability: O(cells) rows by construction
-        return graft.operators.HnswRouted.stats(spark, root).collect().toSeq
+        return HnswRouted.stats(spark, root).collect().toSeq
       case ("HNSW", "BUILD") | ("HNSW", "MERGE") =>
         if (verb == "BUILD") graft.operators.HnswIndex.build(src, root)
         else graft.operators.HnswIndex.merge(src, root)
@@ -675,17 +665,13 @@ case class GraftIndexCommand(verb: String, kind: String, root: String,
         val (rebuilt, drift) =
           if (kind == "IVF") IvfIndex.rebuildIfDrifted(spark, root, th)
           else PqIndex.rebuildIfDrifted(src, root, th)
-        val gens = scala.util.Try(
-          IndexStore.committedGens(spark, root).size.toLong).getOrElse(0L)
-        return Seq(Row(kind, gens,
+        return Seq(Row(kind, generations,
           if (rebuilt) f"rebuilt (drift $drift%.3f >= $th%.3f)"
           else f"skipped (drift $drift%.3f < $th%.3f)"))
       case other => throw new IllegalArgumentException(
         s"GRAFT INDEX: unsupported verb/kind $other")
     }
-    val gens = scala.util.Try(
-      IndexStore.committedGens(spark, root).size.toLong).getOrElse(0L)
-    Seq(Row(kind, gens, s"${verb.toLowerCase} ok"))
+    Seq(Row(kind, generations, s"${verb.toLowerCase} ok"))
   }
 }
 

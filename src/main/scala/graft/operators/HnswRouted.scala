@@ -25,11 +25,8 @@ import org.apache.spark.sql.types._
   * per-cell rebuilds run in parallel on the executors, cost
   * O(touched cells), and land as one marker-committed generation.
   * Untouched cells' files are never rewritten; readers resolve, per
-  * label, the newest committed generation that carries it. Compaction
-  * folds the generations into one dir per cell (version bump with the
-  * one-version grace), vacuum sweeps crashed merges' orphan dirs, and
-  * writers serialize per root via [[IndexStore.withLock]] — the same
-  * crash discipline as [[IvfIndex]].
+  * label, the newest committed generation that carries it, and
+  * compaction folds the generations into one dir per cell.
   *
   * Exactness contract: a probed cell holding ≤ [[RoutedEf]] vectors is
   * BRUTE-SCANNED (every member scored — provably exhaustive, no
@@ -42,53 +39,44 @@ import org.apache.spark.sql.types._
   * (the same statement the flat [[HnswIndex]] makes about
   * [[HnswIndex.EfSearch]]).
   *
-  * Layout under `indexPath` (crash discipline per [[IndexStore]]):
+  * A [[CellStore]] (centroid model, label-partitioned cells,
+  * build/merge/ingest/compact/vacuum and crash contract in
+  * [[GenerationStore]] and [[IndexStore]]). What differs from
+  * [[IvfIndex]]:
   * {{{
-  *   centroids.v1.parquet        (label, cv) — raw-space cell means,
-  *                               FROZEN at build (re-deriving them is
-  *                               a build, not a merge — the IVF rule).
-  *                               Note the cells persist NORMALIZED
-  *                               vectors only (what beam search
-  *                               needs), so unlike [[IvfIndex]] a
-  *                               centroid re-train cannot run off the
-  *                               index's own rows: drift maintenance
-  *                               is a fresh [[build]] from the source
-  *                               corpus.
   *   cells.v<V>/gen=<G>/label=<L>/  (vec_id, level, nv, nbrs) — cell
-  *                               L's graph rows as of generation G.
-  *                               A generation carries ONLY the cells
-  *                               it rebuilt; per label the newest
-  *                               committed generation serves.
-  *   _commits/g<G>               generation G's publish marker
-  *                               (content = the batch fingerprint,
-  *                               for idempotent retry). Written LAST.
-  *   _commits/{cells.v<V>, centroids.v1}
+  *                 L's graph rows as of generation G. A generation
+  *                 carries ONLY the cells it rebuilt; per label the
+  *                 newest committed generation serves.
+  *   buildstats.v1.parquet  (label, n_build, mean_d2_build) — the
+  *                 frozen build-time reference [[stats]] compares the
+  *                 serving rows against.
   * }}}
+  * The cells persist NORMALIZED vectors only (what beam search needs),
+  * so unlike [[IvfIndex]] a centroid re-train cannot run off the
+  * index's own rows: drift maintenance is a fresh [[build]] from the
+  * source corpus.
   */
-object HnswRouted {
+object HnswRouted extends CellStore("routed HNSW cells") {
 
   /** Query-time beam width per cell — also the cell size up to which
     * the per-cell search brute-scans and is therefore provably
     * exhaustive (the oracle contract). */
   val RoutedEf = 256
 
-  // explicit schema (data + partition columns): readers must never
-  // infer from data files — an uncommitted generation dir may hold a
-  // torn file from a crash, and inference could sample it
-  private val CellSchema = StructType(Seq(
-    StructField("vec_id", LongType),
-    StructField("level", IntegerType),
-    StructField("nv", ArrayType(DoubleType)),
-    StructField("nbrs", ArrayType(ArrayType(LongType))),
-    StructField("gen", LongType),
-    StructField("label", LongType)))
+  private val Cells = new Artifact("", StructType(Seq(
+      StructField("vec_id", LongType),
+      StructField("level", IntegerType),
+      StructField("nv", ArrayType(DoubleType)),
+      StructField("nbrs", ArrayType(ArrayType(LongType))),
+      StructField("gen", LongType),
+      StructField("label", LongType))),
+    derive = cellGraphs, fold = Some(_.repartition(col("label"))),
+    layout = _.write.partitionBy("label"), perLabel = true)
 
-  private def centroidsDir(root: String) = s"$root/centroids.v1.parquet"
-  private def cellsDir(root: String, v: Long) = s"$root/cells.v$v"
-  private def buildStatsDir(root: String) = s"$root/buildstats.v1.parquet"
-
-  private def cellsVersion(spark: SparkSession, root: String): Long =
-    IndexStore.requireVersion(spark, root, "cells.v", "routed HNSW cells")
+  protected def artifacts: Seq[Artifact] = Seq(Cells)
+  override protected val model: Option[Model] =
+    Some(new Model("centroids", trainCells))
 
   /** One graph build for one cell: rows (id, normalized vector) sorted
     * by id — the SAME deterministic insert order a from-scratch build
@@ -104,17 +92,15 @@ object HnswRouted {
     }
   }
 
-  /** Per-cell graphs of `rows` (label, id, normalized v, tag), one
-    * build per cell IN PARALLEL on the executors, written (unmarked,
-    * invisible) as generation `gen` of cells version `v`. ONE shuffle
-    * (on label); id collisions within a cell keep the lowest-tag row
-    * — merge tags existing rows 0 and fresh rows 1, so an id already
+  /** Per-cell graphs of prepared rows (label, id, normalized v, tag),
+    * one build per cell IN PARALLEL on the executors. ONE shuffle (on
+    * label); id collisions within a cell keep the lowest-tag row —
+    * [[prepare]] tags serving rows 0 and fresh rows 1, so an id already
     * in the cell keeps its existing vector. */
-  private def writeCellGraphs(rows: Dataset[(Long, Long, Array[Double], Int)],
-                              root: String, v: Long, gen: Long): Unit = {
+  private def cellGraphs(rows: DataFrame): DataFrame = {
     val spark = rows.sparkSession
     import spark.implicits._
-    rows.groupByKey(_._1)
+    rows.as[(Long, Long, Array[Double], Int)].groupByKey(_._1)
       .flatMapGroups { (label, it) =>
         val arr = it.map(r => (r._2, r._4, r._3)).toArray
           .sortBy { case (id, tag, _) => (id, tag) }
@@ -126,8 +112,6 @@ object HnswRouted {
         cellGraphRows(label, dedup.result())
       }
       .toDF("vec_id", "level", "nv", "nbrs", "label")
-      .write.mode("overwrite").partitionBy("label")
-      .parquet(s"${cellsDir(root, v)}/gen=$gen")
   }
 
   private def typedCorpus(vecs: DataFrame)
@@ -139,69 +123,63 @@ object HnswRouted {
       .as[(Long, Long, Array[Double])]
   }
 
-  /** Build one graph per `label` cell, in parallel, from a
-    * (vec_id, label, v) frame. Root is reset first and the markers
-    * land LAST (cells before centroids, so a crashed build is loudly
-    * unreadable — [[IvfIndex.build]]'s ordering), replacing any prior
-    * index at `indexPath`. */
-  def build(vecs: DataFrame, indexPath: String): Unit =
-    IndexStore.withLock(vecs.sparkSession, indexPath) {
-      val spark = vecs.sparkSession
-      import spark.implicits._
-      val (hfs, p) = IndexStore.fs(spark, indexPath)
-      IndexStore.resetRoot(hfs, p)
-      val typed = typedCorpus(vecs)
-      val fp = IndexStore.batchFingerprint(vecs, "vec_id", "v")
-      // centroids and cell graphs are independent jobs: run concurrently
-      IndexStore.inParallel(
-        () => typed.groupByKey(_._2).mapValues(_._3)
-          .agg(new VectorOps.VecMean(Similarity.Dims).toColumn.name("cv"))
-          .toDF("label", "cv")
-          .coalesce(1).write.mode("overwrite")
-          .parquet(centroidsDir(indexPath)),
-        () => writeCellGraphs(
-          typed.map { case (id, l, v) =>
-            (l, id, VectorOps.l2Normalize(v), 0) },
-          indexPath, 1L, gen = 0L))
-      // freeze the build-time assign-distance distribution per cell —
-      // the reference [[stats]] compares the serving rows against, so
-      // a deployment can SEE drift accumulate and knows when the
-      // documented rebuild-from-source is due. One extra narrow pass;
-      // O(cells) output.
-      writeBuildStats(spark, indexPath, typed.map { case (_, l, v) =>
-        (l, VectorOps.l2Normalize(v)) })
-      IndexStore.mark(hfs, p, "g0", fp)
-      IndexStore.mark(hfs, p, "cells.v1")
-      IndexStore.mark(hfs, p, "centroids.v1")
-    }
-
-  /** Per-cell (n, mean round-6 d² to the cell's NORMALIZED centroid)
-    * over `rows` — written as the frozen build-time reference. Uses
-    * unit-sphere distances because cells persist only normalized
-    * vectors: the comparison [[stats]] makes must be computable from
-    * the index's own serving rows forever after. */
-  private def writeBuildStats(spark: SparkSession, indexPath: String,
-      rows: Dataset[(Long, Array[Double])]): Unit = {
+  /** The cells a (vec_id, label, v) batch rebuilds: its rows, normalized,
+    * plus — past the build — the current serving rows of every cell it
+    * touches. ONLY those cells are rebuilt (in parallel on the
+    * executors, O(touched cells) — the scalable increment the flat
+    * graph can't offer); ids already present keep their existing
+    * vector (the flat [[HnswIndex.merge]] discipline). */
+  protected def prepare(vecs: DataFrame, snap: Snapshot): DataFrame = {
+    val spark = vecs.sparkSession
     import spark.implicits._
-    val bcn = spark.sparkContext.broadcast(normalizedCentroids(spark, indexPath))
-    rows.map { case (l, nv) =>
-        (l, VectorOps.roundAt(VectorOps.dist2(nv, bcn.value(l)), 6)) }
-      .toDF("label", "d2")
-      .groupBy("label")
-      .agg(count(lit(1)).as("n_build"),
-        round(avg(col("d2")), 6).as("mean_d2_build"))
-      .coalesce(1).write.mode("overwrite")
-      .parquet(buildStatsDir(indexPath))
+    val fresh = typedCorpus(vecs)
+      .map { case (id, l, v) => (l, id, VectorOps.l2Normalize(v), 1) }
+    if (snap.gens.isEmpty) return fresh.toDF()
+    // the touched-label set is bounded by the CELL COUNT, never the
+    // corpus — the same O(cells) driver footprint as the probe table
+    val touched = fresh.map(_._1).distinct().collect().sorted
+    warnUnrouted(snap, touched.toSeq)
+    snap.newest(Cells, Some(touched.toSet))
+      .select(col("label"), col("vec_id"), col("nv"))
+      .as[(Long, Long, Array[Double])]
+      .map { case (l, id, nv) => (l, id, nv, 0) }
+      .union(fresh).toDF()
+  }
+
+  /** The frozen model: the centroid table, plus the per-cell (n, mean
+    * round-6 d² to the cell's NORMALIZED centroid) of the build batch —
+    * the build-time reference [[stats]] compares against. Unit-sphere
+    * distances because cells persist only normalized vectors: the
+    * comparison must be computable from the serving rows forever
+    * after. */
+  private def trainCells(vecs: DataFrame): Seq[(String, DataFrame)] = {
+    val spark = vecs.sparkSession
+    import spark.implicits._
+    val cents = centroidsOf(vecs).as[(Long, Array[Double])].collect()
+    Seq("centroids" -> cents.toSeq.toDF("label", "cv"),
+      "buildstats" -> meanD2(typedCorpus(vecs).map { case (_, l, v) =>
+          (l, VectorOps.l2Normalize(v)) }, normalized(cents))
+        .toDF("label", "n_build", "mean_d2_build"))
   }
 
   /** label → l2-normalized centroid (O(cells) on the driver, the
     * family's standing bound). */
-  private def normalizedCentroids(spark: SparkSession, indexPath: String)
-      : Map[Long, Array[Double]] = {
+  private def normalized(cents: Array[(Long, Array[Double])])
+      : Map[Long, Array[Double]] =
+    cents.map { case (l, cv) => l -> VectorOps.l2Normalize(cv) }.toMap
+
+  /** Per label: row count and mean round-6 d² of (label, nv) rows to the
+    * label's normalized centroid. */
+  private def meanD2(rows: Dataset[(Long, Array[Double])],
+                     ncs: Map[Long, Array[Double]]): DataFrame = {
+    val spark = rows.sparkSession
     import spark.implicits._
-    spark.read.parquet(centroidsDir(indexPath))
-      .as[(Long, Array[Double])].collect()
-      .map { case (l, cv) => l -> VectorOps.l2Normalize(cv) }.toMap
+    val bcn = spark.sparkContext.broadcast(ncs)
+    rows.map { case (l, nv) =>
+        (l, VectorOps.roundAt(VectorOps.dist2(nv, bcn.value(l)), 6)) }
+      .toDF("label", "d2")
+      .groupBy("label")
+      .agg(count(lit(1)), round(avg(col("d2")), 6))
   }
 
   /** Drift observability — `GRAFT INDEX STATS HNSW_ROUTED`: one row
@@ -218,18 +196,11 @@ object HnswRouted {
     * corpus shuffle (the aggregation is map-side per label). */
   def stats(spark: SparkSession, indexPath: String): DataFrame = {
     import spark.implicits._
-    IndexStore.requireVersion(spark, indexPath, "centroids.v",
-      "routed HNSW centroids")
-    val bcn = spark.sparkContext.broadcast(normalizedCentroids(spark, indexPath))
-    val now = servingCells(spark, indexPath, None)
-      .select(col("label"), col("nv")).as[(Long, Array[Double])]
-      .map { case (l, nv) =>
-        (l, VectorOps.roundAt(VectorOps.dist2(nv, bcn.value(l)), 6)) }
-      .toDF("label", "d2")
-      .groupBy("label")
-      .agg(count(lit(1)).as("n_now"),
-        round(avg(col("d2")), 6).as("mean_d2_now"))
-    spark.read.parquet(buildStatsDir(indexPath))
+    val snap = snapshot(spark, indexPath)
+    val now = meanD2(snap.read(Cells).select(col("label"), col("nv"))
+        .as[(Long, Array[Double])], normalized(centroids(snap)))
+      .toDF("label", "n_now", "mean_d2_now")
+    snap.model("buildstats")
       .join(now, Seq("label"), "full_outer")
       .select(col("label"), col("n_build"), col("n_now"),
         col("mean_d2_build"), col("mean_d2_now"),
@@ -241,109 +212,6 @@ object HnswRouted {
     * the corpus labels). */
   def build(spark: SparkSession, dir: String, indexPath: String): Unit =
     build(Similarity.corpus(spark, dir), indexPath)
-
-  /** Admit a (vec_id, label, v) batch: ONLY the cells receiving new
-    * vectors are rebuilt — each from its current serving rows plus the
-    * batch, in parallel on the executors, the scalable increment the
-    * flat graph can't offer (its merge replays the whole corpus) —
-    * and land as one marker-committed generation. Centroids stay
-    * frozen. Ids already present keep their existing vector (the flat
-    * [[HnswIndex.merge]] discipline); retry of a committed batch is a
-    * fingerprint-detected no-op; a crash before the marker leaves an
-    * invisible orphan generation for [[vacuum]]. */
-  def merge(vecs: DataFrame, indexPath: String): Unit =
-    IndexStore.withLock(vecs.sparkSession, indexPath) {
-      val spark = vecs.sparkSession
-      import spark.implicits._
-      val gens = IndexStore.committedGens(spark, indexPath)
-      require(gens.nonEmpty,
-        s"no committed routed HNSW index under $indexPath — run build first")
-      val fp = IndexStore.batchFingerprint(vecs, "vec_id", "v")
-      if (!IndexStore.generationCommitted(spark, indexPath, fp)) {
-        val fresh = typedCorpus(vecs)
-          .map { case (id, l, v) => (l, id, VectorOps.l2Normalize(v), 1) }
-        admitBatch(spark, indexPath, fresh, fp, gens)
-      }
-    }
-
-  /** Assign-only INGEST — the streaming-era half of the routed
-    * lifecycle, mirroring [[IvfIndex.ingest]]: the batch arrives as
-    * bare (vec_id, v) vectors and the INDEX assigns each to its
-    * nearest FROZEN centroid (distances round at 6 decimals, ties take
-    * the LOWEST cell label — the exact discipline the query path's
-    * probe selection uses, so the DuckDB oracle restates it row for
-    * row), then ONLY the receiving cells rebuild, exactly like
-    * [[merge]]. Assignment is distributed (centroids broadcast — an
-    * O(cells) array, never the corpus). */
-  def ingest(vecs: DataFrame, indexPath: String): Unit =
-    IndexStore.withLock(vecs.sparkSession, indexPath) {
-      val spark = vecs.sparkSession
-      import spark.implicits._
-      val gens = IndexStore.committedGens(spark, indexPath)
-      require(gens.nonEmpty,
-        s"no committed routed HNSW index under $indexPath — run build first")
-      val fp = IndexStore.batchFingerprint(vecs, "vec_id", "v")
-      if (!IndexStore.generationCommitted(spark, indexPath, fp)) {
-        IndexStore.requireVersion(spark, indexPath, "centroids.v",
-          "routed HNSW centroids")
-        val cents = spark.read.parquet(centroidsDir(indexPath))
-          .as[(Long, Array[Double])].collect().sortBy(_._1)
-        val bc = spark.sparkContext.broadcast(cents)
-        val fresh = vecs.select(col("vec_id"), col("v"))
-          .as[(Long, Array[Double])]
-          .mapPartitions { it =>
-            val cs = bc.value // label-ascending: strict < keeps ties low
-            it.map { case (id, v) =>
-              var bestL = -1L
-              var bestD = Double.PositiveInfinity
-              cs.foreach { case (l, cv) =>
-                val d = VectorOps.roundAt(VectorOps.dist2(v, cv), 6)
-                if (d < bestD) { bestD = d; bestL = l }
-              }
-              (bestL, id, VectorOps.l2Normalize(v), 1)
-            }
-          }
-        admitBatch(spark, indexPath, fresh, fp, gens)
-      }
-    }
-
-  /** Shared [[merge]]/[[ingest]] tail: rebuild exactly the cells the
-    * (label, id, nv, tag=1) batch touches — from their current serving
-    * rows plus the batch — and commit the result as one generation. */
-  private def admitBatch(spark: SparkSession, indexPath: String,
-                         fresh: Dataset[(Long, Long, Array[Double], Int)],
-                         fp: String, gens: Seq[Long]): Unit = {
-    import spark.implicits._
-    // the touched-label set is bounded by the CELL COUNT, never the
-    // corpus — the same O(cells) driver footprint as the probe table
-    val touched = fresh.map(_._1).distinct().collect().sorted
-    // query-time probe selection iterates the FROZEN centroid table:
-    // a cell whose label has no centroid is committed but never
-    // probed, so its vectors are silently unqueryable — name them
-    // loudly and point at the remedy (ingest assigns labels FROM the
-    // centroids, so only merge's caller-supplied labels can stray)
-    val centLabels = spark.read.parquet(centroidsDir(indexPath))
-      .select(col("label")).as[Long].collect().toSet
-    val unreachable = touched.filterNot(centLabels)
-    if (unreachable.nonEmpty)
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"routed HNSW merge into $indexPath touches label(s) " +
-          s"${unreachable.mkString(",")} with no frozen centroid: " +
-          "their vectors will never be probe-selected at query time " +
-          "— rebuild the index from source to re-train centroids, or " +
-          "use ingest (assign-only) for unlabeled batches")
-    val v = cellsVersion(spark, indexPath)
-    val existing = servingCells(spark, indexPath, Some(touched.toSet))
-      .select(col("label"), col("vec_id"), col("nv"))
-      .as[(Long, Long, Array[Double])]
-      .map { case (l, id, nv) => (l, id, nv, 0) }
-    val g = gens.max + 1
-    // one shuffle on label; the in-group dedup keeps existing rows
-    // over fresh id collisions (tag order)
-    writeCellGraphs(existing.union(fresh), indexPath, v, g)
-    val (hfs, p) = IndexStore.fs(spark, indexPath)
-    IndexStore.mark(hfs, p, s"g$g", fp)
-  }
 
   /** sim_hnsw_routed_incremental: [[build]] on the landed split (cells
     * = the corpus labels), then [[ingest]] the crawl split as BARE
@@ -362,11 +230,8 @@ object HnswRouted {
       build(vecs.filter(col("vec_id") % 10 =!= 3), idx)
       ingest(vecs.filter(col("vec_id") % 10 === 3)
         .select(col("vec_id"), col("v")), idx)
-      val maxGen = IndexStore.committedGens(spark, idx).max
-      val dir2 = cellsDir(idx, cellsVersion(spark, idx))
-      val assigned = spark.read.schema(CellSchema)
-        .option("basePath", dir2).parquet(dir2)
-        .filter(col("gen") === maxGen && col("vec_id") % 10 === 3)
+      val assigned = snapshot(spark, idx).newestGeneration(Cells)
+        .filter(col("vec_id") % 10 === 3)
         .select(col("vec_id"), col("label").as("cell"))
         .orderBy("vec_id")
       Scratch.materializeAndClean(root, assigned)
@@ -375,121 +240,12 @@ object HnswRouted {
     }
   }
 
-  /** Fold the committed generations into cells version V+1 — one dir,
-    * one file set per cell, everything at `gen=<max>` — with the same
-    * write-unmarked / mark / retire-with-grace discipline as
-    * [[IvfIndex.compact]]. Generation markers are untouched (they
-    * carry the retry fingerprints); later merges append gen max+1
-    * into the new version. */
-  def compact(spark: SparkSession, indexPath: String): Unit =
-    IndexStore.withLock(spark, indexPath) {
-      import spark.implicits._
-      val gens = IndexStore.committedGens(spark, indexPath)
-      require(gens.nonEmpty,
-        s"no committed routed HNSW index under $indexPath — run build first")
-      val v = cellsVersion(spark, indexPath)
-      val (hfs, p) = IndexStore.fs(spark, indexPath)
-      // clear the target first: a crashed compact's leftover dir would
-      // survive this retry's single-dir overwrite otherwise
-      IndexStore.deleteTree(hfs,
-        new org.apache.hadoop.fs.Path(cellsDir(indexPath, v + 1)))
-      servingCells(spark, indexPath, None)
-        .select(col("vec_id"), col("level"), col("nv"), col("nbrs"),
-          col("label"))
-        .repartition(col("label"))
-        .write.mode("overwrite").partitionBy("label")
-        .parquet(s"${cellsDir(indexPath, v + 1)}/gen=${gens.max}")
-      IndexStore.mark(hfs, p, s"cells.v${v + 1}")
-      IndexStore.retireVersions(spark, indexPath, "cells.v", v)
-    }
-
-  /** Maintenance: sweep orphan generation dirs left by crashed,
-    * never-retried merges. */
-  def vacuum(spark: SparkSession, indexPath: String): Unit =
-    IndexStore.withLock(spark, indexPath) {
-      val (hfs, _) = IndexStore.fs(spark, indexPath)
-      IndexStore.sweepOrphanGens(hfs,
-        new org.apache.hadoop.fs.Path(
-          cellsDir(indexPath, cellsVersion(spark, indexPath))),
-        IndexStore.committedGens(spark, indexPath).toSet)
-    }
-
-  /** label → the newest COMMITTED generation carrying it, from the
-    * physical tree (one `listStatus` per committed generation dir —
-    * bounded by merges since the last compact, which folds to one).
-    * The tree, not the markers, is the truth: compaction moves every
-    * label to the folded generation without rewriting markers. */
-  private def labelGens(spark: SparkSession, root: String, v: Long)
-      : Map[Long, Long] = {
-    val committed = IndexStore.committedGens(spark, root).toSet
-    val (hfs, _) = IndexStore.fs(spark, root)
-    val dir = new org.apache.hadoop.fs.Path(cellsDir(root, v))
-    if (!hfs.exists(dir)) return Map.empty
-    hfs.listStatus(dir).toSeq
-      .flatMap { st =>
-        val n = st.getPath.getName
-        scala.util.Try(n.stripPrefix("gen=").toLong).toOption
-          .filter(g => n.startsWith("gen=") && committed.contains(g))
-          .toSeq.flatMap { g =>
-            hfs.listStatus(st.getPath).toSeq.flatMap { ls =>
-              scala.util.Try(ls.getPath.getName.stripPrefix("label=").toLong)
-                .toOption.filter(_ => ls.getPath.getName.startsWith("label="))
-                .map(_ -> g)
-            }
-          }
-      }
-      .groupMapReduce(_._1)(_._2)(math.max)
-  }
-
-  /** Past this many serving (gen, label) entries the Catalyst IN
-    * literals are replaced by explicit directory enumeration — the
-    * driver footprint stays O(cells) either way (the family's standing
-    * bound, same as the centroid table and the probe map), but a
-    * 10⁵-literal predicate is a real optimizer cost where a path list
-    * is just strings to the file index. */
-  private[graft] val ServingMapLiteralCap = 100000
-
-  /** Committed serving rows — per label, the newest committed
-    * generation — optionally restricted to `wanted` labels. Under
-    * [[ServingMapLiteralCap]] entries the filter is an OR of
-    * per-generation (gen = G AND label IN (...)) conjuncts over the
-    * two partition columns, so the scan partition-prunes to exactly
-    * the serving dirs. Past the cap the selected `gen=G/label=L`
-    * directories are read DIRECTLY (basePath keeps the partition
-    * columns): pruning by construction, no O(cells) plan literal, and
-    * no reliance on dynamic-partition-pruning heuristics a broadcast
-    * semi-join would need. Both paths are spec-asserted identical. */
-  private def servingCells(spark: SparkSession, root: String,
-                           wanted: Option[Set[Long]]): DataFrame =
-    servingCells(spark, root, wanted, ServingMapLiteralCap)
-
+  /** Serving rows (per label the newest committed generation), `gen`
+    * kept — spec helper for both read paths of [[Snapshot.newest]]. */
   private[graft] def servingCells(spark: SparkSession, root: String,
                                   wanted: Option[Set[Long]],
-                                  literalCap: Int): DataFrame = {
-    val v = cellsVersion(spark, root)
-    val all = labelGens(spark, root, v)
-    val sel = wanted match {
-      case Some(ws) => all.view.filterKeys(ws).toMap
-      case None => all
-    }
-    val dir = cellsDir(root, v)
-    if (sel.isEmpty) return spark.read.schema(CellSchema)
-      .option("basePath", dir).parquet(dir).filter(lit(false))
-    if (sel.size <= literalCap) {
-      val pred = sel.groupBy(_._2).toSeq.sortBy(_._1)
-        .map { case (g, m) =>
-          col("gen") === g && col("label").isin(m.keys.toSeq.sorted: _*)
-        }
-        .reduce(_ || _)
-      spark.read.schema(CellSchema).option("basePath", dir).parquet(dir)
-        .filter(pred)
-    } else {
-      val paths = sel.toSeq.sortBy(_._1)
-        .map { case (l, g) => s"$dir/gen=$g/label=$l" }
-      spark.read.schema(CellSchema).option("basePath", dir)
-        .parquet(paths: _*)
-    }
-  }
+                                  literalCap: Int): DataFrame =
+    snapshot(spark, root).newest(Cells, wanted, literalCap)
 
   /** Answer the standard query set: driver probe selection over the
     * centroid table (identical ordering to [[Similarity.ivfTopK]] —
@@ -498,10 +254,8 @@ object HnswRouted {
     * [[RoutedEf]], beam above), distributed top-k merge. */
   def query(spark: SparkSession, dir: String, indexPath: String): DataFrame = {
     import spark.implicits._
-    IndexStore.requireVersion(spark, indexPath, "centroids.v",
-      "routed HNSW centroids")
-    val cents = spark.read.parquet(centroidsDir(indexPath))
-      .as[(Long, Array[Double])].collect().sortBy(_._1)
+    val snap = snapshot(spark, indexPath)
+    val cents = centroids(snap)
     val qRows = Similarity.corpus(spark, dir)
       .select(col("vec_id"), col("v"))
       .filter(col("vec_id") % Similarity.QueryStride === 0)
@@ -513,10 +267,7 @@ object HnswRouted {
     // probes per cell: label -> [(q_id, normalized query)]
     val probes: Map[Long, Array[(Long, Array[Double])]] = qRows
       .flatMap { case (qId, qv) =>
-        cents.map { case (l, cv) =>
-            (VectorOps.roundAt(VectorOps.dist2(qv, cv), 6), l)
-          }.sorted.take(Similarity.NProbe)
-          .map { case (_, l) => (l, (qId, VectorOps.l2Normalize(qv))) }
+        probe(qv, cents).map(l => (l, (qId, VectorOps.l2Normalize(qv))))
       }
       .groupBy(_._1).map { case (l, hits) =>
         l -> hits.map(_._2).sortBy(_._1)
@@ -525,7 +276,7 @@ object HnswRouted {
     val k = Similarity.K
     val ef = RoutedEf
     // partition-pruned scan: only probed cells' serving dirs are read
-    val cells = servingCells(spark, indexPath, Some(probes.keySet))
+    val cells = snap.newest(Cells, Some(probes.keySet))
       .select(col("vec_id"), col("level"), col("nv"), col("nbrs"),
         col("label"))
       .as[(Long, Int, Array[Double], Array[Array[Long]], Long)]

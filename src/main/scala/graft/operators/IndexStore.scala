@@ -2,16 +2,17 @@ package graft.operators
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.StructType
 
 /** Shared Hadoop-FS plumbing for the persisted indexes: commit markers,
   * write-new-then-retire versioning, the writer lease, and the
-  * generation store ([[GenerationStore]]) that [[MinhashIndex]],
-  * [[WinnowIndex]] and [[TermStatsIndex]] are built on.
-  * [[DecontamIndex]] (Bloom versions) and the vector indexes
-  * ([[IvfIndex]], [[PqIndex]], [[HnswIndex]], [[HnswRouted]]) use the
-  * marker, version and lease helpers directly.
+  * generation store ([[GenerationStore]]) that the text indexes
+  * ([[MinhashIndex]], [[WinnowIndex]], [[TermStatsIndex]]) and the
+  * vector indexes ([[IvfIndex]], [[PqIndex]], [[HnswRouted]]) are built
+  * on. [[HnswIndex]] (one whole graph per version) and
+  * [[DecontamIndex]] (Bloom versions) use the marker, version and lease
+  * helpers directly.
   *
   * Everything goes through Hadoop [[FileSystem]], never `java.io.File`
   * or `java.nio.file`: a 100 TB index lives on HDFS or an object store,
@@ -23,37 +24,47 @@ import org.apache.spark.sql.types.StructType
   * scheme object-store-safe (S3 rename is copy+delete, not atomic).
   *
   * Generation-store layout under an index root, `<P>` being the
-  * family's version-marker prefix (`bands.v`, `store.v`):
+  * family's version-marker prefix (`bands.v`, `store.v`, `cells.v`):
   * {{{
   *   <P><V>/<artifact>/gen=<G>/  a versioned artifact's rows of
   *                  generation G in store version V; compaction folds
   *                  them into version V+1
   *   <artifact>/gen=<G>/         an append-only artifact's rows of
   *                  generation G (never superseded, never versioned)
+  *   <M>.v1.parquet              a frozen model's tables (IVF and
+  *                  routed centroids, PQ codebooks), written by build
+  *                  only, one file each
   *   _commits/g<G>               generation G is complete in every
-  *                  artifact; a merge's marker carries its batch
-  *                  fingerprint
-  *   _commits/<P><V>             store version V is complete
+  *                  artifact; it carries its batch's fingerprint
+  *   _commits/<P><V>             store version V is complete (a store
+  *                  with no versioned artifact has none until a compact)
+  *   _commits/<M>.v1             the model is complete
+  *   _commits/basecount          rows the model was trained on, for
+  *                  the families that report drift
   * }}}
   * Step order, each a no-op for readers until its marker lands:
-  *  - build: reset the root (keeping the lease), write generation 0
-  *    into version 1, mark `g0`, mark `<P>1`;
+  *  - build: reset the root (keeping the lease), train and write the
+  *    model, write generation 0 into version 1, mark `g0` with the
+  *    batch fingerprint, then `<P>1`, then the model;
   *  - merge: under the lock, resolve the snapshot and require a
   *    committed index; a batch whose fingerprint rides in ANY `g`
-  *    marker is a no-op (an at-least-once orchestrator can re-deliver
-  *    an old batch after newer ones landed); otherwise write generation
-  *    `max + 1` into the current version, then mark it. A crash before
-  *    the marker leaves invisible orphans that the retry, recomputing
-  *    the same id, overwrites wholesale;
+  *    marker — the build's included — is a no-op (an at-least-once
+  *    orchestrator can re-deliver an old batch after newer ones
+  *    landed); otherwise write generation `max + 1` into the current
+  *    version, then mark it. A crash before the marker leaves
+  *    invisible orphans that the retry, recomputing the same id,
+  *    overwrites wholesale;
   *  - compact: clear version V+1 (a crashed compact may have staged an
   *    older fold there), fold each versioned artifact's committed rows
   *    into `<P><V+1>/<artifact>/gen=<max>`, mark `<P><V+1>`, retire
-  *    older versions keeping V as the grace copy, and sweep the orphan
-  *    generations of the append-only artifacts;
+  *    older versions keeping V as the grace copy, and sweep orphan
+  *    generations;
+  *  - vacuum: sweep the orphan generations of every artifact in the
+  *    current version;
   *  - read: the artifact's explicit schema (never inferred: an orphan
   *    dir may hold a torn file), `basePath`, and the `gen <= max`
   *    partition filter — exact by the density invariant
-  *    ([[committedGens]]).
+  *    ([[GenerationStore.Snapshot]]).
   *
   * Crash contract every index builds on:
   *  - data files for a version/generation are written FIRST, into a
@@ -173,50 +184,9 @@ private[graft] object IndexStore {
     markers.filter(_.startsWith(prefix))
       .flatMap(n => scala.util.Try(n.stripPrefix(prefix).toLong).toOption)
 
-  /** Sorted committed generation ids (markers `g<G>`).
-    *
-    * DENSITY INVARIANT: generation ids are always assigned as
-    * `committedGens.max + 1` and a crashed merge's orphan is retried at
-    * the SAME id (its dirs are overwritten wholesale), so the committed
-    * ids are exactly `0..max` with no holes, and the only id a physical
-    * orphan dir can carry is `max + 1`. Readers therefore prune
-    * uncommitted (crashed) dirs with the O(1) range predicate
-    * `gen <= max` instead of an `isin` literal list that would grow by
-    * one literal per merged batch forever (a daily-ingest index holds
-    * thousands of generations after a few years — the markers
-    * themselves are tiny files, but a thousand-literal IN predicate in
-    * every query plan is not). */
-  def committedGens(spark: SparkSession, root: String): Seq[Long] = {
-    val (hfs, p) = fs(spark, root)
-    markedIds(hfs, p, "g").sorted
-  }
-
-  /** The newest committed id of marker family `prefix`, failing loudly
-    * when none is committed — a crashed build must never probe
-    * half-written artifacts. */
-  def requireVersion(spark: SparkSession, root: String, prefix: String,
-                     what: String): Long = {
-    val (hfs, p) = fs(spark, root)
-    val vs = markedIds(hfs, p, prefix)
-    require(vs.nonEmpty,
-      s"no committed $what under $root — interrupted build? re-run build")
-    vs.max
-  }
-
-  /** True when batch fingerprint `fp` rides inside ANY committed
-    * generation marker. Retry detection must scan every generation, not
-    * just the newest: an at-least-once orchestrator can re-deliver an
-    * OLD batch after newer ones landed, and re-committing it would
-    * silently double-count its rows in every subsequent query. */
-  def generationCommitted(spark: SparkSession, root: String,
-                          fp: String): Boolean = {
-    val (hfs, p) = fs(spark, root)
-    markedIds(hfs, p, "g")
-      .exists(g => markContent(hfs, p, s"g$g").contains(fp))
-  }
-
   /** Order-independent 64-bit digest of a batch's (id, payload) rows
-    * plus its row count — the [[generationCommitted]] retry token.
+    * plus its row count (leading, `<n>:<hash>`) — a merge's retry
+    * token.
     * `bit_xor`, not `sum`: order-independent AND overflow-free under
     * ANSI mode. */
   def batchFingerprint(df: org.apache.spark.sql.DataFrame,
@@ -227,33 +197,6 @@ private[graft] object IndexStore {
       expr(s"bit_xor(xxhash64($idCol, $payloadCol))").as("h")).head()
     s"${r.getLong(0)}:${if (r.isNullAt(1)) 0L else r.getLong(1)}"
   }
-
-  /** Physical `gen=` partition dirs under `dir` — 1 right after build
-    * or compact (the common serving state), one per landed batch
-    * between maintenance passes. NOT `committedGens.size`: compact
-    * folds the data but keeps the generation markers (they carry the
-    * retry fingerprints), so only the store layout says whether a
-    * query-time re-fold over merged generations is still needed. */
-  def physicalGens(spark: SparkSession, dir: String): Int = {
-    val (hfs, p) = fs(spark, dir)
-    if (!hfs.exists(p)) 0
-    else hfs.listStatus(p).count(_.getPath.getName.startsWith("gen="))
-  }
-
-  /** Sweep orphan `gen=` dirs under `dir` left by crashed, never-retried
-    * merges — everything not in `committed` is unreachable (readers
-    * prune to `gen <= committedMax` and the density invariant pins any
-    * orphan at `max + 1`). */
-  def sweepOrphanGens(hfs: FileSystem, dir: Path,
-                      committed: Set[Long]): Unit =
-    if (hfs.exists(dir))
-      hfs.listStatus(dir).foreach { st =>
-        val n = st.getPath.getName
-        val orphan = n.startsWith("gen=") &&
-          scala.util.Try(n.stripPrefix("gen=").toLong).toOption
-            .exists(g => !committed.contains(g))
-        if (orphan) deleteTree(hfs, st.getPath)
-      }
 
   /** Retire superseded version trees of marker family `prefix` (tree
     * dir name == marker name, e.g. `store.v3`): unmark everything older
@@ -285,7 +228,7 @@ private[graft] object IndexStore {
   /** Wipe an index root for a fresh build WITHOUT destroying the writer
     * arbitration: everything goes except the live lease file (the
     * building writer is holding it — deleting it would hand the root to
-    * a contender mid-build) and the `_fence` marker (fence numbers stay
+    * a contender mid-build) and the `_fence.N` claims (fence numbers stay
     * monotone across rebuilds, so a pre-rebuild zombie still reads as
     * superseded). Build steps must call this, never a bare
     * [[deleteTree]] of the root. */
@@ -442,15 +385,7 @@ private[graft] object IndexStore {
     * fence files are swept after the claim (max stays ours). */
   private def allocateFence(hfs: FileSystem, root: Path): Long = {
     val dir = new Path(root, CommitsDir)
-    // seed above the pre-allocation scheme's content counter too (a
-    // `_fence` marker holding the count), so fence ordering survives
-    // the upgrade of an existing root; the legacy marker is retired
-    // once a fence file exists above it
-    val legacy = markContent(hfs, root, "_fence")
-      .flatMap(c => scala.util.Try(c.toLong).toOption)
-    var n = math.max(
-      markedIds(hfs, root, FencePrefix).maxOption.getOrElse(0L),
-      legacy.getOrElse(0L)) + 1
+    var n = markedIds(hfs, root, FencePrefix).maxOption.getOrElse(0L) + 1
     while (true) {
       val claimed =
         try { hfs.create(new Path(dir, s"$FencePrefix$n"), false).close(); true }
@@ -458,7 +393,6 @@ private[graft] object IndexStore {
       if (claimed) {
         markedIds(hfs, root, FencePrefix).filter(_ < n).foreach(o =>
           unmark(hfs, root, s"$FencePrefix$o"))
-        if (legacy.isDefined) unmark(hfs, root, "_fence")
         return n
       }
       n += 1
@@ -557,11 +491,14 @@ private[graft] object IndexStore {
 
 /** The generation-store protocol of [[IndexStore]] (layout and step
   * order in its Scaladoc), written once. A family object extends it
-  * with its version-marker prefix and supplies three things: its
-  * [[Artifact]]s, how one batch is prepared for them ([[prepare]],
-  * cached while the artifacts are written), and its own query over a
-  * [[Snapshot]]. `what` names the store in the missing-version error. */
-abstract class GenerationStore(versionPrefix: String, what: String) {
+  * with its version-marker prefix, the (id, payload) columns its batch
+  * fingerprint hashes (`(doc_id, text)` for text, `(vec_id, v)` for
+  * vectors), and `what`, which names the store in the missing-version
+  * error. It supplies its [[Artifact]]s, how one batch is prepared for
+  * them ([[prepare]]), optionally a frozen [[Model]], and its own query
+  * over a [[Snapshot]]. */
+abstract class GenerationStore(versionPrefix: String, what: String,
+                               fingerprint: (String, String)) {
   import IndexStore._
 
   /** One parquet table of the store, partitioned by `gen`. `schema`
@@ -571,34 +508,161 @@ abstract class GenerationStore(versionPrefix: String, what: String) {
     * generation compaction writes; without one the artifact is
     * append-only: it lives at `<root>/<dir>` outside the version tree,
     * and compaction only sweeps its orphan generations. `layout` places
-    * rows in files, the same for a generation and a fold. */
+    * rows in files, the same for a generation and a fold. A `perLabel`
+    * artifact is partitioned by `label` and each generation rewrites
+    * whole labels: per label only the newest committed generation
+    * carrying it serves ([[Snapshot.newest]]), and that is what
+    * [[Snapshot.read]] and compaction see. */
   final class Artifact(val dir: String, val schema: StructType,
                        val derive: DataFrame => DataFrame,
                        val fold: Option[DataFrame => DataFrame],
-                       val layout: DataFrame => DataFrameWriter[Row] = _.write)
+                       val layout: DataFrame => DataFrameWriter[Row] = _.write,
+                       val perLabel: Boolean = false)
+
+  /** A frozen model: tables only [[build]] writes, trained on the build
+    * batch, that [[prepare]] reads to assign or encode later batches
+    * (re-training is a build, not a merge). `train` returns them by
+    * name, the first named `name`; each lands as one file,
+    * `<root>/<table>.v1.parquet`, before generation 0, and marker
+    * `<name>.v1` publishes them after it. `countsBase` also publishes
+    * the build batch's row count for [[Snapshot.drift]]. */
+  final class Model(val name: String,
+                    val train: DataFrame => Seq[(String, DataFrame)],
+                    val countsBase: Boolean = false)
 
   protected def artifacts: Seq[Artifact]
-  protected def prepare(docs: DataFrame): DataFrame
+  protected def model: Option[Model] = None
+  /** One batch prepared for the artifacts' `derive`s, against the state
+    * it lands on: at build `snap` has no generations yet, but its model
+    * tables are written. */
+  protected def prepare(batch: DataFrame, snap: Snapshot): DataFrame
+
+  private lazy val versioned = artifacts.exists(_.fold.nonEmpty)
+  private val BaseCount = "basecount"
+
+  /** Past this many serving (gen, label) entries, [[Snapshot.newest]]
+    * lists the serving directories instead of a Catalyst predicate:
+    * the driver holds O(labels) either way, but a 10⁵-literal
+    * predicate is a real optimizer cost where a path list is just
+    * strings to the file index. */
+  private val ServingMapLiteralCap = 100000
 
   /** The committed state one operation reads: the committed generation
-    * ids and the newest committed store version, from one listing of
-    * `_commits/`. */
+    * ids, the newest committed store version and model version, from
+    * one listing of `_commits/`.
+    *
+    * DENSITY INVARIANT: generation ids are always assigned as
+    * `gens.max + 1` and a crashed merge's orphan is retried at the SAME
+    * id (its dirs are overwritten wholesale), so the committed ids are
+    * exactly `0..max` with no holes, and the only id a physical orphan
+    * dir can carry is `max + 1`. Readers therefore prune uncommitted
+    * (crashed) dirs with the O(1) range predicate `gen <= max` instead
+    * of an `isin` list that would grow by one literal per merged batch
+    * forever. */
   final class Snapshot private[GenerationStore] (spark: SparkSession,
-                                                 root: String,
+                                                 val root: String,
                                                  val gens: Seq[Long],
-                                                 val v: Long) {
-    /** The artifact's committed rows (the `gen` column dropped). */
-    def read(a: Artifact): DataFrame = {
+                                                 val v: Long,
+                                                 modelV: Long) {
+    private def scan(a: Artifact): DataFrame = {
       val d = dirOf(root, v, a)
       spark.read.schema(a.schema).option("basePath", d).parquet(d)
-        .filter(col("gen") <= gens.max)
-        .drop("gen")
     }
 
-    /** The artifact's physical `gen=` dirs — see
-      * [[IndexStore.physicalGens]]. */
+    /** The artifact's committed rows (the `gen` column dropped). */
+    def read(a: Artifact): DataFrame =
+      if (a.perLabel) newest(a, None).drop("gen")
+      else scan(a).filter(col("gen") <= gens.max).drop("gen")
+
+    /** The rows the newest committed generation wrote. */
+    def newestGeneration(a: Artifact): DataFrame =
+      scan(a).filter(col("gen") === gens.max).drop("gen")
+
+    /** The artifact's physical `gen=` dirs — 1 right after build or
+      * compact (the common serving state), one per landed batch between
+      * maintenance passes. NOT `gens.size`: compact folds the data but
+      * keeps the generation markers (they carry the retry
+      * fingerprints), so only the layout says whether a query-time
+      * re-fold over merged generations is still needed. */
     def physicalGens(a: Artifact): Int =
-      IndexStore.physicalGens(spark, dirOf(root, v, a))
+      children(new Path(dirOf(root, v, a))).count(_.startsWith("gen="))
+
+    /** A model table (see [[Model]]). */
+    def model(table: String): DataFrame =
+      spark.read.parquet(s"$root/$table.v$modelV.parquet")
+
+    /** Fraction of the artifact's committed rows the frozen model was
+      * never trained on — merges accumulate it, and the model's fit
+      * decays as the live distribution drifts from the build-time one. */
+    def drift(a: Artifact): Double = {
+      val total = read(a).count()
+      if (total == 0L) return 0.0
+      val (hfs, p) = fs(spark, root)
+      val base = markContent(hfs, p, BaseCount).map(_.trim.toLong)
+        .getOrElse(throw new IllegalStateException(
+          s"no $BaseCount marker under $root — re-run build"))
+      math.max(0.0, 1.0 - base.toDouble / total.toDouble)
+    }
+
+    /** Rows of a [[Artifact.perLabel]] artifact, `gen` kept: per label,
+      * the newest committed generation carrying it — found from the
+      * physical tree (one listing per generation dir, bounded by merges
+      * since the last compact), since compaction moves every label to
+      * the folded generation without rewriting markers — optionally
+      * only the `wanted` labels. Up to `literalCap` entries the filter
+      * is an OR of per-generation (gen = G AND label IN (...))
+      * conjuncts over the two partition columns, so the scan
+      * partition-prunes to exactly the serving dirs; past it the
+      * selected `gen=G/label=L` dirs are read directly (`basePath`
+      * keeps the partition columns). */
+    def newest(a: Artifact, wanted: Option[Set[Long]],
+               literalCap: Int = ServingMapLiteralCap): DataFrame = {
+      val dir = dirOf(root, v, a)
+      val serving = idsOf(children(new Path(dir)), "gen=")
+        .filter(_ <= gens.max)
+        .flatMap(g => idsOf(children(new Path(dir, s"gen=$g")), "label=")
+          .map(_ -> g))
+        .groupMapReduce(_._1)(_._2)(math.max)
+        .filter { case (l, _) => wanted.forall(_(l)) }
+      if (serving.isEmpty) scan(a).filter(lit(false))
+      else if (serving.size <= literalCap)
+        scan(a).filter(serving.groupBy(_._2).toSeq.sortBy(_._1)
+          .map { case (g, m) =>
+            col("gen") === g && col("label").isin(m.keys.toSeq.sorted: _*)
+          }
+          .reduce(_ || _))
+      else spark.read.schema(a.schema).option("basePath", dir)
+        .parquet(serving.toSeq.sortBy(_._1)
+          .map { case (l, g) => s"$dir/gen=$g/label=$l" }: _*)
+    }
+
+    /** True when batch fingerprint `fp` rides in ANY committed
+      * generation marker, not just the newest: an at-least-once
+      * orchestrator can re-deliver an OLD batch after newer ones
+      * landed, and re-committing it would silently double-count its
+      * rows in every later query. */
+    private[GenerationStore] def committed(fp: String): Boolean = {
+      val (hfs, p) = fs(spark, root)
+      gens.exists(g => markContent(hfs, p, s"g$g").contains(fp))
+    }
+
+    /** Delete the orphan `gen=` dirs crashed, never-retried merges left
+      * in every artifact of this version — by the density invariant,
+      * those above `gens.max`. */
+    private[GenerationStore] def sweepOrphans(): Unit = {
+      val (hfs, _) = fs(spark, root)
+      artifacts.foreach { a =>
+        val d = new Path(dirOf(root, v, a))
+        idsOf(children(d), "gen=").filter(_ > gens.max)
+          .foreach(g => deleteTree(hfs, new Path(d, s"gen=$g")))
+      }
+    }
+
+    private def children(d: Path): Seq[String] = {
+      val (hfs, _) = fs(spark, root)
+      if (!hfs.exists(d)) Seq.empty
+      else hfs.listStatus(d).toSeq.map(_.getPath.getName)
+    }
   }
 
   protected def snapshot(spark: SparkSession, root: String): Snapshot = {
@@ -607,10 +671,16 @@ abstract class GenerationStore(versionPrefix: String, what: String) {
     val gens = idsOf(markers, "g")
     require(gens.nonEmpty,
       s"no committed index under $root — run build first")
-    val vs = idsOf(markers, versionPrefix)
-    require(vs.nonEmpty,
-      s"no committed $what under $root — interrupted build? re-run build")
-    new Snapshot(spark, root, gens, vs.max)
+    def newest(prefix: String, what: String): Long = {
+      val vs = idsOf(markers, prefix)
+      require(vs.nonEmpty,
+        s"no committed $what under $root — interrupted build? re-run build")
+      vs.max
+    }
+    new Snapshot(spark, root, gens,
+      if (versioned) newest(versionPrefix, what)
+      else idsOf(markers, versionPrefix).maxOption.getOrElse(1L),
+      model.fold(0L)(m => newest(s"${m.name}.v", m.name)))
   }
 
   private def versionDir(root: String, v: Long) = s"$root/$versionPrefix$v"
@@ -624,45 +694,85 @@ abstract class GenerationStore(versionPrefix: String, what: String) {
                     gen: Long): Unit =
     a.layout(rows).mode("overwrite").parquet(s"${dirOf(root, v, a)}/gen=$gen")
 
-  /** Write the index over `corpus` (doc_id, text), replacing any prior
-    * index at `root`. */
+  /** Write the index over `corpus`, replacing any prior index at
+    * `root`. Its `g0` marker carries the corpus fingerprint, so merging
+    * the build batch again is a no-op. */
   def build(corpus: DataFrame, root: String): Unit =
+    buildWith(corpus, root)(model.toSeq.flatMap(_.train(corpus)))
+
+  /** [[build]] with the model's tables supplied — for a family whose
+    * training over a whole corpus is session-memoized. */
+  protected final def buildWith(corpus: DataFrame, root: String)(
+      tables: => Seq[(String, DataFrame)]): Unit =
     withLock(corpus.sparkSession, root) {
-      val (hfs, p) = fs(corpus.sparkSession, root)
+      val spark = corpus.sparkSession
+      val (hfs, p) = fs(spark, root)
       resetRoot(hfs, p)
-      writeGeneration(corpus, root, gen = 0L, v = 1L)
-      mark(hfs, p, "g0")
-      mark(hfs, p, s"${versionPrefix}1")
+      // the fingerprint job reads only the corpus: run it beside the
+      // model and generation 0 instead of before them
+      val Seq(fp, _) = inParallel(
+        () => batchFingerprint(corpus, fingerprint._1, fingerprint._2),
+        () => {
+          inParallel(tables.map { case (t, df) =>
+            () => df.repartition(1).write.mode("overwrite")
+              .parquet(s"$root/$t.v1.parquet")
+          }: _*)
+          writeArtifacts(
+            prepare(corpus, new Snapshot(spark, root, Nil, 1L, 1L)),
+            root, gen = 0L, v = 1L)
+          ""
+        })
+      mark(hfs, p, "g0", fp)
+      if (versioned) mark(hfs, p, s"${versionPrefix}1")
+      model.foreach { m =>
+        mark(hfs, p, s"${m.name}.v1")
+        // the fingerprint leads with the batch's row count
+        if (m.countsBase) mark(hfs, p, BaseCount, fp.takeWhile(_ != ':'))
+      }
     }
 
-  /** Add `admitted` (doc_id, text) to the index as one new generation;
-    * a batch already committed is a no-op. */
-  def merge(admitted: DataFrame, root: String): Unit =
-    withLock(admitted.sparkSession, root) {
-      val snap = snapshot(admitted.sparkSession, root)
-      val fp = batchFingerprint(admitted, "doc_id", "text")
-      val (hfs, p) = fs(admitted.sparkSession, root)
-      if (!snap.gens.exists(g => markContent(hfs, p, s"g$g").contains(fp))) {
+  /** Add `batch` to the index as one new generation; a batch already
+    * committed is a no-op. */
+  def merge(batch: DataFrame, root: String): Unit =
+    mergeWith(batch, root)(prepare)
+
+  /** [[merge]] with its own batch preparation (an assign-only ingest,
+    * a merge that first checks its labels). */
+  protected final def mergeWith(batch: DataFrame, root: String)(
+      prep: (DataFrame, Snapshot) => DataFrame): Unit =
+    withLock(batch.sparkSession, root) {
+      val snap = snapshot(batch.sparkSession, root)
+      val fp = batchFingerprint(batch, fingerprint._1, fingerprint._2)
+      if (!snap.committed(fp)) {
         val g = snap.gens.max + 1
-        writeGeneration(admitted, root, g, snap.v)
+        writeArtifacts(prep(batch, snap), root, g, snap.v)
+        val (hfs, p) = fs(batch.sparkSession, root)
         mark(hfs, p, s"g$g", fp)
       }
     }
 
   /** Write generation `gen` of every artifact under version `v`,
-    * unmarked. The artifacts are independent jobs over the cached
-    * prepared batch, so they run concurrently. */
-  private[graft] def writeGeneration(docs: DataFrame, root: String,
-                                     gen: Long, v: Long): Unit = {
-    val batch = prepare(docs)
-    Materialize.withCached(batch) {
-      inParallel(artifacts.map(a =>
-        () => write(a, a.derive(batch), root, v, gen)): _*)
-      // withCached materializes its body's result: return an empty
-      // frame instead of re-reading what was written
-      batch.sparkSession.range(0).toDF("done")
-    }
-    ()
+    * unmarked — a merge's data step, exposed so the crash specs can
+    * stop short of its marker. */
+  private[graft] def writeGeneration(batch: DataFrame, root: String,
+                                     gen: Long, v: Long): Unit =
+    writeArtifacts(prepare(batch, snapshot(batch.sparkSession, root)),
+      root, gen, v)
+
+  /** The artifacts are independent jobs over the prepared batch: with
+    * more than one, the batch is cached and they run concurrently. */
+  private def writeArtifacts(batch: DataFrame, root: String, gen: Long,
+                             v: Long): Unit = artifacts match {
+    case Seq(a) => write(a, a.derive(batch), root, v, gen)
+    case _ =>
+      Materialize.withCached(batch) {
+        inParallel(artifacts.map(a =>
+          () => write(a, a.derive(batch), root, v, gen)): _*)
+        // withCached materializes its body's result: return an empty
+        // frame instead of re-reading what was written
+        batch.sparkSession.range(0).toDF("done")
+      }
+      ()
   }
 
   /** Fold the committed generations into a new store version; answers
@@ -693,14 +803,17 @@ abstract class GenerationStore(versionPrefix: String, what: String) {
     mark(hfs, p, s"$versionPrefix$newV")
   }
 
-  /** Compact step 3: retire versions older than `oldV` and sweep the
-    * append-only artifacts' orphan generations. Everything deleted is
-    * already unreachable, so a crash here is safe. */
+  /** Compact step 3: retire versions older than `oldV` and sweep orphan
+    * generations. Everything deleted is already unreachable, so a crash
+    * here is safe. */
   private[graft] def retireCompacted(spark: SparkSession, root: String,
                                      oldV: Long): Unit = {
     retireVersions(spark, root, versionPrefix, oldV)
-    val (hfs, p) = fs(spark, root)
-    artifacts.filter(_.fold.isEmpty).foreach(a => sweepOrphanGens(hfs,
-      new Path(dirOf(root, oldV, a)), markedIds(hfs, p, "g").toSet))
+    snapshot(spark, root).sweepOrphans()
   }
+
+  /** Sweep the orphan generations crashed, never-retried merges left in
+    * the current version. */
+  def vacuum(spark: SparkSession, root: String): Unit =
+    withLock(spark, root)(snapshot(spark, root).sweepOrphans())
 }

@@ -5,215 +5,64 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.sources.Tables
-
 /** Persistent IVF index — the production lifecycle of [[Similarity.ivfTopK]]:
   * build once, write to storage, query many times without touching the
   * full corpus, and admit new corpus batches incrementally into their
-  * cells (centroids are frozen at build time — the standard IVF
-  * maintenance discipline; re-deriving them is a [[build]], not a
-  * merge).
-  *
-  * Layout under `indexPath` (all paths via Hadoop FileSystem — local,
-  * HDFS, or object store alike; crash discipline per [[IndexStore]]):
+  * cells. A [[CellStore]] (centroid model, label-partitioned cells,
+  * build/merge/ingest/compact/vacuum and crash contract in
+  * [[GenerationStore]] and [[IndexStore]]); its cells hold the raw
+  * vectors:
   * {{{
-  *   centroids.v<V>.parquet      (label, cv) — one row per cell, tiny.
-  *                 Written by [[build]] only.
-  *   cells.v<V>/gen=<G>/label=<L>/  (vec_id, v) — corpus partitioned
-  *                 by cell, one generation dir per committed batch,
-  *                 append-only within a version; [[compact]] folds the
-  *                 committed generations into version V+1 (one dir,
-  *                 one file set per cell) and retires V-1 with the
-  *                 same one-version grace as the text indexes.
-  *   _commits/g<G>               generation G's publish marker (carries
-  *                 the batch fingerprint for retry idempotency).
-  *                 Written LAST — an interrupted [[merge]] leaves only
-  *                 an invisible orphan dir; readers prune to committed
-  *                 generations on an explicit-schema scan.
-  *   _commits/centroids.v<V>     centroid version V is complete.
-  *                 [[build]] marks it AFTER gen 0, so a crashed build
-  *                 fails loudly instead of probing cells against
-  *                 centroids that never landed.
+  *   cells.v<V>/gen=<G>/label=<L>/  (vec_id, v) — one generation dir
+  *                 per committed batch; compaction folds them into one
+  *                 file set per cell, so a long ingest history does not
+  *                 turn each probed cell into many tiny reads.
+  *   _commits/basecount  rows the centroids were trained on, the
+  *                 denominator of [[driftFraction]].
   * }}}
   *
   * The at-scale property this buys over the in-memory operator: queries
-  * probe their `NProbe` nearest cells, the probed label set (bounded by
-  * the cell count, NOT the corpus) becomes an `IN` predicate on the
-  * hive partition column, and the scan reads ONLY the probed cells'
-  * files — `PartitionFilters` pruning, asserted in the spec. A 100 TB
-  * corpus with 10k cells reads ~`NProbe/10k` of its bytes per query
-  * batch; nothing else changes, because scoring reuses the same typed
-  * kernel + heap pre-reduction as the in-memory path.
+  * probe their `NProbe` nearest cells, the probed label set becomes an
+  * `IN` predicate on the hive partition column, and the scan reads ONLY
+  * the probed cells' files — `PartitionFilters` pruning, asserted in
+  * the spec. A 100 TB corpus with 10k cells reads ~`NProbe/10k` of its
+  * bytes per query batch; scoring reuses the same typed kernel + heap
+  * pre-reduction as the in-memory path.
   *
   * Determinism: centroids come from the same [[VectorOps.VecMean]]
   * partial aggregation, scores round to 4 decimals before ranking —
   * query results are bit-identical to [[Similarity.ivfTopK]] over the
   * same data (asserted in the spec), and the build→merge→query
   * lifecycle is hash-gated as `sim_ivf_lifecycle`.
-  *
-  * Writers (build/merge/vacuum) serialize per root via
-  * [[IndexStore.withLock]]; readers never block.
   */
-object IvfIndex {
+object IvfIndex extends CellStore("IVF cells") {
 
-  // explicit schema (data + partition columns): readers must never
-  // infer from data files — an uncommitted generation dir may hold a
-  // torn file from a crash, and inference could sample it
-  private val CellsSchema = StructType(Seq(
-    StructField("vec_id", LongType),
-    StructField("v", ArrayType(DoubleType)),
-    StructField("gen", LongType), StructField("label", LongType)))
+  private val Cells = new Artifact("", StructType(Seq(
+      StructField("vec_id", LongType),
+      StructField("v", ArrayType(DoubleType)),
+      StructField("gen", LongType), StructField("label", LongType))),
+    derive = identity, fold = Some(identity),
+    layout = _.repartition(col("label")).write.partitionBy("label"))
 
-  private def centroidsDir(root: String, v: Long) =
-    s"$root/centroids.v$v.parquet"
-
-  // version 0 IS the legacy unversioned layout: indexes built before
-  // cells were versioned carry `cells/` and no `cells.v` marker — they
-  // keep reading and merging in place (no forced rebuild), and the
-  // first [[compact]] migrates them into `cells.v1`
-  private def cellsDir(root: String, v: Long) =
-    if (v == 0L) s"$root/cells" else s"$root/cells.v$v"
-
-  private def cellsVersion(spark: SparkSession, root: String): Long = {
-    val (hfs, p) = IndexStore.fs(spark, root)
-    val vs = IndexStore.markedIds(hfs, p, "cells.v")
-    if (vs.nonEmpty) vs.max
-    else {
-      require(hfs.exists(new org.apache.hadoop.fs.Path(s"$root/cells")),
-        s"no committed IVF cells under $root — interrupted build? " +
-          "re-run build")
-      0L // pre-versioning index
-    }
-  }
-
-  private def committedGens(spark: SparkSession, root: String): Seq[Long] =
-    IndexStore.committedGens(spark, root)
-
-  private def centroidVersion(spark: SparkSession, root: String): Long =
-    IndexStore.requireVersion(spark, root, "centroids.v", "IVF centroids")
-
-  /** Build the index from `vecs` (vec_id, label, v double[]):
-    * per-label centroids + the batch re-written partitioned by cell
-    * label as generation 0, replacing any prior index at `indexPath`.
-    * The centroid marker is written LAST so a crashed build is loudly
-    * unreadable, never a cells/centroids mismatch. */
-  def build(vecs: DataFrame, indexPath: String): Unit =
-    IndexStore.withLock(vecs.sparkSession, indexPath) {
-      val spark = vecs.sparkSession
-      import spark.implicits._
-      val (hfs, p) = IndexStore.fs(spark, indexPath)
-      IndexStore.resetRoot(hfs, p)
-      val c = vecs.select(col("vec_id"), col("label").cast("long"), col("v"))
-      // centroids and cells are independent jobs over the cached batch:
-      // submit them concurrently so the build costs max(job), not sum
-      var baseCount = 0L
-      Materialize.withCached(c) {
-        IndexStore.inParallel(
-          () => c.select(col("label"), col("v"))
-            .as[(Long, Array[Double])]
-            .groupByKey(_._1).mapValues(_._2)
-            .agg(new VectorOps.VecMean(Similarity.Dims).toColumn.name("cv"))
-            .toDF("label", "cv")
-            .repartition(1)
-            .write.mode("overwrite").parquet(centroidsDir(indexPath, 1L)),
-          () => writeCells(c, indexPath, 1L, gen = 0L),
-          () => baseCount = c.count())
-        spark.range(0).toDF("done")
-      }
-      IndexStore.mark(hfs, p, "g0")
-      IndexStore.mark(hfs, p, "cells.v1")
-      IndexStore.mark(hfs, p, "centroids.v1")
-      IndexStore.mark(hfs, p, BaseCountMarker, baseCount.toString)
-    }
+  protected def artifacts: Seq[Artifact] = Seq(Cells)
+  override protected val model: Option[Model] = Some(new Model("centroids",
+    vecs => Seq("centroids" -> centroidsOf(vecs)), countsBase = true))
+  protected def prepare(vecs: DataFrame, snap: Snapshot): DataFrame =
+    vecs.select(col("vec_id"), col("label").cast("long"), col("v"))
 
   /** Build over the whole embeddings table at `dir`. */
   def build(spark: SparkSession, dir: String, indexPath: String): Unit =
-    build(Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("label").cast("long"),
-        col("embedding").cast("array<double>").as("v")), indexPath)
+    build(Similarity.corpus(spark, dir), indexPath)
 
-  /** Admit a new corpus batch into its cells as one marker-committed
-    * generation — centroids are untouched (frozen at build), so probes
-    * keep reading a tiny static table while the cells grow. Crash
-    * before the marker: invisible orphan, a retry overwrites it; retry
-    * of an already-committed batch is a fingerprint-detected no-op. */
-  def merge(vecs: DataFrame, indexPath: String): Unit =
-    IndexStore.withLock(vecs.sparkSession, indexPath) {
-      val spark = vecs.sparkSession
-      val gens = committedGens(spark, indexPath)
-      require(gens.nonEmpty,
-        s"no committed IVF index under $indexPath — run build first")
-      val fp = IndexStore.batchFingerprint(vecs, "vec_id", "v")
-      val (hfs, p) = IndexStore.fs(spark, indexPath)
-      if (!IndexStore.generationCommitted(spark, indexPath, fp)) {
-        // probe selection iterates the FROZEN centroid table: a merged
-        // label with no centroid is committed but never probed, so its
-        // vectors are silently unqueryable — warn by name (the same
-        // contract as HnswRouted.admitBatch; ingest can't stray, its
-        // labels come FROM the centroids)
-        import spark.implicits._
-        val centLabels = spark.read.parquet(
-            centroidsDir(indexPath, centroidVersion(spark, indexPath)))
-          .select(col("label")).as[Long].collect().toSet
-        val unreachable = vecs.select(col("label").cast("long"))
-          .distinct().as[Long].collect().filterNot(centLabels).sorted
-        if (unreachable.nonEmpty)
-          org.slf4j.LoggerFactory.getLogger(getClass).warn(
-            s"IVF merge into $indexPath touches label(s) " +
-              s"${unreachable.mkString(",")} with no frozen centroid: " +
-              "their vectors will never be probe-selected at query " +
-              "time — rebuild to re-train centroids, or use ingest " +
-              "(assign-only) for unlabeled batches")
-        val g = gens.max + 1
-        writeCells(vecs.select(col("vec_id"),
-          col("label").cast("long"), col("v")), indexPath,
-          cellsVersion(spark, indexPath), g)
-        IndexStore.mark(hfs, p, s"g$g", fp)
-      }
-    }
-
-  /** Assign-only INGEST — the streaming-era half of the IVF lifecycle:
-    * the batch arrives as bare vectors (vec_id, v) and the INDEX
-    * assigns each to its nearest FROZEN centroid (train is frozen at
-    * [[build]]; re-deriving centroids is a build, not an ingest), then
-    * files the batch as one marker-committed generation exactly like
-    * [[merge]]. Assignment is distributed (centroids broadcast — an
-    * O(cells) array, never the corpus) and deterministic: distances
-    * round at 6 decimals, ties take the LOWEST cell label, the same
-    * discipline the query path's probe selection uses, so the DuckDB
-    * oracle can restate it row for row (`sim_ivf_incremental`). */
-  def ingest(vecs: DataFrame, indexPath: String): Unit =
-    IndexStore.withLock(vecs.sparkSession, indexPath) {
-      val spark = vecs.sparkSession
-      import spark.implicits._
-      val gens = committedGens(spark, indexPath)
-      require(gens.nonEmpty,
-        s"no committed IVF index under $indexPath — run build first")
-      val fp = IndexStore.batchFingerprint(vecs, "vec_id", "v")
-      val (hfs, p) = IndexStore.fs(spark, indexPath)
-      if (!IndexStore.generationCommitted(spark, indexPath, fp)) {
-        val cent = spark.read.parquet(
-            centroidsDir(indexPath, centroidVersion(spark, indexPath)))
-          .as[(Long, Array[Double])].collect().sortBy(_._1)
-        val bc = spark.sparkContext.broadcast(cent)
-        val assigned = vecs.select(col("vec_id"), col("v"))
-          .as[(Long, Array[Double])]
-          .mapPartitions { it =>
-            val cs = bc.value // label-ascending: strict < keeps ties low
-            it.map { case (id, v) =>
-              var bestL = -1L
-              var bestD = Double.PositiveInfinity
-              cs.foreach { case (l, cv) =>
-                val d = VectorOps.roundAt(VectorOps.dist2(v, cv), 6)
-                if (d < bestD) { bestD = d; bestL = l }
-              }
-              (id, bestL, v)
-            }
-          }.toDF("vec_id", "label", "v")
-        val g = gens.max + 1
-        writeCells(assigned, indexPath, cellsVersion(spark, indexPath), g)
-        IndexStore.mark(hfs, p, s"g$g", fp)
-      }
+  /** Admit a labelled (vec_id, label, v) batch into its cells as one
+    * generation, warning about labels with no frozen centroid (an
+    * [[ingest]] cannot stray: its labels come FROM the centroids). */
+  override def merge(vecs: DataFrame, indexPath: String): Unit =
+    mergeWith(vecs, indexPath) { (b, snap) =>
+      val batch = prepare(b, snap)
+      warnUnrouted(snap, batch.select(col("label")).distinct()
+        .collect().map(_.getLong(0)).toSeq)
+      batch
     }
 
   /** sim_ivf_incremental: [[build]] on the landed split (cells = the
@@ -230,11 +79,7 @@ object IvfIndex {
       build(vecs.filter(col("vec_id") % 10 =!= 3), idx)
       ingest(vecs.filter(col("vec_id") % 10 === 3)
         .select(col("vec_id"), col("v")), idx)
-      val maxGen = committedGens(spark, idx).max
-      val cells = cellsDir(idx, cellsVersion(spark, idx))
-      val assigned = spark.read.schema(CellsSchema)
-        .option("basePath", cells).parquet(cells)
-        .filter(col("gen") === maxGen)
+      val assigned = snapshot(spark, idx).newestGeneration(Cells)
         .select(col("vec_id"), col("label").as("cell"))
         .orderBy("vec_id")
       Scratch.materializeAndClean(root, assigned)
@@ -243,31 +88,12 @@ object IvfIndex {
     }
   }
 
-  /** Rows the centroids were TRAINED on — persisted at build so the
-    * drift fraction survives [[compact]] (which folds generation
-    * provenance away). */
-  private val BaseCountMarker = "basecount"
-
   /** Fraction of the index's rows the FROZEN centroids were never
     * trained on — assign-only [[ingest]]s and [[merge]]s accumulate it,
     * and recall decays as the live distribution drifts from the
-    * build-time one. Legacy indexes without the marker fall back to
-    * gen-0 row provenance (or read as undrifted once compaction folded
-    * that away — they predate the maintenance contract). */
-  def driftFraction(spark: SparkSession, indexPath: String): Double = {
-    val total = readCells(spark, indexPath).count()
-    if (total == 0L) return 0.0
-    val (hfs, p) = IndexStore.fs(spark, indexPath)
-    val base = IndexStore.markContent(hfs, p, BaseCountMarker)
-      .flatMap(s => scala.util.Try(s.trim.toLong).toOption)
-      .getOrElse {
-        val dir = cellsDir(indexPath, cellsVersion(spark, indexPath))
-        val g0 = spark.read.schema(CellsSchema).option("basePath", dir)
-          .parquet(dir).filter(col("gen") === 0L).count()
-        if (g0 > 0L) g0 else total
-      }
-    math.max(0.0, 1.0 - base.toDouble / total.toDouble)
-  }
+    * build-time one. */
+  def driftFraction(spark: SparkSession, indexPath: String): Double =
+    snapshot(spark, indexPath).drift(Cells)
 
   /** Re-train on the CURRENT corpus — the drift maintenance [[ingest]]
     * makes necessary: deterministic Lloyd k-means over every committed
@@ -275,9 +101,9 @@ object IvfIndex {
     * k = kFor(n) so cells track corpus growth, lowest-id init, rounded
     * distances, strict-< ties, exact quantized sums — bit-identical
     * driver-side or distributed), every vector re-assigned to its
-    * nearest new centroid, landed as a fresh [[build]]: new centroid
-    * version, everything at gen 0, a reset drift clock. Old cell labels
-    * are retired — a rebuild's labels are its cluster indices. Current
+    * nearest new centroid, landed as a fresh [[build]]: new centroids,
+    * everything at gen 0, a reset drift clock. Old cell labels are
+    * retired — a rebuild's labels are its cluster indices. Current
     * rows are staged OUTSIDE the root first (build resets the root
     * before writing; a lazy read over the tree being deleted would
     * corrupt the rebuild). */
@@ -286,7 +112,7 @@ object IvfIndex {
       import spark.implicits._
       val staging = s"$indexPath.rebuild-${java.util.UUID.randomUUID()}"
       try {
-        readCells(spark, indexPath)
+        snapshot(spark, indexPath).read(Cells)
           .select(col("vec_id"), col("v"))
           .write.mode("overwrite").parquet(staging)
         val all = spark.read.parquet(staging)
@@ -297,23 +123,9 @@ object IvfIndex {
           if (n * Similarity.Dims <= Similarity.DriverKmeansMaxCells)
             Similarity.trainDriverSide(all, k)
           else Similarity.trainDistributed(all, k)
-        val bc = spark.sparkContext.broadcast(cents)
-        val reassigned = all
-          .mapPartitions { it =>
-            val cs = bc.value // index-ascending: strict < keeps ties low
-            it.map { case (id, v) =>
-              var bestL = -1L
-              var bestD = Double.PositiveInfinity
-              var c = 0
-              while (c < cs.length) {
-                val d = VectorOps.roundAt(VectorOps.dist2(v, cs(c)), 6)
-                if (d < bestD) { bestD = d; bestL = c.toLong }
-                c += 1
-              }
-              (id, bestL, v)
-            }
-          }.toDF("vec_id", "label", "v")
-        build(reassigned, indexPath)
+        build(assign(all.toDF(),
+          cents.zipWithIndex.map { case (cv, c) => (c.toLong, cv) }),
+          indexPath)
       } finally {
         val (hfs, _) = IndexStore.fs(spark, staging)
         IndexStore.deleteTree(hfs, new org.apache.hadoop.fs.Path(staging))
@@ -331,93 +143,18 @@ object IvfIndex {
       else (false, drift)
     }
 
-  /** Maintenance: sweep orphan generation dirs left by crashed,
-    * never-retried merges. */
-  def vacuum(spark: SparkSession, indexPath: String): Unit =
-    IndexStore.withLock(spark, indexPath) {
-      val (hfs, _) = IndexStore.fs(spark, indexPath)
-      IndexStore.sweepOrphanGens(hfs,
-        new org.apache.hadoop.fs.Path(
-          cellsDir(indexPath, cellsVersion(spark, indexPath))),
-        committedGens(spark, indexPath).toSet)
-    }
-
-  /** Small-file compaction: every committed generation appended one
-    * `gen=G/label=L` directory of per-batch files, so a long ingest
-    * history turns each probed cell into many tiny reads. Fold the
-    * committed generations into cells version V+1 — one dir, one
-    * file set per cell — with the SAME three-step crash discipline as
-    * the text indexes ([[MinhashIndex.compact]]): write unmarked
-    * (invisible), mark (the atomic switch), retire superseded trees
-    * with a one-version grace for in-flight readers. Generation
-    * markers are untouched: the folded tree carries everything as
-    * `gen=<max>` and later merges append gen max+1 into V+1. */
-  def compact(spark: SparkSession, indexPath: String): Unit =
-    IndexStore.withLock(spark, indexPath) {
-      val gens = committedGens(spark, indexPath)
-      require(gens.nonEmpty,
-        s"no committed IVF index under $indexPath — run build first")
-      val v = cellsVersion(spark, indexPath)
-      val (hfs, p) = IndexStore.fs(spark, indexPath)
-      // clear the target first: a crashed compact's leftover dir would
-      // otherwise survive this retry's single-dir overwrite and
-      // double-count its rows once published
-      IndexStore.deleteTree(hfs,
-        new org.apache.hadoop.fs.Path(cellsDir(indexPath, v + 1)))
-      readCells(spark, indexPath)
-        .repartition(col("label"))
-        .write.mode("overwrite").partitionBy("label")
-        .parquet(s"${cellsDir(indexPath, v + 1)}/gen=${gens.max}")
-      IndexStore.mark(hfs, p, s"cells.v${v + 1}")
-      IndexStore.retireVersions(spark, indexPath, "cells.v", v)
-      // the legacy unversioned tree (version 0, plain `cells/`) has no
-      // marker for retireVersions to sweep: once a VERSIONED tree is
-      // beyond the one-version grace (v ≥ 1 means v-1 ≥ 0 is retired),
-      // delete it explicitly
-      if (v >= 1L)
-        IndexStore.deleteTree(hfs,
-          new org.apache.hadoop.fs.Path(s"$indexPath/cells"))
-    }
-
-  /** Write a batch's cells as generation `gen` — NOT visible to any
-    * reader until its marker lands. */
-  private def writeCells(c: DataFrame, indexPath: String, version: Long,
-                         gen: Long): Unit =
-    c.repartition(col("label"))
-      .write.mode("overwrite").partitionBy("label")
-      .parquet(s"${cellsDir(indexPath, version)}/gen=$gen")
-
-  /** Committed cell rows, pruned to the probed labels AND the committed
-    * generations — exposed so the spec can assert partition pruning on
-    * its physical plan. */
+  /** Committed cell rows pruned to the probed labels — exposed so the
+    * spec can assert partition pruning on its physical plan. */
   private[graft] def probedCells(spark: SparkSession, indexPath: String,
                                  probedLabels: Seq[Long]): DataFrame =
-    readCells(spark, indexPath)
+    snapshot(spark, indexPath).read(Cells)
       .filter(col("label").isin(probedLabels: _*))
 
-  /** The committed centroid table, collected — O(cells) driver rows,
-    * the probe-selection input ([[IvfPq]] composes it with the PQ
-    * score path). */
+  /** The committed centroid table — the probe-selection input
+    * ([[IvfPq]] composes it with the PQ score path). */
   private[graft] def centroidTable(spark: SparkSession, indexPath: String)
-      : Array[(Long, Array[Double])] = {
-    import spark.implicits._
-    spark.read.parquet(
-      centroidsDir(indexPath, centroidVersion(spark, indexPath)))
-      .as[(Long, Array[Double])].collect()
-  }
-
-  /** Committed cell rows of every generation: partition pruning on the
-    * committed-generation range (gen <= max, exact by the density invariant — see [[IndexStore.committedGens]]) keeps uncommitted (crashed) dirs out of
-    * the scan entirely. */
-  private def readCells(spark: SparkSession, indexPath: String): DataFrame = {
-    val gens = committedGens(spark, indexPath)
-    require(gens.nonEmpty,
-      s"no committed IVF index under $indexPath — run build first")
-    val dir = cellsDir(indexPath, cellsVersion(spark, indexPath))
-    spark.read.schema(CellsSchema).option("basePath", dir).parquet(dir)
-      .filter(col("gen") <= gens.max)
-      .select(col("vec_id"), col("label"), col("v"))
-  }
+      : Array[(Long, Array[Double])] =
+    centroids(snapshot(spark, indexPath))
 
   /** Top-k cosine neighbors from the persisted index for the standard
     * deterministic query set (`vec_id % QueryStride == 0`, read from
@@ -433,10 +170,9 @@ object IvfIndex {
     // three scheduling rounds (probe window, label collect, probe join)
     // over the distributed restatement; ordering and rounding replicate
     // the window exactly (d2 rounded at 6, ties by label).
-    val cent = spark.read.parquet(
-      centroidsDir(indexPath, centroidVersion(spark, indexPath)))
-      .as[(Long, Array[Double])].collect()
-    val cells = readCells(spark, indexPath)
+    val snap = snapshot(spark, indexPath)
+    val cent = centroids(snap)
+    val cells = snap.read(Cells)
     // limit BEFORE collect: the cap must bound driver memory, not just
     // report the overflow after the whole block already landed
     val qRows = cells.filter(col("vec_id") % Similarity.QueryStride === 0)
@@ -446,19 +182,13 @@ object IvfIndex {
     require(qRows.length <= Similarity.MaxQueryBlock,
       s"IVF query block exceeds the cap (${Similarity.MaxQueryBlock})")
     val probeRows = qRows.toSeq.flatMap { case (qId, qv) =>
-      cent.map { case (label, cv) =>
-          (label, VectorOps.roundAt(VectorOps.dist2(qv, cv), 6))
-        }
-        .sortBy { case (label, d2) => (d2, label) }
-        .take(Similarity.NProbe)
-        .map { case (label, _) => (qId, qv, label) }
+      probe(qv, cent).map(label => (qId, qv, label))
     }
     // the probed LABEL SET is bounded by the cell count, never the corpus
     val probedLabels = probeRows.map(_._3).distinct.sorted
     val probes = probeRows.toDF("q_id", "qv", "label")
-    val cand = probedCells(spark, indexPath, probedLabels)
-      .join(broadcast(probes),
-        Seq("label"))
+    val cand = cells.filter(col("label").isin(probedLabels: _*))
+      .join(broadcast(probes), Seq("label"))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("qv"), col("vec_id").as("n_id"), col("v"))
       .as[(Long, Array[Double], Long, Array[Double])]

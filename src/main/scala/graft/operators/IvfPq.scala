@@ -77,12 +77,7 @@ object IvfPq {
       s"IVFPQ query block exceeds the cap (${Similarity.MaxQueryBlock})")
     val cent = IvfIndex.centroidTable(spark, ivfPath)
     val probeRows = rawQ.toSeq.flatMap { case (qId, qv) =>
-      cent.map { case (label, cv) =>
-          (label, VectorOps.roundAt(VectorOps.dist2(qv, cv), 6))
-        }
-        .sortBy { case (label, d2) => (d2, label) }
-        .take(Similarity.NProbe)
-        .map { case (label, _) => (qId, label) }
+      IvfIndex.probe(qv, cent).map(label => (qId, label))
     }
     val probedLabels = probeRows.map(_._2).distinct.sorted
 

@@ -48,7 +48,8 @@ import org.apache.spark.sql.types._
   * in the in-memory operator, and results are row-identical to
   * [[Dedup.minhashJoin]](increment, corpus) over the same data.
   */
-object MinhashIndex extends GenerationStore("bands.v", "band table") {
+object MinhashIndex extends GenerationStore("bands.v", "band table",
+    ("doc_id", "text")) {
 
   private val Bands = new Artifact("", StructType(Seq(
       StructField("right_id", LongType), StructField("k", StringType),
@@ -66,7 +67,8 @@ object MinhashIndex extends GenerationStore("bands.v", "band table") {
     derive = _.select(col("doc_id"), col("sh")), fold = None)
 
   protected def artifacts: Seq[Artifact] = Seq(Shingles, Bands)
-  protected def prepare(docs: DataFrame): DataFrame = Dedup.shingleSigs(docs)
+  protected def prepare(docs: DataFrame, snap: Snapshot): DataFrame =
+    Dedup.shingleSigs(docs)
 
   /** Count of docs in the committed shingle table (one row per indexed
     * doc with ≥ 1 shingle — uncapped, unlike the band table) — the

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -13,27 +13,17 @@ import org.apache.spark.sql.types._
   * are frozen at train time, increments reuse them — retraining is a
   * [[build]], not a merge).
   *
-  * Layout under `indexPath` (all paths via Hadoop FileSystem — local,
-  * HDFS, or object store alike; crash discipline per [[IndexStore]]):
+  * A [[GenerationStore]] (build/merge/vacuum and crash contract in
+  * [[IndexStore]]) whose frozen model is the codebook table and whose
+  * one artifact is append-only — codes are per-vector and never
+  * superseded, so there is nothing to fold:
   * {{{
-  *   codebooks.v<V>.parquet  (m, cid, cv) — PqM×PqK rows, a few KB.
-  *                 Written by [[build]] only; a merge never moves them,
-  *                 so every code in the index decodes against one
-  *                 frozen codebook version.
-  *   codes/gen=<G>/          (vec_id, code) — ONE BIGINT per vector,
-  *                 one generation dir per committed batch, append-only.
-  *   _commits/g<G>           generation G's publish marker (carries the
-  *                 batch fingerprint for retry idempotency). Written
-  *                 LAST — an interrupted [[merge]] leaves only an
-  *                 invisible orphan dir; readers prune to committed
-  *                 generations on an explicit-schema scan, so a torn
-  *                 file in an orphan can never be sampled or scanned.
-  *   _commits/codebooks.v<V> codebook version V is complete. [[build]]
-  *                 marks it AFTER gen 0, so a crashed build fails
-  *                 loudly at [[loadCodebooks]] ("re-run build") instead
-  *                 of serving codes whose codebooks never landed — the
-  *                 mismatched-artifact window the unversioned two-step
-  *                 overwrite had.
+  *   codebooks.v1.parquet  (m, cid, cv) — PqM×PqK rows, a few KB; every
+  *                 code in the index decodes against this one version.
+  *   codes/gen=<G>/        (vec_id, code) — ONE BIGINT per vector, one
+  *                 generation dir per committed batch.
+  *   _commits/basecount    rows the codebooks were trained on, the
+  *                 denominator of [[driftFraction]].
   * }}}
   *
   * The at-scale property this buys over the in-memory operator: the
@@ -49,168 +39,52 @@ import org.apache.spark.sql.types._
   * arithmetic — query results are bit-identical to the in-memory
   * operator over the same data (asserted in the spec), and the
   * build→merge→query lifecycle is hash-gated as `sim_pq_lifecycle`.
-  *
-  * Writers (build/merge/vacuum) serialize per root via
-  * [[IndexStore.withLock]]; readers never block.
   */
-object PqIndex {
+object PqIndex extends GenerationStore("codes.v", "PQ codes", ("vec_id", "v")) {
 
   /** Bits per subspace code (log₂ PqK) — single source of truth on
     * [[Similarity.PqCodeBits]], shared with the native encode
     * expression. */
   private val CodeBits = Similarity.PqCodeBits
 
-  // explicit schema (data + partition column): readers must never infer
-  // from data files — an uncommitted generation dir may hold a torn
-  // file from a crash, and inference could sample it
-  private val CodesSchema = StructType(Seq(
-    StructField("vec_id", LongType), StructField("code", LongType),
-    StructField("gen", LongType)))
+  private val Codes = new Artifact("codes", StructType(Seq(
+      StructField("vec_id", LongType), StructField("code", LongType),
+      StructField("gen", LongType))),
+    derive = identity, fold = None)
 
-  private def codebooksDir(root: String, v: Long) =
-    s"$root/codebooks.v$v.parquet"
+  protected def artifacts: Seq[Artifact] = Seq(Codes)
+  override protected val model: Option[Model] = Some(new Model("codebooks",
+    vecs => Seq("codebooks" -> codebookTable(vecs.sparkSession,
+      Similarity.pqCodebooksFrom(Similarity.normalizedFrom(vecs)))),
+    countsBase = true))
+  /** Encode a (vec_id, v) batch against the stored codebooks. */
+  protected def prepare(vecs: DataFrame, snap: Snapshot): DataFrame =
+    encode(Similarity.normalizedFrom(vecs), codebooks(snap))
 
-  private def committedGens(spark: SparkSession, root: String): Seq[Long] =
-    IndexStore.committedGens(spark, root)
-
-  private def codebookVersion(spark: SparkSession, root: String): Long =
-    IndexStore.requireVersion(spark, root, "codebooks.v", "PQ codebooks")
-
-  /** Train codebooks over `vecs` (vec_id, v double[]) and write
-    * codebooks + packed codes, replacing any prior index at
-    * `indexPath`. Codes land as generation 0; the codebook marker is
-    * written LAST so a crashed build is loudly unreadable, never a
-    * codes/codebooks mismatch. */
-  def build(vecs: DataFrame, indexPath: String): Unit =
-    IndexStore.withLock(vecs.sparkSession, indexPath) {
-      val spark = vecs.sparkSession
-      val (hfs, p) = IndexStore.fs(spark, indexPath)
-      IndexStore.resetRoot(hfs, p)
-      val normed = Similarity.normalizedFrom(vecs)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val cents = Similarity.pqCodebooksFrom(normed)
-        // the codebook table and the encoded codes are independent jobs
-        // once training finishes: submit them concurrently
-        var baseCount = 0L
-        IndexStore.inParallel(
-          () => writeCodebooks(spark, indexPath, 1L, cents),
-          () => writeCodes(normed, cents, indexPath, gen = 0L),
-          () => baseCount = normed.count())
-        IndexStore.mark(hfs, p, "g0")
-        IndexStore.mark(hfs, p, "codebooks.v1")
-        IndexStore.mark(hfs, p, BaseCountMarker, baseCount.toString)
-      } finally normed.unpersist(blocking = false)
-    }
-
-  /** Build over the whole embeddings table at `dir` — reuses the
-    * session-memoized whole-corpus codebooks so a bench pass shares
-    * one training run with [[Similarity.pqTopK]]. */
-  def build(spark: SparkSession, dir: String, indexPath: String): Unit =
-    IndexStore.withLock(spark, indexPath) {
-      val (hfs, p) = IndexStore.fs(spark, indexPath)
-      IndexStore.resetRoot(hfs, p)
-      val cents = Similarity.pqCodebooks(spark, dir)
-      var baseCount = 0L
-      IndexStore.inParallel(
-        () => writeCodebooks(spark, indexPath, 1L, cents),
-        () => writeCodes(Similarity.normalized(spark, dir), cents,
-          indexPath, 0L),
-        () => baseCount = Similarity.normalized(spark, dir).count())
-      IndexStore.mark(hfs, p, "g0")
-      IndexStore.mark(hfs, p, "codebooks.v1")
-      IndexStore.mark(hfs, p, BaseCountMarker, baseCount.toString)
-    }
-
-  /** Admit a new corpus batch: encode against the STORED codebooks
-    * (bit-identical kernel to [[build]]'s — the reader never knows
-    * which path produced a code) and append as one marker-committed
-    * generation. Crash before the marker: invisible orphan, queries
-    * answer as before, a retry overwrites it. Retry of an
-    * already-committed batch is detected by the fingerprint in the
-    * newest generation's marker and becomes a no-op. */
-  def merge(vecs: DataFrame, indexPath: String): Unit =
-    IndexStore.withLock(vecs.sparkSession, indexPath) {
-      val spark = vecs.sparkSession
-      val gens = committedGens(spark, indexPath)
-      require(gens.nonEmpty,
-        s"no committed PQ index under $indexPath — run build first")
-      val fp = IndexStore.batchFingerprint(vecs, "vec_id", "v")
-      val (hfs, p) = IndexStore.fs(spark, indexPath)
-      if (!IndexStore.generationCommitted(spark, indexPath, fp)) {
-        val g = gens.max + 1
-        writeCodes(Similarity.normalizedFrom(vecs),
-          loadCodebooks(spark, indexPath), indexPath, g)
-        IndexStore.mark(hfs, p, s"g$g", fp)
-      }
-    }
-
-  /** Rows the codebooks were TRAINED on — persisted at build so the
-    * drift fraction is an O(1) marker read plus a code count. */
-  private val BaseCountMarker = "basecount"
-
-  /** Fraction of the index's codes encoded against codebooks that never
-    * saw them in training — [[merge]]s accumulate it, and quantization
-    * error grows as the live distribution drifts from the build-time
-    * one. Legacy indexes without the marker fall back to gen-0 row
-    * provenance. */
-  def driftFraction(spark: SparkSession, indexPath: String): Double = {
-    val total = readCodes(spark, indexPath).count()
-    if (total == 0L) return 0.0
-    val (hfs, p) = IndexStore.fs(spark, indexPath)
-    val base = IndexStore.markContent(hfs, p, BaseCountMarker)
-      .flatMap(s => scala.util.Try(s.trim.toLong).toOption)
-      .getOrElse {
-        val dir = s"$indexPath/codes"
-        val g0 = spark.read.schema(CodesSchema).option("basePath", dir)
-          .parquet(dir).filter(org.apache.spark.sql.functions.col("gen") === 0L)
-          .count()
-        if (g0 > 0L) g0 else total
-      }
-    math.max(0.0, 1.0 - base.toDouble / total.toDouble)
-  }
-
-  /** The maintenance TRIGGER: retrain codebooks over `vecs` (the
-    * CURRENT corpus — PQ stores only codes, so unlike IVF the rebuild
-    * input must be supplied) when the post-build fraction exceeds
-    * `threshold`. Returns (rebuilt, drift-at-decision). */
-  def rebuildIfDrifted(vecs: org.apache.spark.sql.DataFrame,
-                       indexPath: String,
-                       threshold: Double = 0.3): (Boolean, Double) =
-    IndexStore.withLock(vecs.sparkSession, indexPath) {
-      val drift = driftFraction(vecs.sparkSession, indexPath)
-      if (drift >= threshold) { build(vecs, indexPath); (true, drift) }
-      else (false, drift)
-    }
-
-  /** Maintenance: sweep orphan generation dirs left by crashed,
-    * never-retried merges (committed generations are untouched —
-    * codes are per-vector and never superseded, so there is nothing
-    * to fold; PQ needs no compaction). */
-  def vacuum(spark: SparkSession, indexPath: String): Unit =
-    IndexStore.withLock(spark, indexPath) {
-      val (hfs, _) = IndexStore.fs(spark, indexPath)
-      IndexStore.sweepOrphanGens(hfs,
-        new org.apache.hadoop.fs.Path(s"$indexPath/codes"),
-        committedGens(spark, indexPath).toSet)
-    }
-
-  private def writeCodebooks(spark: SparkSession, indexPath: String, v: Long,
-                             cents: Array[Array[Array[Double]]]): Unit = {
+  /** Trained codebooks cents(m)(cid) as table rows (m, cid, cv). */
+  private def codebookTable(spark: SparkSession,
+                            cents: Array[Array[Array[Double]]]): DataFrame = {
     import spark.implicits._
     cents.zipWithIndex.flatMap { case (cb, m) =>
       cb.zipWithIndex.map { case (cv, cid) => (m, cid, cv) }
     }.toSeq.toDF("m", "cid", "cv")
-      .repartition(1)
-      .write.mode("overwrite").parquet(codebooksDir(indexPath, v))
   }
 
-  /** Encode a normalized frame with `cents` and write it as generation
-    * `gen` — NOT visible to any reader until its marker lands. */
-  private def writeCodes(
-      normed: org.apache.spark.sql.Dataset[(Long, Array[Double])],
-      cents: Array[Array[Array[Double]]], indexPath: String,
-      gen: Long): Unit = {
+  /** Codebooks back from storage: cents(m)(cid). */
+  private def codebooks(snap: Snapshot): Array[Array[Array[Double]]] = {
+    val df = snap.model("codebooks")
+    val spark = df.sparkSession
+    import spark.implicits._
+    val cbRows = df.as[(Int, Int, Array[Double])].collect()
+    val nCents = cbRows.map(_._2).max + 1
+    val cents = Array.ofDim[Array[Double]](Similarity.PqM, nCents)
+    cbRows.foreach { case (m, cid, cv) => cents(m)(cid) = cv }
+    cents
+  }
+
+  /** Pack each normalized vector's per-subspace argmin into one code. */
+  private def encode(normed: Dataset[(Long, Array[Double])],
+                     cents: Array[Array[Array[Double]]]): DataFrame = {
     val spark = normed.sparkSession
     import spark.implicits._
     val m0 = Similarity.PqM
@@ -226,38 +100,43 @@ object PqIndex {
         (id, code)
       }
       .toDF("vec_id", "code")
-      .write.mode("overwrite").parquet(s"$indexPath/codes/gen=$gen")
   }
 
-  /** Committed code rows: partition pruning on the committed-generation
-    * list keeps uncommitted (crashed) dirs out of the scan entirely. */
-  private def readCodes(spark: SparkSession, indexPath: String): DataFrame = {
-    val gens = committedGens(spark, indexPath)
-    require(gens.nonEmpty,
-      s"no committed PQ index under $indexPath — run build first")
-    val dir = s"$indexPath/codes"
-    spark.read.schema(CodesSchema).option("basePath", dir).parquet(dir)
-      .filter(col("gen") <= gens.max)
-      .select(col("vec_id"), col("code"))
-  }
+  /** Build over the whole embeddings table at `dir`, reusing the
+    * session-memoized whole-corpus codebooks, so a pass shares one
+    * training run with [[Similarity.pqTopK]]. */
+  def build(spark: SparkSession, dir: String, indexPath: String): Unit =
+    buildWith(Similarity.corpus(spark, dir), indexPath)(Seq("codebooks" ->
+      codebookTable(spark, Similarity.pqCodebooks(spark, dir))))
 
-  /** Codebooks back from storage: cents(m)(cid). */
+  /** Fraction of the index's codes encoded against codebooks that never
+    * saw them in training — [[merge]]s accumulate it, and quantization
+    * error grows as the live distribution drifts from the build-time
+    * one. */
+  def driftFraction(spark: SparkSession, indexPath: String): Double =
+    snapshot(spark, indexPath).drift(Codes)
+
+  /** The maintenance TRIGGER: retrain codebooks over `vecs` (the
+    * CURRENT corpus — PQ stores only codes, so unlike IVF the rebuild
+    * input must be supplied) when the post-build fraction exceeds
+    * `threshold`. Returns (rebuilt, drift-at-decision). */
+  def rebuildIfDrifted(vecs: DataFrame, indexPath: String,
+                       threshold: Double = 0.3): (Boolean, Double) =
+    IndexStore.withLock(vecs.sparkSession, indexPath) {
+      val drift = driftFraction(vecs.sparkSession, indexPath)
+      if (drift >= threshold) { build(vecs, indexPath); (true, drift) }
+      else (false, drift)
+    }
+
+  /** The stored codebooks — [[IvfPq]] scores with them. */
   private[graft] def loadCodebooks(spark: SparkSession, indexPath: String)
-      : Array[Array[Array[Double]]] = {
-    import spark.implicits._
-    val v = codebookVersion(spark, indexPath)
-    val cbRows = spark.read.parquet(codebooksDir(indexPath, v))
-      .as[(Int, Int, Array[Double])].collect()
-    val nCents = cbRows.map(_._2).max + 1
-    val cents = Array.ofDim[Array[Double]](Similarity.PqM, nCents)
-    cbRows.foreach { case (m, cid, cv) => cents(m)(cid) = cv }
-    cents
-  }
+      : Array[Array[Array[Double]]] =
+    codebooks(snapshot(spark, indexPath))
 
   /** The committed code table — spec helper. */
   private[graft] def codeTable(spark: SparkSession,
                                indexPath: String): DataFrame =
-    readCodes(spark, indexPath)
+    snapshot(spark, indexPath).read(Codes)
 
   /** Stateless encode stage — batch OR streaming: annotate a frame
     * carrying an `embedding` array column with the packed PQ `code`,
@@ -266,8 +145,7 @@ object PqIndex {
     * new corpus vectors arriving on a stream are encoded exactly as
     * [[merge]] would encode them (asserted in the spec), so the reader
     * never knows which path produced a code. */
-  def encodeStage(vecs: org.apache.spark.sql.DataFrame,
-                  indexPath: String): org.apache.spark.sql.DataFrame = {
+  def encodeStage(vecs: DataFrame, indexPath: String): DataFrame = {
     val cents = loadCodebooks(vecs.sparkSession, indexPath)
     // native codegen expression, not a UDF: the frozen codebooks ride
     // the plan as ONE reference object and encoding is a static call
@@ -288,7 +166,8 @@ object PqIndex {
     import spark.implicits._
     val m0 = Similarity.PqM
     val sd = Similarity.PqSubDim
-    val cents = loadCodebooks(spark, indexPath)
+    val snap = snapshot(spark, indexPath)
+    val cents = codebooks(snap)
     val nCents = cents(0).length
     val normed = Similarity.normalized(spark, dir)
     // limit BEFORE collect: the cap must bound driver memory, not just
@@ -308,7 +187,7 @@ object PqIndex {
     val r = Similarity.PqRerank
     val codeMask = (1L << CodeBits) - 1
     // the hot scan: 8-byte codes only, ADC via table lookups
-    val cand = readCodes(spark, indexPath)
+    val cand = snap.read(Codes)
       .as[(Long, Long)]
       .mapPartitions { it =>
         val (qIds, t) = bc.value
@@ -372,13 +251,10 @@ object PqIndex {
       val idx = s"$root/idx"
       build(vecs.filter(col("vec_id") % 10 =!= 3), idx)
       merge(vecs.filter(col("vec_id") % 10 === 3), idx)
-      val maxGen = committedGens(spark, idx).max
       val m0 = Similarity.PqM
       val codeMask = (1L << CodeBits) - 1
-      val unpacked = spark.read.schema(CodesSchema)
-        .option("basePath", s"$idx/codes").parquet(s"$idx/codes")
-        .filter(col("gen") === maxGen)
-        .select(col("vec_id"), col("code")).as[(Long, Long)]
+      val unpacked = snapshot(spark, idx).newestGeneration(Codes)
+        .as[(Long, Long)]
         .flatMap { case (id, code) =>
           (0 until m0).map(m =>
             (id, m, ((code >> (CodeBits * m)) & codeMask).toInt))

@@ -43,7 +43,8 @@ import org.apache.spark.sql.types._
   * stored tables are scanned narrowly and never shuffled — work per
   * increment doc is bounded by its vocabulary, never the corpus.
   */
-object TermStatsIndex extends GenerationStore("store.v", "term-stats store") {
+object TermStatsIndex extends GenerationStore("store.v", "term-stats store",
+    ("doc_id", "text")) {
 
   // a prepared batch holds one row per distinct (doc, term): counting
   // rows per term IS the batch document frequency
@@ -58,7 +59,7 @@ object TermStatsIndex extends GenerationStore("store.v", "term-stats store") {
     fold = Some(_.agg(sum(col("n_docs")).as("n_docs"))))
 
   protected def artifacts: Seq[Artifact] = Seq(Stats, Meta)
-  protected def prepare(docs: DataFrame): DataFrame =
+  protected def prepare(docs: DataFrame, snap: Snapshot): DataFrame =
     TextAnalysis.termRowsOf(docs).select(col("doc_id"), col("term"))
 
   /** The committed (term, df) table summed across generations — spec

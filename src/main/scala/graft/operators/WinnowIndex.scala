@@ -39,7 +39,8 @@ import org.apache.spark.sql.types._
   * fingerprints. Results are row-identical to
   * [[Dedup.winnowJoin]](increment, corpus) over the same data.
   */
-object WinnowIndex extends GenerationStore("store.v", "winnow store") {
+object WinnowIndex extends GenerationStore("store.v", "winnow store",
+    ("doc_id", "text")) {
 
   /** The cap window: keep the HotGroupCap smallest right ids per fp. */
   private def capFp(postings: DataFrame): DataFrame = {
@@ -64,7 +65,7 @@ object WinnowIndex extends GenerationStore("store.v", "winnow store") {
     fold = Some(_.groupBy("fp").agg(sum(col("ff")).as("ff"))))
 
   protected def artifacts: Seq[Artifact] = Seq(Counts, Postings)
-  protected def prepare(docs: DataFrame): DataFrame =
+  protected def prepare(docs: DataFrame, snap: Snapshot): DataFrame =
     Dedup.winnowFps(docs).toDF("right_id", "fp")
 
   /** Total stored fingerprint occurrences — Σ ff over the committed
