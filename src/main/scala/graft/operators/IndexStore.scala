@@ -36,6 +36,7 @@ import org.apache.spark.sql.types.StructType
   *                  only, one file each
   *   _commits/g<G>               generation G is complete in every
   *                  artifact; it carries its batch's fingerprint
+  *                  (a rebuild's `g0`, one line per batch it re-read)
   *   _commits/<P><V>             store version V is complete (a store
   *                  with no versioned artifact has none until a compact)
   *   _commits/<M>.v1             the model is complete
@@ -47,8 +48,8 @@ import org.apache.spark.sql.types.StructType
   *    model, write generation 0 into version 1, mark `g0` with the
   *    batch fingerprint, then `<P>1`, then the model;
   *  - merge: under the lock, resolve the snapshot and require a
-  *    committed index; a batch whose fingerprint rides in ANY `g`
-  *    marker — the build's included — is a no-op (an at-least-once
+  *    committed index; a batch whose fingerprint is a line of ANY
+  *    `g` marker — the build's included — is a no-op (an at-least-once
   *    orchestrator can re-deliver an old batch after newer ones
   *    landed); otherwise write generation `max + 1` into the current
   *    version, then mark it. A crash before the marker leaves
@@ -636,14 +637,23 @@ abstract class GenerationStore(versionPrefix: String, what: String,
           .map { case (l, g) => s"$dir/gen=$g/label=$l" }: _*)
     }
 
-    /** True when batch fingerprint `fp` rides in ANY committed
+    /** True when batch fingerprint `fp` is a line of ANY committed
       * generation marker, not just the newest: an at-least-once
       * orchestrator can re-deliver an OLD batch after newer ones
       * landed, and re-committing it would silently double-count its
       * rows in every later query. */
     private[GenerationStore] def committed(fp: String): Boolean = {
       val (hfs, p) = fs(spark, root)
-      gens.exists(g => markContent(hfs, p, s"g$g").contains(fp))
+      gens.exists(g =>
+        markContent(hfs, p, s"g$g").exists(_.split('\n').contains(fp)))
+    }
+
+    /** Every fingerprint line of the committed generation markers — what
+      * a rebuild from the index's own rows carries into its `g0`. */
+    private[operators] def fingerprints: Seq[String] = {
+      val (hfs, p) = fs(spark, root)
+      gens.flatMap(g =>
+        markContent(hfs, p, s"g$g").toSeq.flatMap(_.split('\n')))
     }
 
     /** Delete the orphan `gen=` dirs crashed, never-retried merges left
@@ -701,8 +711,12 @@ abstract class GenerationStore(versionPrefix: String, what: String,
     buildWith(corpus, root)(model.toSeq.flatMap(_.train(corpus)))
 
   /** [[build]] with the model's tables supplied — for a family whose
-    * training over a whole corpus is session-memoized. */
-  protected final def buildWith(corpus: DataFrame, root: String)(
+    * training over a whole corpus is session-memoized. `carried`
+    * fingerprints ride in `g0` beside the corpus's own: a rebuild from
+    * the index's own rows passes its prior [[Snapshot.fingerprints]],
+    * so batches merged before it stay no-ops after it. */
+  protected final def buildWith(corpus: DataFrame, root: String,
+                                carried: Seq[String] = Nil)(
       tables: => Seq[(String, DataFrame)]): Unit =
     withLock(corpus.sparkSession, root) {
       val spark = corpus.sparkSession
@@ -722,7 +736,7 @@ abstract class GenerationStore(versionPrefix: String, what: String,
             root, gen = 0L, v = 1L)
           ""
         })
-      mark(hfs, p, "g0", fp)
+      mark(hfs, p, "g0", (fp +: carried).distinct.mkString("\n"))
       if (versioned) mark(hfs, p, s"${versionPrefix}1")
       model.foreach { m =>
         mark(hfs, p, s"${m.name}.v1")

@@ -106,13 +106,16 @@ object IvfIndex extends CellStore("IVF cells") {
     * retired — a rebuild's labels are its cluster indices. Current
     * rows are staged OUTSIDE the root first (build resets the root
     * before writing; a lazy read over the tree being deleted would
-    * corrupt the rebuild). */
+    * corrupt the rebuild). The new `g0` carries every committed
+    * batch's fingerprint, so re-merging one stays a no-op. */
   def rebuild(spark: SparkSession, indexPath: String): Unit =
     IndexStore.withLock(spark, indexPath) {
       import spark.implicits._
       val staging = s"$indexPath.rebuild-${java.util.UUID.randomUUID()}"
       try {
-        snapshot(spark, indexPath).read(Cells)
+        val snap = snapshot(spark, indexPath)
+        val carried = snap.fingerprints
+        snap.read(Cells)
           .select(col("vec_id"), col("v"))
           .write.mode("overwrite").parquet(staging)
         val all = spark.read.parquet(staging)
@@ -123,9 +126,10 @@ object IvfIndex extends CellStore("IVF cells") {
           if (n * Similarity.Dims <= Similarity.DriverKmeansMaxCells)
             Similarity.trainDriverSide(all, k)
           else Similarity.trainDistributed(all, k)
-        build(assign(all.toDF(),
-          cents.zipWithIndex.map { case (cv, c) => (c.toLong, cv) }),
-          indexPath)
+        val cells = assign(all.toDF(),
+          cents.zipWithIndex.map { case (cv, c) => (c.toLong, cv) })
+        buildWith(cells, indexPath, carried)(
+          model.toSeq.flatMap(_.train(cells)))
       } finally {
         val (hfs, _) = IndexStore.fs(spark, staging)
         IndexStore.deleteTree(hfs, new org.apache.hadoop.fs.Path(staging))

@@ -19,10 +19,10 @@ private[graft] object StreamHarness {
     finally spark.conf.set("spark.sql.shuffle.partitions", prev)
   }
 
-  /** The ONE bounded harness behind the three streaming near-dup
+  /** The ONE bounded harness behind the four streaming near-dup
     * twins' oracle rows (`q_stream_neardup` / `q_stream_phash` /
-    * `q_stream_semantic`) — extracted so the next twin can't drift
-    * from the shape the current three share by construction:
+    * `q_stream_semantic` / `q_stream_winnow`), so no twin can drift
+    * from the shape they share by construction:
     *
     *  1. STAGE: `inc` (the crawl increment) lands under a scratch root
     *     with a FIXED event timestamp (the watermark must not evict

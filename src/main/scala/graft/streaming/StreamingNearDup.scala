@@ -2,44 +2,26 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.operators.Dedup
+import BucketPairs.BucketRow
 
 /** Incremental MinHash near-dup detection — the streaming twin of
-  * [[graft.operators.Dedup.minhashLsh]] (the batch family's remaining
-  * gap: exact content dedup streams via
-  * [[BidPipeline.dedupeByContent]]; this streams the NEAR-dup pass).
+  * [[graft.operators.Dedup.minhashLsh]] on the [[BucketPairs]] join
+  * (exact content dedup streams via [[BidPipeline.dedupeByContent]];
+  * this streams the NEAR-dup pass).
   *
-  * Per document: one typed pass computes the same 16-wide MinHash
-  * signature as the batch operator (shared kernel —
-  * [[graft.operators.Dedup.minhashSignature]], bit-identical bytes),
-  * explodes into the same 4 LSH band keys, and a stateful
-  * `flatMapGroupsWithState` per band bucket emits a candidate pair for
-  * every (earlier doc, new doc) collision whose signature-estimated
-  * Jaccard (fraction of equal signature components — the standard
-  * unbiased MinHash estimator) clears the threshold.
+  * Per document: the same 16-wide MinHash signature as the batch
+  * operator (shared kernel — [[graft.operators.Dedup.minhashSignature]],
+  * bit-identical bytes), exploded into the same 4 LSH band buckets;
+  * each resident holds (doc_id, 16 longs). A pair is emitted with its
+  * band when the signature-estimated Jaccard (fraction of equal
+  * components, the standard unbiased MinHash estimator) clears the
+  * threshold.
   *
-  * Contract differences from the batch operator, both inherent to
-  * streaming and documented rather than hidden:
-  *  - Batch verifies TRUE Jaccard on the full shingle sets; bounded
-  *    state cannot hold shingle sets, so the streaming pass scores the
-  *    SIGNATURE estimate. With 16 components the estimate is exact to
-  *    1/16 granularity.
-  *  - A pair colliding in several bands is emitted once per colliding
-  *    band (a band bucket cannot see other bands' state); consumers
-  *    treat (doc_a, doc_b) as a set — `distinct()` per micro-batch in
-  *    `foreachBatch`, or the shipped watermarked pair-dedup stage
-  *    [[uniquePairs]] (exactly-once per (doc_a, doc_b) within the
-  *    watermark horizon).
-  *
-  * State is bounded three ways, mirroring the batch hot-key
-  * discipline: per-bucket membership caps at
-  * [[graft.operators.Dedup.HotGroupCap]] (a new doc in a full bucket
-  * still COMPARES against all members — pairs are not lost — but joins
-  * as a non-resident, the spanning-star analog), eviction at the event
-  * watermark (`EventTimeTimeout`), and each resident holds only
-  * (doc_id, 16 longs) — no text, no shingles.
+  * Difference from the batch operator: batch verifies TRUE Jaccard on
+  * the full shingle sets; bounded state cannot hold shingle sets, so
+  * the stream scores the SIGNATURE estimate, exact to 1/16.
   */
 object StreamingNearDup {
 
@@ -47,16 +29,12 @@ object StreamingNearDup {
     * stand-in for the batch operator's true-Jaccard ≥ 0.5 gate. */
   val EstThreshold: Double = Dedup.MinhashJaccardThreshold
 
-  case class BandRow(bucket: String, doc_id: Long, sig: Array[Long],
-                     event_ts: java.sql.Timestamp)
   case class Pair(doc_a: Long, doc_b: Long, band: Int, est_jaccard: Double,
                   event_ts: java.sql.Timestamp)
-  case class BucketState(docs: List[(Long, Array[Long])])
 
-  /** (doc_id, text, event_ts) stream → per-band bucket rows carrying
-    * the shared-kernel signature. Narrow typed map + explode; the only
-    * shuffle is the downstream stateful grouping on the bucket. */
-  def bandRows(docs: DataFrame): Dataset[BandRow] = {
+  /** (doc_id, text, event_ts) → one row per band bucket carrying the
+    * shared-kernel signature. */
+  private def bandRows(docs: DataFrame): Dataset[BucketRow[Array[Long]]] = {
     val spark = docs.sparkSession
     import spark.implicits._
     docs.select(col("doc_id").cast("long"), col("text"),
@@ -70,7 +48,7 @@ object StreamingNearDup {
           else {
             val sig = Dedup.minhashSignature(sh, digest)
             Dedup.bandKeys(sig, digest).iterator.zipWithIndex.map {
-              case (k, b) => BandRow(s"$b:$k", id, sig, ts)
+              case (k, b) => BucketRow(s"$b:$k", id, register = true, sig, ts)
             }
           }
         }
@@ -85,61 +63,10 @@ object StreamingNearDup {
     eq.toDouble / a.length
   }
 
-  private def processBucket(minEst: Double, evictDelay: String)(
-      key: String,
-      rows: Iterator[BandRow],
-      state: GroupState[BucketState]): Iterator[Pair] = {
-    if (state.hasTimedOut) {
-      state.remove()
-      return Iterator.empty
-    }
-    val band = key.takeWhile(_ != ':').toInt
-    var members = state.getOption.map(_.docs).getOrElse(Nil)
-    val out = scala.collection.mutable.ArrayBuffer.empty[Pair]
-    // deterministic intra-batch order: a micro-batch delivering several
-    // docs to one bucket must emit the same pairs regardless of row order
-    val sorted = rows.toArray.sortBy(r => (r.event_ts.getTime, r.doc_id))
-    sorted.foreach { r =>
-      members.foreach { case (mid, msig) =>
-        if (mid != r.doc_id) {
-          val est = BigDecimal(estJaccard(msig, r.sig))
-            .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-          if (est >= minEst)
-            out += Pair(math.min(mid, r.doc_id), math.max(mid, r.doc_id),
-              band, est, r.event_ts)
-        }
-      }
-      // full bucket: the newcomer compared against every resident (no
-      // pair lost) but does not displace one — the spanning-star analog
-      if (members.length < Dedup.HotGroupCap &&
-          !members.exists(_._1 == r.doc_id))
-        members = (r.doc_id, r.sig) :: members
-    }
-    state.update(BucketState(members))
-    // evict the bucket one watermark-delay past the newest member (the
-    // CALLER'S delay — a hardcoded shorter horizon would evict
-    // residents while legitimately late rows are still admissible,
-    // silently dropping their pairs); an initial-state bucket with no
-    // traffic yet (Spark invokes the function for every bootstrap key
-    // in the first batch) has no event time to anchor a timeout — it
-    // arms when the first row arrives
-    if (sorted.nonEmpty)
-      state.setTimeoutTimestamp(
-        sorted.map(_.event_ts.getTime).max, evictDelay)
-    out.iterator
-  }
-
-  /** Wire the stateful pass over a watermarked (doc_id, text, event_ts)
-    * stream. `watermarkDelay` bounds both lateness and state lifetime.
-    *
-    * `bootstrapCorpus` (optional, batch (doc_id, text)) pre-populates
-    * the bucket state with the LANDED corpus — Structured Streaming's
-    * initial-state support — so the stream flags near-dups of existing
-    * data from its FIRST micro-batch instead of only stream-vs-stream
-    * pairs; the streaming continuation of [[graft.operators.Dedup.minhashJoin]].
-    * Bootstrap residents obey the same per-bucket cap ([[graft.operators.Dedup.HotGroupCap]]
-    * smallest ids), and carry no timestamps — they evict with the
-    * bucket's event-time timeout once streaming traffic arrives.
+  /** The stateful pass over a watermarked (doc_id, text, event_ts)
+    * stream; `watermarkDelay` bounds both lateness and state lifetime,
+    * and `bootstrapCorpus` (batch (doc_id, text)) seeds the buckets —
+    * the streaming continuation of [[graft.operators.Dedup.minhashJoin]].
     *
     * `minEst` lowers the emission gate: at 0.0 every band collision is
     * emitted, turning the operator into a pure streaming CANDIDATE
@@ -151,56 +78,25 @@ object StreamingNearDup {
             minEst: Double = EstThreshold): Dataset[Pair] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val grouped = bandRows(docs)
-      .withWatermark("event_ts", watermarkDelay)
-      .groupByKey(_.bucket)
-    bootstrapCorpus match {
-      case None =>
-        grouped.flatMapGroupsWithState[BucketState, Pair](
-          OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-          processBucket(minEst, watermarkDelay))
-      case Some(corpus) =>
-        val initial = initialState(corpus)
-        grouped.flatMapGroupsWithState[BucketState, Pair](
-          OutputMode.Append, GroupStateTimeout.EventTimeTimeout, initial)(
-          processBucket(minEst, watermarkDelay))
-    }
+    BucketPairs.pairs(docs, watermarkDelay, bootstrapCorpus)(bandRows) {
+      (a, b) =>
+        val est = BigDecimal(estJaccard(a, b))
+          .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+        Option.when(est >= minEst)(est)
+    }.map(h => Pair(h.a, h.b, h.bucket.takeWhile(_ != ':').toInt, h.score,
+      h.event_ts))
   }
 
-  /** The watermarked pair-dedup stage closing [[pairs]]' per-band
-    * duplicate contract: one row per (doc_a, doc_b) within the
-    * watermark horizon, via `dropDuplicatesWithinWatermark` — a second
-    * stateful operator chained after the band-bucket pass, state
-    * bounded by the same delay that bounds bucket residency.
-    *
-    * The `band` column is dropped BEFORE deduplication: all bands of
-    * one pair carry identical (est_jaccard, event_ts) — the estimate
-    * is a pure function of the two signatures and the timestamp is the
-    * arriving document's — so which duplicate survives is
-    * unobservable and the output stays deterministic. Cross-batch
-    * re-emissions (input replays, late duplicates) collapse too, as
-    * long as they land inside the watermark.
-    *
-    * Spark's global-watermark correctness check refuses ANY stateful
-    * operator downstream of `flatMapGroupsWithState` (custom logic
-    * COULD emit rows arbitrarily older than the watermark, which the
-    * downstream operator would then drop as late). This particular
-    * composition is safe — every emitted pair carries the ARRIVING
-    * document's event_ts, i.e. a timestamp from the current
-    * micro-batch's admitted (non-late) input, never an older one — so
-    * the caller starts the query through [[startUnchecked]], which
-    * disables the check ONLY for that query (the escape hatch Spark's
-    * guide prescribes for exactly this reviewed-and-safe shape) and
-    * restores the session conf for everything started after. */
+  /** [[pairs]] through the watermarked pair-dedup stage
+    * ([[BucketPairs.unique]]): one row per (doc_a, doc_b) within the
+    * watermark horizon, the `band` column dropped. Start it through
+    * [[startUnchecked]]. */
   def uniquePairs(docs: DataFrame, watermarkDelay: String = "1 hour",
                   bootstrapCorpus: Option[DataFrame] = None,
-                  minEst: Double = EstThreshold): DataFrame = {
-    pairs(docs, watermarkDelay, bootstrapCorpus, minEst)
-      .toDF()
-      .select(col("doc_a"), col("doc_b"), col("est_jaccard"), col("event_ts"))
-      .withWatermark("event_ts", watermarkDelay)
-      .dropDuplicatesWithinWatermark("doc_a", "doc_b")
-  }
+                  minEst: Double = EstThreshold): DataFrame =
+    BucketPairs.unique(
+      pairs(docs, watermarkDelay, bootstrapCorpus, minEst).toDF(),
+      watermarkDelay, "doc_a", "doc_b", "est_jaccard")
 
   /** Start a [[uniquePairs]] query with the global-watermark
     * correctness check disabled for THAT QUERY ONLY: `start` must call
@@ -222,39 +118,6 @@ object StreamingNearDup {
     }
   }
 
-  /** Per-bucket initial state from a batch corpus: the same band rows
-    * the stream would produce, id-ordered residents capped per bucket.
-    */
-  private[streaming] def initialState(corpus: DataFrame)
-      : org.apache.spark.sql.KeyValueGroupedDataset[String, BucketState] = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    corpus.select(col("doc_id").cast("long"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        val digest = java.security.MessageDigest.getInstance("MD5")
-        it.flatMap { case (id, text) =>
-          val sh = Dedup.shinglesOfText(text)
-          if (sh.isEmpty) Iterator.empty
-          else {
-            val sig = Dedup.minhashSignature(sh, digest)
-            Dedup.bandKeys(sig, digest).iterator.zipWithIndex.map {
-              case (k, b) => (s"$b:$k", id, sig)
-            }
-          }
-        }
-      }
-      .groupByKey(_._1)
-      .mapGroups { (bucket, rows) =>
-        val members = rows.toArray.sortBy(_._2)
-          .take(Dedup.HotGroupCap)
-          .map(r => (r._2, r._3)).toList
-        (bucket, BucketState(members))
-      }
-      .groupByKey(_._1)
-      .mapValues(_._2)
-  }
-
   /** q_stream_neardup: the stateful streaming near-dup pass under the
     * oracle gate. The landed corpus (doc_id % 10 ≠ 3) bootstraps the
     * bucket state; the crawl increment (doc_id % 10 = 3) arrives as a
@@ -273,11 +136,10 @@ object StreamingNearDup {
     * removed by the side predicate, and a fixed event timestamp keeps
     * the watermark from evicting any resident mid-run — the staging,
     * run, and read-back are [[StreamHarness.crossSideRun]], shared
-    * with the image and embedding twins. */
+    * with the other three twins. */
   def streamNearDup(spark: org.apache.spark.sql.SparkSession,
                     dir: String): DataFrame = {
     import org.apache.spark.sql.types._
-    import graft.operators.Dedup
     val docs = graft.sources.Tables.documents(spark, dir)
       .select(col("doc_id"), col("text"))
     val inc = docs.filter(col("doc_id") % 10 === 3)

@@ -2,186 +2,80 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-import graft.operators.{Dedup, PerceptualHash}
+import graft.operators.PerceptualHash
+import BucketPairs.BucketRow
 
 /** Incremental perceptual IMAGE near-dup — the streaming twin of
-  * [[graft.operators.PerceptualHash.phash]], completing the pattern
-  * [[StreamingNearDup]] set for text: a crawl pipeline with media
-  * columns no longer dedups images only in batch.
+  * [[graft.operators.PerceptualHash.phash]] on the [[BucketPairs]]
+  * join, so a crawl pipeline with media columns no longer dedups
+  * images only in batch.
   *
-  * Per document: one typed pass decodes the payload and computes the
-  * SAME 64-bit aHash as the batch operator (shared kernel —
-  * [[graft.operators.PerceptualHash.ahash]], bit-identical), explodes
-  * into the same four 16-bit band keys
-  * ([[graft.operators.PerceptualHash.bandsOf]]), and a stateful
-  * `flatMapGroupsWithState` per band bucket emits a candidate pair for
-  * every (earlier doc, new doc) collision within Hamming ≤
-  * [[graft.operators.PerceptualHash.MaxHamming]] — the EXACT pair
-  * criterion, so unlike the MinHash twin no downstream re-verification
-  * is ever needed (hamming is a pure function of the two hashes; the
-  * signature-estimate-vs-true-Jaccard gap has no analog here).
+  * Per document: the payload is decoded and hashed to the SAME 64-bit
+  * aHash as the batch operator (shared kernel —
+  * [[graft.operators.PerceptualHash.ahash]], bit-identical), exploded
+  * into the same four 16-bit band buckets
+  * ([[graft.operators.PerceptualHash.bandsOf]]); each resident holds
+  * (doc_id, two longs) and no payload bytes. A pair is emitted with
+  * its band within Hamming ≤ [[graft.operators.PerceptualHash.MaxHamming]]
+  * — the EXACT pair criterion, so unlike the MinHash twin nothing needs
+  * re-verification. Undecodable payloads hash to nothing and never
+  * reach a bucket (the batch pass's total-decode contract).
   *
-  * Contract differences from the batch operator, inherent to
-  * streaming and documented rather than hidden:
-  *  - Batch collapses identical hashes to representatives before the
-  *    band join; bounded bucket state compares arrivals directly, so
-  *    a pair colliding in several bands is emitted once per colliding
-  *    band — consumers treat (doc_a, doc_b) as a set (`distinct()`
-  *    per micro-batch, or the shipped watermarked dedup stage
-  *    [[uniquePairs]] — exactly-once per (doc_a, doc_b) within the
-  *    watermark horizon).
-  *  - Batch expands rep pairs through capped member sets; the stream
-  *    pairs each arrival against its buckets' residents.
-  *
-  * State is bounded exactly like the text twin: per-bucket membership
-  * caps at [[graft.operators.Dedup.HotGroupCap]] (a new doc in a full
-  * bucket still COMPARES against all residents — pairs are not lost —
-  * but joins as a non-resident, the spanning-star analog), eviction at
-  * the event watermark (`EventTimeTimeout`), and each resident holds
-  * only (doc_id, two longs) — no payload bytes ever enter state.
-  * Undecodable payloads hash to nothing and never reach a bucket (the
-  * same total-decode contract as the batch pass).
+  * Difference from the batch operator: batch collapses identical
+  * hashes to representatives and expands rep pairs through capped
+  * member sets; the stream pairs each arrival against its buckets'
+  * residents directly.
   */
 object StreamingPhash {
 
-  case class BandRow(bucket: String, doc_id: Long, phi: Long, plo: Long,
-                     event_ts: java.sql.Timestamp)
   case class Pair(doc_a: Long, doc_b: Long, band: Int, hamming: Int,
                   event_ts: java.sql.Timestamp)
-  case class BucketState(docs: List[(Long, Long, Long)])
 
-  /** (doc_id, media, event_ts) stream → per-band bucket rows carrying
-    * the shared-kernel hash. Narrow typed map; the only shuffle is the
-    * downstream stateful grouping on the bucket. The binary payload is
-    * dropped HERE — it never crosses the shuffle. */
-  def bandRows(docs: DataFrame): Dataset[BandRow] = {
+  /** (doc_id, media, event_ts) → one row per band bucket carrying the
+    * shared-kernel hash; the binary payload is dropped HERE, before
+    * the shuffle. */
+  private def bandRows(docs: DataFrame): Dataset[BucketRow[(Long, Long)]] = {
     val spark = docs.sparkSession
     import spark.implicits._
     docs.select(col("doc_id").cast("long"), col("media"),
         col("event_ts").cast("timestamp"))
       .as[(Long, Array[Byte], java.sql.Timestamp)]
       .mapPartitions(_.flatMap { case (id, bytes, ts) =>
-        PerceptualHash.ahash(bytes).iterator.flatMap { case (phi, plo) =>
-          PerceptualHash.bandsOf(phi, plo).iterator.zipWithIndex.map {
-            case (k, b) => BandRow(s"$b:$k", id, phi, plo, ts)
+        PerceptualHash.ahash(bytes).iterator.flatMap { h =>
+          PerceptualHash.bandsOf(h._1, h._2).iterator.zipWithIndex.map {
+            case (k, b) => BucketRow(s"$b:$k", id, register = true, h, ts)
           }
         }
       })
   }
 
-  private def processBucket(maxHamming: Int, evictDelay: String)(
-      key: String,
-      rows: Iterator[BandRow],
-      state: GroupState[BucketState]): Iterator[Pair] = {
-    if (state.hasTimedOut) {
-      state.remove()
-      return Iterator.empty
-    }
-    val band = key.takeWhile(_ != ':').toInt
-    var members = state.getOption.map(_.docs).getOrElse(Nil)
-    val out = scala.collection.mutable.ArrayBuffer.empty[Pair]
-    // deterministic intra-batch order, same rule as the text twin
-    val sorted = rows.toArray.sortBy(r => (r.event_ts.getTime, r.doc_id))
-    sorted.foreach { r =>
-      members.foreach { case (mid, mHi, mLo) =>
-        if (mid != r.doc_id) {
-          val hm = PerceptualHash.hamming(mHi, mLo, r.phi, r.plo)
-          if (hm <= maxHamming)
-            out += Pair(math.min(mid, r.doc_id), math.max(mid, r.doc_id),
-              band, hm, r.event_ts)
-        }
-      }
-      // full bucket: the newcomer compared against every resident (no
-      // pair lost) but does not displace one — the spanning-star analog
-      if (members.length < Dedup.HotGroupCap &&
-          !members.exists(_._1 == r.doc_id))
-        members = (r.doc_id, r.phi, r.plo) :: members
-    }
-    state.update(BucketState(members))
-    if (sorted.nonEmpty)
-      state.setTimeoutTimestamp(
-        sorted.map(_.event_ts.getTime).max, evictDelay)
-    out.iterator
-  }
-
-  /** Wire the stateful pass over a watermarked (doc_id, media,
-    * event_ts) stream. `watermarkDelay` bounds both lateness and state
-    * lifetime; `bootstrapCorpus` (batch (doc_id, media)) pre-populates
-    * the bucket state with the LANDED corpus — residents are the
-    * [[graft.operators.Dedup.HotGroupCap]] smallest ids per bucket,
-    * the same one-sided cap discipline as the batch cross-corpus
-    * operators — so the stream flags near-dups of existing images from
-    * its FIRST micro-batch. [[uniquePairs]] composes the watermarked
-    * dedup stage on the output for exactly-once (doc_a, doc_b)
-    * emission. */
+  /** The stateful pass over a watermarked (doc_id, media, event_ts)
+    * stream; `bootstrapCorpus` (batch (doc_id, media)) seeds the
+    * buckets with the landed images. */
   def pairs(docs: DataFrame, watermarkDelay: String = "1 hour",
             bootstrapCorpus: Option[DataFrame] = None,
             maxHamming: Int = PerceptualHash.MaxHamming): Dataset[Pair] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val grouped = bandRows(docs)
-      .withWatermark("event_ts", watermarkDelay)
-      .groupByKey(_.bucket)
-    bootstrapCorpus match {
-      case None =>
-        grouped.flatMapGroupsWithState[BucketState, Pair](
-          OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-          processBucket(maxHamming, watermarkDelay))
-      case Some(corpus) =>
-        val initial = initialState(corpus)
-        grouped.flatMapGroupsWithState[BucketState, Pair](
-          OutputMode.Append, GroupStateTimeout.EventTimeTimeout, initial)(
-          processBucket(maxHamming, watermarkDelay))
-    }
+    BucketPairs.pairs(docs, watermarkDelay, bootstrapCorpus)(bandRows) {
+      (m, r) =>
+        val hm = PerceptualHash.hamming(m._1, m._2, r._1, r._2)
+        Option.when(hm <= maxHamming)(hm.toDouble)
+    }.map(h => Pair(h.a, h.b, h.bucket.takeWhile(_ != ':').toInt,
+      h.score.toInt, h.event_ts))
   }
 
-  /** The watermarked pair-dedup stage closing [[pairs]]' per-band
-    * duplicate contract — the image twin of
-    * [[StreamingNearDup.uniquePairs]]: one row per (doc_a, doc_b)
-    * within the watermark horizon. The `band` column is dropped before
-    * deduplication (all bands of one pair carry identical hamming and
-    * the arriving doc's event_ts, so the surviving duplicate is
-    * unobservable). Same stateful-composition caveat: start through
-    * [[StreamingNearDup.startUnchecked]] — every emitted pair carries
-    * the ARRIVING document's event_ts, a current-batch timestamp, so
-    * the reviewed-and-safe escape hatch applies identically. */
+  /** [[pairs]] through the watermarked pair-dedup stage
+    * ([[BucketPairs.unique]]): one row per (doc_a, doc_b) within the
+    * watermark horizon, the `band` column dropped. Start it through
+    * [[StreamingNearDup.startUnchecked]]. */
   def uniquePairs(docs: DataFrame, watermarkDelay: String = "1 hour",
                   bootstrapCorpus: Option[DataFrame] = None,
                   maxHamming: Int = PerceptualHash.MaxHamming): DataFrame =
-    pairs(docs, watermarkDelay, bootstrapCorpus, maxHamming)
-      .toDF()
-      .select(col("doc_a"), col("doc_b"), col("hamming"), col("event_ts"))
-      .withWatermark("event_ts", watermarkDelay)
-      .dropDuplicatesWithinWatermark("doc_a", "doc_b")
-
-  /** Per-bucket initial state from a batch (doc_id, media) corpus: the
-    * same band rows the stream would produce, id-ordered residents
-    * capped per bucket. */
-  private[streaming] def initialState(corpus: DataFrame)
-      : org.apache.spark.sql.KeyValueGroupedDataset[String, BucketState] = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    corpus.select(col("doc_id").cast("long"), col("media"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.flatMap { case (id, bytes) =>
-        PerceptualHash.ahash(bytes).iterator.flatMap { case (phi, plo) =>
-          PerceptualHash.bandsOf(phi, plo).iterator.zipWithIndex.map {
-            case (k, b) => (s"$b:$k", id, phi, plo)
-          }
-        }
-      })
-      .groupByKey(_._1)
-      .mapGroups { (bucket, rows) =>
-        val members = rows.toArray.sortBy(_._2)
-          .take(Dedup.HotGroupCap)
-          .map(r => (r._2, r._3, r._4)).toList
-        (bucket, BucketState(members))
-      }
-      .groupByKey(_._1)
-      .mapValues(_._2)
-  }
+    BucketPairs.unique(
+      pairs(docs, watermarkDelay, bootstrapCorpus, maxHamming).toDF(),
+      watermarkDelay, "doc_a", "doc_b", "hamming")
 
   /** q_stream_phash: the stateful streaming image near-dup pass under
     * the oracle gate. The landed corpus's images (doc_id % 10 ≠ 3)
@@ -194,7 +88,7 @@ object StreamingPhash {
     * some band bucket the two hashes share, and hamming ≤
     * [[graft.operators.PerceptualHash.MaxHamming]]. Staging, run, and
     * cross-side read-back are [[StreamHarness.crossSideRun]], shared
-    * with the text and embedding twins; hamming is exact on emission,
+    * with the other three twins; hamming is exact on emission,
     * so unlike the text twin no verification tail is needed. */
   def streamPhash(spark: org.apache.spark.sql.SparkSession,
                   dir: String): DataFrame = {

@@ -2,63 +2,43 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.operators.{Dedup, Similarity, VectorOps}
+import BucketPairs.BucketRow
 
-/** Incremental EMBEDDING (semantic) near-dup — the third streaming
-  * twin, completing the family: text streams via [[StreamingNearDup]],
-  * images via [[StreamingPhash]], and this streams the
-  * embedding-cosine pass of [[graft.operators.Dedup.embeddingNearDup]].
+/** Incremental EMBEDDING (semantic) near-dup — the streaming twin of
+  * the embedding-cosine pass of [[graft.operators.Dedup.embeddingNearDup]]
+  * on the [[BucketPairs]] join.
   *
-  * Per vector: one typed pass computes the SAME 8-bit
-  * sign-random-projection bucket as the batch SRP-LSH operator (shared
-  * kernel — [[graft.operators.Similarity.srpBucket]], bit-identical),
-  * registers the vector under its OWN bucket, and probes the bucket
-  * plus its 8 hamming-1 neighbors (the multi-probe discipline of
-  * [[graft.operators.Similarity.lshTopK]]). A stateful
-  * `flatMapGroupsWithState` per bucket emits a pair for every
-  * (resident, arrival) whose rounded cosine clears the threshold —
-  * the EXACT pair criterion (cosine is a pure function of the two
-  * stored normalized vectors; like the image twin and unlike the
-  * MinHash estimate, nothing needs re-verification downstream).
+  * Per vector: the SAME 8-bit sign-random-projection bucket as the
+  * batch SRP-LSH operator (shared kernel —
+  * [[graft.operators.Similarity.srpBucket]], bit-identical). The vector
+  * registers under its OWN bucket and probes that bucket plus its 8
+  * hamming-1 neighbors (probe-only rows, `register = false`: the
+  * multi-probe discipline of [[graft.operators.Similarity.lshTopK]]);
+  * each resident holds (vec_id, 64 doubles). A pair is emitted when
+  * the round-4 cosine of the normalized vectors clears the threshold —
+  * the EXACT pair criterion, so nothing needs re-verification.
   *
-  * Emission contract — tighter than the band twins: a resident lives
-  * in exactly ONE bucket and an arrival's probe set contains it at
-  * most once (the single flip `bucket_a XOR bucket_r`), so each
-  * (vec_a, vec_b) pair is emitted AT MOST ONCE per arrival — no
-  * per-band duplicates exist to deduplicate. Cross-batch re-delivery
-  * of a vector can still re-emit; `distinct()` per micro-batch or a
-  * watermarked dedup stage handles replays exactly as for the twins.
+  * Emission is tighter than the band twins: a resident lives in exactly
+  * ONE bucket and an arrival's probe set holds it at most once, so each
+  * pair is emitted AT MOST ONCE per arrival. Cross-batch re-delivery of
+  * a vector can still re-emit.
   *
-  * Recall contract, inherited from the batch SRP operator: pairs
-  * within hamming ≤ 1 of each other's buckets are found; a
-  * near-duplicate pair whose signatures differ in ≥ 2 bits is missed
-  * — the standard SRP trade (P[bit differs] = angle/π, so
-  * cosine ≥ 0.45 pairs differ in ~0.35 expected bits of 8). The batch
-  * tiled block join ([[graft.operators.Dedup.embeddingNearDup]]) stays
-  * the exact-recall instrument; this is its bounded-state streaming
-  * complement.
-  *
-  * State bounds, same as the twins: per-bucket membership caps at
-  * [[graft.operators.Dedup.HotGroupCap]] (a full bucket still compares
-  * every arrival against all residents — pairs are not lost, the
-  * newcomer just doesn't register), eviction at the event watermark,
-  * each resident holds (vec_id, 64 doubles).
+  * Recall, inherited from the batch SRP operator: pairs within hamming
+  * ≤ 1 of each other's buckets are found; a near-duplicate pair whose
+  * signatures differ in ≥ 2 bits is missed (P[bit differs] = angle/π,
+  * so cosine ≥ 0.45 pairs differ in ~0.35 expected bits of 8). The
+  * batch tiled block join stays the exact-recall instrument.
   */
 object StreamingSemantic {
 
-  case class SigRow(bucket: String, vec_id: Long, own: Boolean,
-                    nv: Array[Double], event_ts: java.sql.Timestamp)
   case class Pair(vec_a: Long, vec_b: Long, sim: Double,
                   event_ts: java.sql.Timestamp)
-  case class BucketState(docs: List[(Long, Array[Double])])
 
-  /** (vec_id, v, event_ts) stream → one OWN row (register + probe)
-    * under the vector's SRP bucket plus 8 probe-only rows under the
-    * hamming-1 neighbors. Narrow typed pass; the only shuffle is the
-    * stateful grouping on the bucket. */
-  def sigRows(vecs: DataFrame): Dataset[SigRow] = {
+  /** (vec_id, v, event_ts) → one registering row under the vector's SRP
+    * bucket plus 8 probe-only rows under its hamming-1 neighbors. */
+  private def sigRows(vecs: DataFrame): Dataset[BucketRow[Array[Double]]] = {
     val spark = vecs.sparkSession
     import spark.implicits._
     vecs.select(col("vec_id").cast("long"), col("v"),
@@ -67,97 +47,27 @@ object StreamingSemantic {
       .mapPartitions(_.flatMap { case (id, v, ts) =>
         val b = Similarity.srpBucket(v)
         val nv = VectorOps.l2Normalize(v)
-        Iterator.single(SigRow(b.toString, id, own = true, nv, ts)) ++
+        Iterator.single(BucketRow(b.toString, id, register = true, nv, ts)) ++
           Iterator.range(0, Similarity.LshPlanes).map { p =>
-            SigRow((b ^ (1 << p)).toString, id, own = false, nv, ts)
+            BucketRow((b ^ (1 << p)).toString, id, register = false, nv, ts)
           }
       })
   }
 
-  private def processBucket(threshold: Double, evictDelay: String)(
-      key: String,
-      rows: Iterator[SigRow],
-      state: GroupState[BucketState]): Iterator[Pair] = {
-    if (state.hasTimedOut) {
-      state.remove()
-      return Iterator.empty
-    }
-    var members = state.getOption.map(_.docs).getOrElse(Nil)
-    val out = scala.collection.mutable.ArrayBuffer.empty[Pair]
-    // deterministic intra-batch order, same rule as the twins
-    val sorted = rows.toArray.sortBy(r => (r.event_ts.getTime, r.vec_id))
-    sorted.foreach { r =>
-      members.foreach { case (mid, mnv) =>
-        if (mid != r.vec_id) {
-          val sim = VectorOps.roundAt(VectorOps.dot(mnv, r.nv), 4)
-          if (sim >= threshold)
-            out += Pair(math.min(mid, r.vec_id), math.max(mid, r.vec_id),
-              sim, r.event_ts)
-        }
-      }
-      // registration happens only under the vector's OWN bucket; a
-      // full bucket compared the newcomer against every resident (no
-      // pair lost) but does not grow — the spanning-star analog
-      if (r.own && members.length < Dedup.HotGroupCap &&
-          !members.exists(_._1 == r.vec_id))
-        members = (r.vec_id, r.nv) :: members
-    }
-    if (members.nonEmpty || sorted.nonEmpty) state.update(BucketState(members))
-    if (sorted.nonEmpty)
-      state.setTimeoutTimestamp(
-        sorted.map(_.event_ts.getTime).max, evictDelay)
-    out.iterator
-  }
-
-  /** Wire the stateful pass over a watermarked (vec_id, v double[],
-    * event_ts) stream. `bootstrapCorpus` (batch (vec_id, v))
-    * pre-populates the bucket state with the LANDED corpus — residents
-    * are the [[graft.operators.Dedup.HotGroupCap]] smallest ids per
-    * OWN bucket — so the stream flags semantic near-dups of existing
-    * vectors from its first micro-batch. */
+  /** The stateful pass over a watermarked (vec_id, v double[],
+    * event_ts) stream; `bootstrapCorpus` (batch (vec_id, v)) seeds each
+    * vector's OWN bucket. */
   def pairs(vecs: DataFrame, watermarkDelay: String = "1 hour",
             bootstrapCorpus: Option[DataFrame] = None,
             threshold: Double = Dedup.EmbeddingCosThreshold)
       : Dataset[Pair] = {
     val spark = vecs.sparkSession
     import spark.implicits._
-    val grouped = sigRows(vecs)
-      .withWatermark("event_ts", watermarkDelay)
-      .groupByKey(_.bucket)
-    bootstrapCorpus match {
-      case None =>
-        grouped.flatMapGroupsWithState[BucketState, Pair](
-          OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-          processBucket(threshold, watermarkDelay))
-      case Some(corpus) =>
-        val initial = initialState(corpus)
-        grouped.flatMapGroupsWithState[BucketState, Pair](
-          OutputMode.Append, GroupStateTimeout.EventTimeTimeout, initial)(
-          processBucket(threshold, watermarkDelay))
-    }
-  }
-
-  /** Per-bucket initial state from a batch (vec_id, v) corpus: each
-    * vector registered under its OWN bucket, id-ordered residents
-    * capped per bucket. */
-  private[streaming] def initialState(corpus: DataFrame)
-      : org.apache.spark.sql.KeyValueGroupedDataset[String, BucketState] = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    corpus.select(col("vec_id").cast("long"), col("v"))
-      .as[(Long, Array[Double])]
-      .mapPartitions(_.map { case (id, v) =>
-        (Similarity.srpBucket(v).toString, id, VectorOps.l2Normalize(v))
-      })
-      .groupByKey(_._1)
-      .mapGroups { (bucket, rows) =>
-        val members = rows.toArray.sortBy(_._2)
-          .take(Dedup.HotGroupCap)
-          .map(r => (r._2, r._3)).toList
-        (bucket, BucketState(members))
-      }
-      .groupByKey(_._1)
-      .mapValues(_._2)
+    BucketPairs.pairs(vecs, watermarkDelay, bootstrapCorpus)(sigRows) {
+      (m, r) =>
+        val sim = VectorOps.roundAt(VectorOps.dot(m, r), 4)
+        Option.when(sim >= threshold)(sim)
+    }.map(h => Pair(h.a, h.b, h.score, h.event_ts))
   }
 
   /** q_stream_semantic: the stateful streaming embedding near-dup pass
@@ -171,7 +81,7 @@ object StreamingSemantic {
     * multi-probe reach), and the round-4 normalized dot clears
     * [[graft.operators.Dedup.EmbeddingCosThreshold]]. Staging, run,
     * and cross-side read-back are [[StreamHarness.crossSideRun]],
-    * shared with the text and image twins; the cosine is exact on
+    * shared with the other three twins; the cosine is exact on
     * emission, so no verification tail is needed. */
   def streamSemantic(spark: org.apache.spark.sql.SparkSession,
                      dir: String): DataFrame = {

@@ -2,53 +2,42 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.operators.Dedup
+import BucketPairs.BucketRow
 
 /** Incremental copied-passage detection — the streaming twin of
-  * [[graft.operators.Dedup.winnowJoin]], and the FOURTH member of the
-  * streaming near-dup family (text-MinHash / image-pHash /
-  * embedding-SRP / this): a crawl pipeline flags documents that copy
-  * passages from the landed corpus as they arrive, the overlap a
-  * whole-doc MinHash signature dilutes away.
+  * [[graft.operators.Dedup.winnowJoin]] on the [[BucketPairs]] join: a
+  * crawl pipeline flags documents that copy passages from the landed
+  * corpus as they arrive, the overlap a whole-doc MinHash signature
+  * dilutes away.
   *
-  * Per document: one typed pass selects the SAME winnowed
-  * fingerprints as the batch operator (shared kernel —
-  * [[graft.operators.Dedup.winnowFpsOf]], bit-identical: per-window
-  * minima over ordered 3-gram md5 hashes), and a stateful
-  * `flatMapGroupsWithState` per FINGERPRINT bucket emits a match row
-  * for every (resident, newcomer) collision. A pair is a copied
+  * Per document: the SAME winnowed fingerprints as the batch operator
+  * (shared kernel — [[graft.operators.Dedup.winnowFpsOf]],
+  * bit-identical: per-window minima over ordered 3-gram md5 hashes),
+  * one bucket per fingerprint; residents are bare doc ids. Every
+  * (resident, newcomer) collision is a match row. A pair is a copied
   * passage when it collides in ≥ [[graft.operators.Dedup.MinSharedFp]]
-  * DISTINCT fingerprints; all of a document's fingerprints ship in
-  * its arrival micro-batch, so the thresholded count is a per-batch
-  * (or read-back) aggregation, never a second stateful stage.
+  * DISTINCT fingerprints; all of a document's fingerprints ship in its
+  * arrival micro-batch, so the thresholded count is a per-batch (or
+  * read-back) aggregation, never a second stateful stage.
   *
-  * Contract difference from the batch join, documented rather than
-  * hidden: [[graft.operators.Dedup.winnowJoin]] DROPS fingerprints
-  * whose corpus+increment frequency exceeds
-  * [[graft.operators.Dedup.ShingleFreqCap]] (the union-frequency hot
-  * drop needs global counts a bounded stream state cannot hold); the
-  * stream instead caps each bucket's RESIDENTS at
-  * [[graft.operators.Dedup.HotGroupCap]] smallest ids — the same
-  * one-sided discipline as the other three twins: an arrival still
-  * compares against every resident (no pair lost against them), a
-  * hyper-frequent fingerprint costs at most cap comparisons.
-  *
-  * State per bucket: resident doc ids only (one long each, capped) —
-  * no text ever enters state; eviction at the event watermark.
+  * Difference from the batch join: [[graft.operators.Dedup.winnowJoin]]
+  * DROPS fingerprints whose corpus+increment frequency exceeds
+  * [[graft.operators.Dedup.ShingleFreqCap]], which needs global counts
+  * bounded state cannot hold; the stream relies on the resident cap
+  * instead, so a hyper-frequent fingerprint costs at most cap
+  * comparisons.
   */
 object StreamingWinnow {
 
-  case class FpRow(fp: String, doc_id: Long, event_ts: java.sql.Timestamp)
   case class Match(doc_a: Long, doc_b: Long, fp: String,
                    event_ts: java.sql.Timestamp)
-  case class BucketState(docs: List[Long])
 
-  /** (doc_id, text, event_ts) stream → one row per winnowed
-    * fingerprint. Narrow typed pass; the text column is dropped HERE —
-    * it never crosses the shuffle into the stateful stage. */
-  def fpRows(docs: DataFrame): Dataset[FpRow] = {
+  /** (doc_id, text, event_ts) → one row per winnowed fingerprint; the
+    * text is dropped HERE, before the shuffle. The fingerprint is the
+    * bucket, so the member carries nothing. */
+  private def fpRows(docs: DataFrame): Dataset[BucketRow[Boolean]] = {
     val spark = docs.sparkSession
     import spark.implicits._
     docs.select(col("doc_id").cast("long"), col("text"),
@@ -57,86 +46,23 @@ object StreamingWinnow {
       .mapPartitions { it =>
         val digest = java.security.MessageDigest.getInstance("MD5")
         it.flatMap { case (id, text, ts) =>
-          Dedup.winnowFpsOf(text, digest).map(fp => FpRow(fp, id, ts))
+          Dedup.winnowFpsOf(text, digest)
+            .map(fp => BucketRow(fp, id, register = true, member = true, ts))
         }
       }
   }
 
-  private def processBucket(evictDelay: String)(
-      key: String,
-      rows: Iterator[FpRow],
-      state: GroupState[BucketState]): Iterator[Match] = {
-    if (state.hasTimedOut) {
-      state.remove()
-      return Iterator.empty
-    }
-    var members = state.getOption.map(_.docs).getOrElse(Nil)
-    val out = scala.collection.mutable.ArrayBuffer.empty[Match]
-    // deterministic intra-batch order, the family's shared rule
-    val sorted = rows.toArray.sortBy(r => (r.event_ts.getTime, r.doc_id))
-    sorted.foreach { r =>
-      members.foreach { mid =>
-        if (mid != r.doc_id)
-          out += Match(math.min(mid, r.doc_id), math.max(mid, r.doc_id),
-            key, r.event_ts)
-      }
-      // full bucket: the newcomer compared against every resident (no
-      // pair lost) but does not displace one — the spanning-star analog
-      if (members.length < Dedup.HotGroupCap && !members.contains(r.doc_id))
-        members = r.doc_id :: members
-    }
-    state.update(BucketState(members))
-    if (sorted.nonEmpty)
-      state.setTimeoutTimestamp(
-        sorted.map(_.event_ts.getTime).max, evictDelay)
-    out.iterator
-  }
-
-  /** Wire the stateful pass over a watermarked (doc_id, text,
-    * event_ts) stream. `bootstrapCorpus` (batch (doc_id, text))
-    * pre-populates the bucket state with the LANDED corpus — residents
-    * are the [[graft.operators.Dedup.HotGroupCap]] smallest ids per
-    * fingerprint — so the stream flags copied passages against
-    * existing documents from its FIRST micro-batch. Emissions are
-    * per-fingerprint match rows; the consumer thresholds
-    * `count(DISTINCT fp) ≥ MinSharedFp` per pair (per micro-batch or
-    * at read-back — a document's fingerprints all arrive together). */
+  /** The stateful pass over a watermarked (doc_id, text, event_ts)
+    * stream; `bootstrapCorpus` (batch (doc_id, text)) seeds the
+    * fingerprint buckets. Emissions are per-fingerprint match rows; the
+    * consumer thresholds `count(DISTINCT fp) ≥ MinSharedFp` per pair. */
   def pairs(docs: DataFrame, watermarkDelay: String = "1 hour",
             bootstrapCorpus: Option[DataFrame] = None): Dataset[Match] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val grouped = fpRows(docs)
-      .withWatermark("event_ts", watermarkDelay)
-      .groupByKey(_.fp)
-    bootstrapCorpus match {
-      case None =>
-        grouped.flatMapGroupsWithState[BucketState, Match](
-          OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-          processBucket(watermarkDelay))
-      case Some(corpus) =>
-        val initial = initialState(corpus)
-        grouped.flatMapGroupsWithState[BucketState, Match](
-          OutputMode.Append, GroupStateTimeout.EventTimeTimeout, initial)(
-          processBucket(watermarkDelay))
-    }
-  }
-
-  /** Per-bucket initial state from a batch (doc_id, text) corpus: the
-    * same fingerprint rows the stream would produce, id-ordered
-    * residents capped per bucket. */
-  private[streaming] def initialState(corpus: DataFrame)
-      : org.apache.spark.sql.KeyValueGroupedDataset[String, BucketState] = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    Dedup.winnowFps(corpus.select(col("doc_id").cast("long"), col("text")))
-      .groupByKey(_._2)
-      .mapGroups { (fp, rows) =>
-        val members = rows.toArray.map(_._1).sorted
-          .take(Dedup.HotGroupCap).toList
-        (fp, BucketState(members))
-      }
-      .groupByKey(_._1)
-      .mapValues(_._2)
+    BucketPairs.pairs(docs, watermarkDelay, bootstrapCorpus)(fpRows)(
+      (_, _) => Some(0.0))
+      .map(h => Match(h.a, h.b, h.bucket, h.event_ts))
   }
 
   /** q_stream_winnow: the stateful streaming copied-passage pass under

@@ -9,9 +9,9 @@ import graft.{Bench, GraftSession, SparkEntry}
 /** Stage-level profile of one [[SparkEntry.queries]] entry (dev tool):
   * runs the named query with Bench-identical memo clearing, then prints
   * every stage's task-time, shuffle bytes, and call site plus the
-  * wall-vs-task-time gap — the attribution JobProfile's per-job walls
-  * cannot give (overlapping jobs double-count wall; driver gaps between
-  * jobs are invisible).
+  * wall-vs-task-time gap — the attribution per-job walls cannot give
+  * (overlapping jobs double-count wall; driver gaps between jobs are
+  * invisible).
   *
   * Usage: `runMain graft.tools.StageProfile <queryName> [sfDir] [rounds]`
   */

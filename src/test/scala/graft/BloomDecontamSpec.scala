@@ -49,7 +49,7 @@ class BloomDecontamSpec extends AnyFunSuite {
     // the Bloom path's reason to exist is an eval set too large to
     // broadcast — force the confirm join onto the shuffle path and the
     // counts must still match the broadcast-exact ones (the crossover
-    // timings for this shape live in SCALE.md / tools/CrossoverBench)
+    // timings for this shape live in SCALE.md)
     val docsFrame = graft.sources.Tables.documents(spark, sf0001)
       .select(col("doc_id"), col("text"))
       .filter(col("doc_id") % Dedup.EvalStride =!= 0)

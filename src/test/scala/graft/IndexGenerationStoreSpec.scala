@@ -141,4 +141,21 @@ class IndexGenerationStoreSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("ivf: a batch merged before a rebuild stays committed after it") {
+    withRoots("ivf-rebuild") { (idx, _) =>
+      val inc = vecs.filter(col("vec_id") % 10 === 3)
+      IvfIndex.build(vecs.filter(col("vec_id") % 10 =!= 3), idx)
+      IvfIndex.merge(inc, idx)
+      IvfIndex.rebuild(spark, idx)
+      def cellRows() = IvfIndex.probedCells(spark, idx,
+        IvfIndex.centroidTable(spark, idx).map(_._1).toSeq).count()
+      val n = cellRows()
+      assert(n == vecs.count())
+      // the increment re-delivered after the rebuild
+      IvfIndex.merge(inc, idx)
+      assert(gens(idx) == Seq(0L), "the re-delivered batch was committed again")
+      assert(cellRows() == n)
+    }
+  }
 }
